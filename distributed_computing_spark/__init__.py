@@ -32,4 +32,5 @@ from distributed_computing_spark.sources.catalog import (  # noqa: F401
     load_table,
     load_tables,
     register_views,
+    table_rows,
 )

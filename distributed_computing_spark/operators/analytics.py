@@ -18,7 +18,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distributed_computing_spark.sources.catalog import load_table, load_tables
+from distributed_computing_spark.sources.catalog import load_table, load_tables, table_rows
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,12 +73,12 @@ def revenue_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from distributed_computing_spark.operators.joins import gated_broadcast
 
-    t = load_tables(spark, sf_dir)
+    t = load_tables(spark, sf_dir, ("lineitem", "orders", "customer"))
     return (
         t["lineitem"]
         .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
-            gated_broadcast(t["customer"], t["customer"].count()),
+            gated_broadcast(t["customer"], table_rows(spark, sf_dir, "customer")),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .where(F.col("o_orderstatus") != "F")
@@ -108,12 +108,14 @@ def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from distributed_computing_spark.operators.joins import gated_broadcast
 
-    t = load_tables(spark, sf_dir)
+    t = load_tables(
+        spark, sf_dir, ("lineitem", "orders", "customer", "supplier", "nation", "region")
+    )
     return (
         t["lineitem"]
         .join(t["orders"].hint("shuffle_hash"), F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
-            gated_broadcast(t["customer"], t["customer"].count()),
+            gated_broadcast(t["customer"], table_rows(spark, sf_dir, "customer")),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -209,7 +211,7 @@ def regional_revenue_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_computing_spark.operators.joins import gated_broadcast
 
     lt, ot = _bucketed_fact_tables(spark, sf_dir)
-    t = load_tables(spark, sf_dir)
+    t = load_tables(spark, sf_dir, ("customer", "supplier", "nation", "region"))
     rev_dec = F.col("l_extendedprice").cast("decimal(18,2)") * (
         F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)")
     )
@@ -217,7 +219,7 @@ def regional_revenue_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table(lt)
         .join(spark.table(ot).hint("merge"), "o_orderkey")
         .join(
-            gated_broadcast(t["customer"], t["customer"].count()),
+            gated_broadcast(t["customer"], table_rows(spark, sf_dir, "customer")),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -306,11 +308,11 @@ def revenue_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded-memory sketch, same call shape)."""
     from distributed_computing_spark.operators.joins import gated_broadcast
 
-    t = load_tables(spark, sf_dir)
+    t = load_tables(spark, sf_dir, ("orders", "customer"))
     joined = t["orders"].join(
         gated_broadcast(
             t["customer"].select("c_custkey", "c_mktsegment"),
-            t["customer"].count(),
+            table_rows(spark, sf_dir, "customer"),
         ),
         t["orders"].o_custkey == F.col("c_custkey"),
     )
@@ -607,7 +609,7 @@ def semi_anti_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi/anti join surface: customers WITH an urgent order but
     WITHOUT any 'F'-status order (left_semi + left_anti — EXISTS /
     NOT EXISTS in the oracle). Both probes stay broadcast."""
-    t = load_tables(spark, sf_dir)
+    t = load_tables(spark, sf_dir, ("orders", "customer"))
     urgent = t["orders"].where(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     failed = t["orders"].where(F.col("o_orderstatus") == "F").select("o_custkey")
     return (
@@ -719,7 +721,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_ops_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set operations (absent in the reference, §2.8): customers with
     orders INTERSECT high-balance, then EXCEPT low-balance."""
-    t = load_tables(spark, sf_dir)
+    t = load_tables(spark, sf_dir, ("orders", "customer"))
     with_orders = t["orders"].select(F.col("o_custkey").alias("c_custkey")).distinct()
     high = t["customer"].where(F.col("c_acctbal") > 5000).select("c_custkey")
     low = t["customer"].where(F.col("c_acctbal") < 0).select("c_custkey")
@@ -2573,9 +2575,7 @@ def copurchase_cosine(
     )
     sa = supp.select(F.col("item").alias("a"), F.col("supp").alias("supp_a"))
     sb = supp.select(F.col("item").alias("b"), F.col("supp").alias("supp_b"))
-    supp_fits = (
-        load_table(spark, sf_dir, "part").count() <= max_broadcast_items
-    )
+    supp_fits = table_rows(spark, sf_dir, "part") <= max_broadcast_items
     sa = F.broadcast(sa) if supp_fits else sa
     sb = F.broadcast(sb) if supp_fits else sb
     return (
@@ -2623,9 +2623,7 @@ def scd2_pointintime(
     dim = customer_scd2(spark, sf_dir)
     # history rows <= n_versions x |customer| (v1 covers every customer;
     # upgrade/churn versions are subsets) - a footer-only upper bound
-    n_hist_bound = (
-        load_table(spark, sf_dir, "customer").count() * n_versions
-    )
+    n_hist_bound = table_rows(spark, sf_dir, "customer") * n_versions
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey"),
         (1 + F.col("o_orderkey") % n_versions).alias("probe_v"),

@@ -121,6 +121,7 @@ def ngram_jaccard_pairs(
     max_df: float | None = 0.2,
     max_posting: int = 10_000,
     packed_pairs_min_docs: int | None = 50_000,
+    n_docs: int | None = None,
 ) -> DataFrame:
     """All doc pairs with word-``n``-gram Jaccard ≥ threshold (a < b).
 
@@ -149,6 +150,9 @@ def ngram_jaccard_pairs(
     ``minhash_lsh_pairs``' ``max_bucket``). Jaccard stays well-defined
     over the capped shingle space and the oracle mirrors the min() cap
     exactly, so the guarded form remains strictly gate-checkable.
+
+    ``n_docs`` is ``documents``' row count when the caller already holds
+    it (``catalog.table_rows`` for an unfiltered table); None counts it.
     """
     # The inverted index keys on xxhash64(shingle), not the string:
     # everything downstream of the first shuffle moves 8-byte keys
@@ -227,10 +231,10 @@ def ngram_jaccard_pairs(
         .select("doc_id", F.xxhash64("shingle").alias("shingle_h"))
         .dropDuplicates(["doc_id", "shingle_h"])
     )
-    n_docs = None
     if max_df is not None or max_posting is not None:
         if max_df is not None:
-            n_docs = documents.count()
+            if n_docs is None:
+                n_docs = documents.count()
             cap = int(max_df * n_docs) + 1
             if max_posting is not None:
                 cap = min(cap, max_posting)
@@ -249,7 +253,7 @@ def ngram_jaccard_pairs(
     pack = False
     if packed_pairs_min_docs is not None:
         if n_docs is None:
-            n_docs = documents.count()  # parquet-footer metadata count
+            n_docs = documents.count()
         if n_docs >= packed_pairs_min_docs:
             lo, hi = documents.agg(
                 F.min("doc_id"), F.max("doc_id")
@@ -278,13 +282,18 @@ def ngram_jaccard_pairs(
     tail = F.expr("slice(docs, pos + 2, size(docs) - pos - 1)")
     pairs_ab = exploded.select("a", F.explode(tail).alias("b"))
     if pack:
+        id_type = pairs_ab.schema["a"].dataType
         common = (
-            pairs_ab.select(F.expr("shiftleft(a, 32) | b").alias("pk"))
+            # bigint first: on an int doc_id shiftleft masks the shift
+            # distance mod 32, so (a << 32) | b would merge pairs
+            pairs_ab.select(
+                F.expr("shiftleft(cast(a as bigint), 32) | cast(b as bigint)").alias("pk")
+            )
             .groupBy("pk")
             .agg(F.count("*").alias("n_common"))
             .select(
-                F.expr("shiftright(pk, 32)").alias("a"),
-                F.expr("pk & 4294967295").alias("b"),
+                F.expr("shiftright(pk, 32)").cast(id_type).alias("a"),
+                F.expr("pk & 4294967295").cast(id_type).alias("b"),
                 "n_common",
             )
         )
@@ -1286,6 +1295,7 @@ def ngram_jaccard_prefix_pairs(
     threshold_den: int = 100,
     max_df: float | None = 0.2,
     max_posting: int = 10_000,
+    n_docs: int | None = None,
 ) -> DataFrame:
     """PPJoin-style prefix-filtered Jaccard pairs — IDENTICAL output to
     ``ngram_jaccard_pairs(threshold=num/den)``, strictly fewer
@@ -1334,7 +1344,8 @@ def ngram_jaccard_prefix_pairs(
     )
     if max_df is not None or max_posting is not None:
         if max_df is not None:
-            n_docs = documents.count()
+            if n_docs is None:
+                n_docs = documents.count()
             cap = int(max_df * n_docs) + 1
             if max_posting is not None:
                 cap = min(cap, max_posting)

@@ -197,11 +197,11 @@ def pagerank_parts(
     the bound the session is untouched — at that scale the per-round
     joins shuffle and AQE's join machinery earns its keep.
     """
-    from distributed_computing_spark.sources.catalog import load_table
+    from distributed_computing_spark.sources.catalog import load_table, table_rows
 
     # parquet-footer bound: part cardinality >= distinct co-purchase
     # graph nodes; metadata-only, no data scan (broadcast-gate rule)
-    if load_table(spark, sf_dir, "part").count() <= 5_000_000:
+    if table_rows(spark, sf_dir, "part") <= 5_000_000:
         s = spark.newSession()
         s.conf.set("spark.sql.adaptive.enabled", "false")
         # With AQE off there is no runtime coalescing, so every
@@ -464,10 +464,12 @@ def copurchase_triangles(
     A/B at sf0.1 (local[32]): clone wins 6/7 pairs, warm 3.4-4.6 s vs
     3.8-4.9 (and 4.4 vs 7.3 cold); above the bound the session is
     untouched and AQE's coalesce/skew machinery keeps the fact
-    exchanges healthy (the pk-R8+ wedge tiers)."""
-    from distributed_computing_spark.sources.catalog import load_table
+    exchanges healthy. The wedge fallback is triangle_counts' own 10 M
+    oriented-edge gate: pk-R8 (9.57 M edges) takes the fast path, and
+    the wedge tiers start at pk-R16."""
+    from distributed_computing_spark.sources.catalog import load_table, table_rows
 
-    if load_table(spark, sf_dir, "lineitem").count() <= 10_000_000:
+    if table_rows(spark, sf_dir, "lineitem") <= 10_000_000:
         s = spark.newSession()
         s.conf.set("spark.sql.adaptive.enabled", "false")
         s.conf.set("spark.sql.shuffle.partitions", "16")

@@ -22,7 +22,7 @@ from distributed_computing_spark.functions.text import (
     tokens,
     word_set_pattern,
 )
-from distributed_computing_spark.sources.catalog import load_table
+from distributed_computing_spark.sources.catalog import load_table, table_rows
 
 
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,7 +191,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()
+    n_docs = table_rows(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens("text")).alias("word"))
     tf = tok.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("word").agg(F.count("*").alias("dfreq"))

@@ -37,7 +37,7 @@ from distributed_computing_spark.operators.mapreduce import (
     word_count,
 )
 from distributed_computing_spark.operators.sharding import key2shard
-from distributed_computing_spark.sources.catalog import load_table
+from distributed_computing_spark.sources.catalog import load_table, table_rows
 
 # ---------------------------------------------------------------------------
 # KV query wrappers (ops log derived deterministically from `events`)
@@ -372,13 +372,22 @@ def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_pairs(docs, max_hamming=6)
 
 
+def _ngram_pairs(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
+    """The gated near-dup pair set over the unfiltered documents table
+    (word-3-gram Jaccard >= 0.35 under the 0.2 df cap)."""
+    return dedup.ngram_jaccard_pairs(
+        docs, n=3, threshold=0.35, max_df=0.2,
+        n_docs=table_rows(spark, sf_dir, "documents"),
+    )
+
+
 def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact guarded near-dup pairs: the df cap (the quadratic-fanout
     guard that makes this plan survive boilerplate-heavy corpora) runs
     UNDER the gate, and the DuckDB oracle applies the identical cap —
     guarded and exact are the same plan."""
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.35, max_df=0.2)
+    return _ngram_pairs(spark, sf_dir, docs)
 
 
 def exact_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -404,7 +413,7 @@ def neardup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs — pairs to canonical clusters. Oracle: transitive closure via
     a recursive CTE over the same pair set."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.35, max_df=0.2)
+    pairs = _ngram_pairs(spark, sf_dir, docs)
     return dedup.neardup_clusters(docs, pairs)
 
 
@@ -413,7 +422,7 @@ def neardup_canonical_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     member, id tie-break) + member/dropped-chars census. Oracle: the
     recursive-CTE clusters re-ranked in SQL with the same keep rule."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.35, max_df=0.2)
+    pairs = _ngram_pairs(spark, sf_dir, docs)
     clusters = dedup.neardup_clusters(docs, pairs)
     return dedup.neardup_canonical(docs, clusters)
 
@@ -482,7 +491,8 @@ def lsh_topk_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") % 100 == 0)
     # footer-only bound: |queries| <= |embeddings| (gate rule, r11)
     return similarity.lsh_topk_exact(
-        emb, queries, k=5, n_planes=4, n_queries_bound=emb.count()
+        emb, queries, k=5, n_planes=4,
+        n_queries_bound=table_rows(spark, sf_dir, "embeddings"),
     )
 
 
@@ -562,7 +572,7 @@ def leakage_safe_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     → one md5-bucket split assignment per CLUSTER (no near-dup of a
     training doc in the held-out set)."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.35, max_df=0.2)
+    pairs = _ngram_pairs(spark, sf_dir, docs)
     return curation.leakage_safe_split(docs, pairs, test_pct=10, seed=13)
 
 
@@ -761,7 +771,7 @@ def lsh_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
     return similarity.lsh_topk(
-        emb, queries, k=5, n_queries_bound=emb.count()
+        emb, queries, k=5, n_queries_bound=table_rows(spark, sf_dir, "embeddings")
     )
 
 
@@ -776,7 +786,7 @@ def ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
     return similarity.ivf_topk(
-        emb, queries, k=5, n_queries_bound=emb.count()
+        emb, queries, k=5, n_queries_bound=table_rows(spark, sf_dir, "embeddings")
     )
 
 
@@ -787,7 +797,8 @@ def ivf_topk_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 100 == 0)
     return similarity.ivf_topk_exact(
-        emb, queries, k=5, n_lists=16, n_probe=4, n_queries_bound=emb.count()
+        emb, queries, k=5, n_lists=16, n_probe=4,
+        n_queries_bound=table_rows(spark, sf_dir, "embeddings"),
     )
 
 
@@ -1341,7 +1352,7 @@ def multimodal_real_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size-gate the broadcast on a footer-only bound (|q| <= |docs|/50
     # + 1); above it the brute-force product runs as a partitioned
     # cross join, which cannot OOM (the cosine_topk gate rule, r11)
-    n_q_bound = load_table(spark, sf_dir, "documents").count() // 50 + 1
+    n_q_bound = table_rows(spark, sf_dir, "documents") // 50 + 1
     q_side = F.broadcast(q) if n_q_bound <= 2_000_000 else q
     sims = (
         feats.select(F.col("blob_id").alias("nn_id"), "r", "g", "b")
@@ -1402,7 +1413,7 @@ def multimodal_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=3,
         id_col="blob_id",
         vec_col="embedding",
-        n_queries_bound=load_table(spark, sf_dir, "documents").count(),
+        n_queries_bound=table_rows(spark, sf_dir, "documents"),
     )
 
 
@@ -3367,7 +3378,7 @@ def ivm_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust_tbl.select(
             "c_custkey", F.col("c_mktsegment").alias("segment")
         ),
-        cust_tbl.count(),  # parquet footers only
+        table_rows(spark, sf_dir, "customer"),  # parquet footers only
     )
     o = (
         load_table(spark, sf_dir, "orders")
@@ -3545,7 +3556,8 @@ def ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL oracle SQL — the gate proves same-result-better-plan."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_prefix_pairs(
-        docs, n=3, threshold_num=35, threshold_den=100, max_df=0.2
+        docs, n=3, threshold_num=35, threshold_den=100, max_df=0.2,
+        n_docs=table_rows(spark, sf_dir, "documents"),
     )
 
 
@@ -5459,8 +5471,8 @@ def nation_trade_volume(
         F.broadcast(n), cust["c_nationkey"] == n["n_nationkey"]
     ).select("c_custkey", F.col("n_name").alias("cust_nation"))
     # parquet footers only — the full-table count bounds the filtered side
-    cust_fits = cust.count() <= max_broadcast_rows
-    supp_fits = supp.count() <= max_broadcast_rows
+    cust_fits = table_rows(spark, sf_dir, "customer") <= max_broadcast_rows
+    supp_fits = table_rows(spark, sf_dir, "supplier") <= max_broadcast_rows
     o = (
         orders.join(F.broadcast(c), orders["o_custkey"] == c["c_custkey"])
         if cust_fits
@@ -5552,7 +5564,9 @@ def market_share_ppm(
     # AMERICA customers are ~1/5 of an SF-scaling table: broadcast only
     # under a metadata-only bound (full customer footer count), else the
     # semi join shuffles — the gate class VERDICT r10 item 1 names.
-    cust_fits = cust.count() <= max_broadcast_customers  # footers only
+    cust_fits = (  # footers only
+        table_rows(spark, sf_dir, "customer") <= max_broadcast_customers
+    )
     o = (
         orders.join(
             F.broadcast(c), orders["o_custkey"] == c["c_custkey"], "left_semi"
@@ -5597,7 +5611,7 @@ def market_share_ppm(
         F.col("l_suppkey") == F.col("target_suppkey"),
         "left",
     )
-    n_orders_total = orders.count()  # parquet footers only
+    n_orders_total = table_rows(spark, sf_dir, "orders")  # parquet footers only
     if n_orders_total <= max_broadcast_orders:
         o_fits = True
     elif n_orders_total <= 20 * max_broadcast_orders:
@@ -5751,7 +5765,9 @@ def custdist_histogram(
         .groupBy("o_custkey")
         .agg(F.count(F.lit(1)).alias("n_orders"))
     )
-    oc_bound = min(cust.count(), orders.count())  # parquet footers only
+    oc_bound = min(  # parquet footers only
+        table_rows(spark, sf_dir, "customer"), table_rows(spark, sf_dir, "orders")
+    )
     oc_side = (
         F.broadcast(oc) if oc_bound <= max_broadcast_custkeys else oc
     )
@@ -6326,7 +6342,9 @@ def segment_allocation(
     cust = load_table(spark, sf_dir, "customer")
     u = 10_000
     seg = cust.select("c_custkey", "c_mktsegment")
-    cust_fits = cust.count() <= max_broadcast_customers  # footers only
+    cust_fits = (  # footers only
+        table_rows(spark, sf_dir, "customer") <= max_broadcast_customers
+    )
     rev = (
         (
             orders.join(
@@ -6646,7 +6664,8 @@ def promo_mix_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         j.join(
             gated_broadcast(
-                part.select("p_partkey", "p_type", "p_size"), part.count()
+                part.select("p_partkey", "p_type", "p_size"),
+                table_rows(spark, sf_dir, "part"),
             ),
             F.col("l_partkey") == F.col("p_partkey"),
         )
@@ -7735,7 +7754,7 @@ def late_shipment_priority(
     )
     # Three-band gate (the market_share envelope discipline): the
     # broadcast side is a fixed FRACTION (~8%) of an SF-scaling table.
-    n_orders_total = o.count()  # parquet footers only
+    n_orders_total = table_rows(spark, sf_dir, "orders")  # parquet footers only
     if n_orders_total <= max_broadcast_orders:
         fits = True
     elif n_orders_total <= 20 * max_broadcast_orders:
@@ -8044,7 +8063,8 @@ def segment_revenue_gini_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = track_persist(
         rev.join(
             gated_broadcast(
-                cust.select("c_custkey", "c_mktsegment"), cust.count()
+                cust.select("c_custkey", "c_mktsegment"),
+                table_rows(spark, sf_dir, "customer"),
             ),
             F.col("o_custkey") == F.col("c_custkey"),
         ).select("c_mktsegment", "x")

@@ -11,8 +11,16 @@ downstream operators are lazy DataFrame transforms.
 
 from __future__ import annotations
 
+import os
+import stat
+import weakref
+from collections.abc import Iterable
+from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -28,8 +36,68 @@ TABLES = (
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def file_identity(paths: Iterable[str]) -> tuple | None:
+    """(path, inode, size, mtime_ns) of every file at or under ``paths``
+    (local paths or ``file:`` URIs), sorted — the one definition of
+    "these files are unchanged" that the catalog's metadata memo and
+    the streaming staging memo key on. Returns None when any path is
+    not local (``hdfs://``, ``s3a://`` ...) or cannot be stat'ed, and
+    when there is no file at all: callers then read fresh."""
+    out = []
+    for p in paths:
+        if p.startswith("file:"):
+            p = unquote(urlparse(p).path)
+        elif "://" in p:
+            return None
+        try:
+            st = os.stat(p)
+            if not stat.S_ISDIR(st.st_mode):
+                out.append((p, st.st_ino, st.st_size, st.st_mtime_ns))
+                continue
+            for root, _, files in os.walk(p):
+                for f in files:
+                    fp = os.path.join(root, f)
+                    fst = os.stat(fp)
+                    out.append((fp, fst.st_ino, fst.st_size, fst.st_mtime_ns))
+        except OSError:
+            return None
+    return tuple(sorted(out)) or None
+
+
+@dataclass
+class _Meta:
+    ident: tuple
+    schema: StructType  # raw inferred schema, before any normalization
+    rows: int | None = None
+
+
+# Per-session table metadata: session -> {path: _Meta}. Every
+# ``spark.read.parquet`` without a schema fires a Spark job to infer it,
+# and the builders load the same tables over and over — so the raw
+# schema (and, once asked for, the footer row count) is kept per path
+# until the path's file identity changes. Weak on the session, and a
+# _Meta holds only plain values, so the memo never keeps a session (or
+# its JVM) alive; a ``newSession()`` clone or a recreated session starts
+# empty. The reference's kvraft server likewise answers from the state
+# it holds instead of redoing work per request (kvraft/server.go:31-38).
+_META: weakref.WeakKeyDictionary[SparkSession, dict[str, _Meta]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _lookup(spark: SparkSession, path: str, ident: tuple | None) -> _Meta | None:
+    meta = _META.get(spark, {}).get(path)
+    return meta if meta is not None and meta.ident == ident else None
+
+
+def _load(spark: SparkSession, sf_dir: str, name: str) -> tuple[DataFrame, _Meta | None]:
     path = f"{sf_dir}/{name}.parquet"
+    ident = file_identity([path])
+    meta = _lookup(spark, path, ident)
+    # A hit hands Spark the memoized schema, which skips the inference
+    # job; every call still returns a fresh DataFrame (one Dataset per
+    # call, so self-joins of two loads keep distinct column lineage).
+    reader = spark.read if meta is None else spark.read.schema(meta.schema)
     if name == "events":
         # events.parquet has shipped with ts as TIMESTAMP(NANOS) (which
         # Spark's reader rejects outright) and as TIMESTAMP(MICROS,
@@ -42,25 +110,54 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         prev = spark.conf.get(key, None)
         spark.conf.set(key, "true")
         try:
-            df = spark.read.parquet(path)
-            ts_type = dict(df.dtypes).get("ts")
-            if ts_type == "bigint":  # nanos read as long → truncate
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            elif ts_type == "timestamp_ntz":
-                # NTZ → instant, interpreted in the session tz (UTC):
-                # identical wall-clock values, castable to epoch seconds.
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+            raw = reader.parquet(path)
         finally:
             if prev is None:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, prev)
-        return df
-    return spark.read.parquet(path)
+        ts_type = dict(raw.dtypes).get("ts")
+        if ts_type == "bigint":  # nanos read as long → truncate
+            df = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif ts_type == "timestamp_ntz":
+            # NTZ → instant, interpreted in the session tz (UTC):
+            # identical wall-clock values, castable to epoch seconds.
+            df = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+        else:
+            df = raw
+    else:
+        raw = df = reader.parquet(path)
+    if meta is None and ident is not None:
+        meta = _META.setdefault(spark, {})[path] = _Meta(ident, raw.schema)
+    return df, meta
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A fresh DataFrame over ``{sf_dir}/{name}.parquet``; the schema is
+    inferred once per session while the files stay unchanged."""
+    return _load(spark, sf_dir, name)[0]
+
+
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of a catalog table — what ``load_table(...).count()``
+    returns (parquet footers only, no data scan), memoized on the same
+    file identity as the schema. This is the metadata bound the size
+    gates read: counted once per session, not once per gate site."""
+    path = f"{sf_dir}/{name}.parquet"
+    meta = _lookup(spark, path, file_identity([path]))
+    if meta is None or meta.rows is None:
+        df, meta = _load(spark, sf_dir, name)
+        rows = df.count()
+        if meta is None:  # unstattable path: nothing to memoize on
+            return rows
+        meta.rows = rows
+    return meta.rows
+
+
+def load_tables(
+    spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLES
+) -> dict[str, DataFrame]:
+    return {t: load_table(spark, sf_dir, t) for t in names}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -53,28 +53,22 @@ def _staging_key(spark: SparkSession, df: DataFrame) -> tuple | None:
     """Identity of a file-backed frame for staging reuse: the
     canonicalized analyzed plan (expr-id-normalized, so two
     load_table().where(...) builds of the same transform match) plus
-    the source files' (uri, mtime, size). Returns None for frames the
-    key cannot pin exactly (in-memory tests, unstattable files) —
-    those always stage fresh."""
-    import os
+    the source files' ``catalog.file_identity``. Returns None for
+    frames the key cannot pin exactly (in-memory tests, unstattable
+    files) — those always stage fresh."""
+    from distributed_computing_spark.sources.catalog import file_identity
 
     try:
-        files = sorted(df.inputFiles())
-        if not files:
+        files = file_identity(df.inputFiles())
+        if files is None:
             return None
-        stats = []
-        for uri in files:
-            path = uri[7:] if uri.startswith("file://") else uri
-            path = path if path.startswith("/") else "/" + path.lstrip("/")
-            st = os.stat(path)
-            stats.append((uri, int(st.st_mtime_ns), st.st_size))
         analyzed = df._jdf.queryExecution().analyzed()
         return (
             spark.sparkContext.applicationId,
             analyzed.canonicalized().toString(),
             analyzed.semanticHash(),
             df.schema.json(),
-            tuple(stats),
+            files,
         )
     except Exception:
         return None

@@ -79,3 +79,12 @@ def test_subset_replica_dir_is_isolated(em_replica):
     # the subset replica contains embeddings but not the heavy facts
     assert os.path.exists(f"{em_replica}/embeddings.parquet")
     assert not os.path.exists(f"{em_replica}/lineitem.parquet")
+
+
+def test_pklineitem_and_lineitem_refused_together(spark):
+    """Both facts write {dest}/lineitem.parquet, so asking for both
+    would let one replica silently clobber the other."""
+    import tools.crossover as xo
+
+    with pytest.raises(ValueError, match="pklineitem"):
+        xo.ensure_scaled(spark, SF_DIR, 2, facts=("lineitem", "pklineitem"))

@@ -84,6 +84,43 @@ def test_packed_pair_key_identical_to_two_long_shape(spark):
     assert got == want and got  # non-empty: pairs actually flowed
 
 
+def test_packed_pair_key_int32_doc_ids(spark):
+    """An IntegerType doc_id must pack like a long one: Spark masks an
+    int shift distance mod 32, so packing without a bigint cast gave
+    pk = a | b and merged distinct pairs into wrong rows. The output
+    keeps the input's id type."""
+    rows = [
+        (1, "a b c d e f g h", "en", "s", 10),
+        (2, "a b c d e f g h x", "en", "s", 10),
+        (4, "a b c d e f g h y", "en", "s", 10),
+        (12, "z y x w v u t s", "en", "s", 10),
+    ]
+    docs = _docs(spark, rows).withColumn("doc_id", F.col("doc_id").cast("int"))
+    kw = dict(threshold=0.3, max_df=0.8)
+    packed = ngram_jaccard_pairs(docs, packed_pairs_min_docs=0, **kw)
+    plain = ngram_jaccard_pairs(docs, packed_pairs_min_docs=None, **kw)
+    assert "shiftleft" in packed._jdf.queryExecution().toString()
+    assert dict(packed.dtypes)["a"] == dict(plain.dtypes)["a"] == "int"
+    got = sorted((r["a"], r["b"], r["jaccard"]) for r in packed.collect())
+    want = sorted((r["a"], r["b"], r["jaccard"]) for r in plain.collect())
+    assert got == want and [(a, b) for a, b, _ in got] == [(1, 2), (1, 4), (2, 4)]
+
+
+def test_ngram_n_docs_bound_matches_counted(spark):
+    """A caller-supplied row count (catalog.table_rows) drives the df
+    cap exactly like the count the operator would take itself."""
+    rows = [(i, "a b c d e f g h " + "q" * (i % 3), "en", "s", 10) for i in range(6)]
+    docs = _docs(spark, rows)
+    kw = dict(threshold=0.3, max_df=0.5, packed_pairs_min_docs=None)
+
+    def pairs(**extra):
+        df = ngram_jaccard_pairs(docs, **kw, **extra)
+        return sorted((r["a"], r["b"], r["jaccard"]) for r in df.collect())
+
+    assert pairs(n_docs=6) == pairs() != []
+    assert pairs(n_docs=1) == []  # cap 1 drops every shared shingle
+
+
 def test_packed_pair_gate_refuses_out_of_range_ids(spark):
     """An id at 2^31 (or negative) must keep the two-long shape even
     when the doc-count gate passes — the pack is range-gated."""

@@ -1137,9 +1137,9 @@ def test_triangle_above_gate_wedge_plan_shape(spark):
     must keep the proven m^1.5 wedge shape — equi-joins only (the wedge
     self-join on u and the closure join on (y, z)), no broadcast
     adjacency sets, no array_intersect, nothing wider than id/degree
-    longs. Forced via broadcast_edges_max=0 (the far-tier pk-R8 replica
-    exercises the same dispatch at data scale: 9.57 M oriented edges >
-    the 5 M gate)."""
+    longs. Forced via broadcast_edges_max=0 (under the 10 M gate the
+    far-tier pk-R8 replica's 9.57 M oriented edges take the fast path;
+    the same dispatch reaches the wedge at data scale from pk-R16)."""
     from distributed_computing_spark.caching import release_tracked
     from distributed_computing_spark.operators.graph import (
         copurchase_edges, triangle_counts,

@@ -1199,6 +1199,9 @@ def ensure_scaled(
     from distributed_computing_spark.sources.catalog import load_table
 
     facts = tuple(facts)
+    if {"lineitem", "pklineitem"} <= set(facts):
+        # both write {dest}/lineitem.parquet: one would clobber the other
+        raise ValueError("facts may hold lineitem or pklineitem, not both")
     dest = _scaled_dir(sf_dir, R, facts)
     manifest = os.path.join(dest, "manifest.json")
     if os.path.exists(manifest):
