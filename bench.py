@@ -414,8 +414,11 @@ def _compact_for_tail(payload: dict) -> dict:
                 n = 10 if drop == "_weak_cap" else 5
                 xo2["weak"] = dict(list(xo2["weak"].items())[:n])
         elif drop == "_queries_int":
+            # sub-second cells keep one decimal: a 0.4 s cell rounded
+            # to 0 reads as dropped_from_bench
             p["queries"] = {
-                k: int(round(v)) if isinstance(v, float) else v
+                k: (int(round(v)) if v >= 1 else round(v, 1))
+                if isinstance(v, float) else v
                 for k, v in p.get("queries", {}).items()
             }
         elif isinstance(p.get("crossover"), dict):

@@ -83,6 +83,39 @@ def dedup_ops(ops: DataFrame) -> DataFrame:
     )
 
 
+def _ordered_concat(order_col: str, value_col: str):
+    """Aggregate: the group's ``value_col`` strings concatenated in
+    ``order_col`` order."""
+    return F.concat_ws(
+        "",
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(order_col, value_col))),
+            lambda s: s[value_col],
+        ),
+    )
+
+
+def fold_writes(writes: DataFrame) -> DataFrame:
+    """Per-key ordered fold of put/append ops → ``(key, value, _lp)``.
+
+    ``value`` is the key's last Put value followed by the later Appends
+    in seq order; ``_lp`` is that last Put's seq, null when the key saw
+    only Appends (the value then extends whatever the key held before).
+    One shuffle on key: the last-Put cutoff is a window and the concat
+    a groupBy over the same partitioning. ``replay`` drops ``_lp``
+    (column pruning removes its aggregate); ``KVTableStore.apply_batch``
+    hands it to the state MERGE as the put-reset flag.
+    """
+    w_key = Window.partitionBy("key")
+    last_put = F.max(F.when(F.col("op") == "put", F.col("seq"))).over(w_key)
+    eff = writes.withColumn("_lp", last_put).where(
+        F.col("seq") >= F.coalesce(F.col("_lp"), F.lit(-1))
+    )
+    return eff.groupBy("key").agg(
+        _ordered_concat("seq", "value").alias("value"), F.max("_lp").alias("_lp")
+    )
+
+
 def _fold_effective_writes(
     writes: DataFrame, salt_buckets: int | None = None
 ) -> DataFrame:
@@ -90,7 +123,7 @@ def _fold_effective_writes(
 
     Put resets the key, Append concatenates (missing key starts at "").
     Implemented as: keep only writes at-or-after the key's last Put,
-    then seq-ordered concat. No driver-side iteration.
+    then seq-ordered concat (``fold_writes``). No driver-side iteration.
 
     ``salt_buckets``: the hot-key path. The fold runs in two phases —
     sub-fold within (key, contiguous seq range) so a hot key spreads
@@ -99,16 +132,8 @@ def _fold_effective_writes(
     switches from a window to a partial-aggregated groupBy + skew-aware
     equi-join, so NO stage processes a whole hot key in one task.
     """
-    ordered_vals = F.transform(
-        F.array_sort(F.collect_list(F.struct("seq", "value"))), lambda s: s["value"]
-    )
     if not salt_buckets:
-        w_key = Window.partitionBy("key")
-        last_put = F.max(F.when(F.col("op") == "put", F.col("seq"))).over(w_key)
-        eff = writes.withColumn("_last_put", last_put).where(
-            F.col("seq") >= F.coalesce(F.col("_last_put"), F.lit(-1))
-        )
-        return eff.groupBy("key").agg(F.concat_ws("", ordered_vals).alias("value"))
+        return fold_writes(writes).drop("_lp")
 
     # The salted path references `writes` TWICE (last-put aggregate +
     # the fold probe), and Catalyst re-evaluates the subtree — with a
@@ -136,12 +161,9 @@ def _fold_effective_writes(
         # lose integer precision past 2^53
         eff.withColumn("_b", F.expr(f"seq div {width}"))
         .groupBy("key", "_b")
-        .agg(F.concat_ws("", ordered_vals).alias("_part"))
+        .agg(_ordered_concat("seq", "value").alias("_part"))
     )
-    ordered_parts = F.transform(
-        F.array_sort(F.collect_list(F.struct("_b", "_part"))), lambda s: s["_part"]
-    )
-    return parts.groupBy("key").agg(F.concat_ws("", ordered_parts).alias("value"))
+    return parts.groupBy("key").agg(_ordered_concat("_b", "_part").alias("value"))
 
 
 def replay(
@@ -255,15 +277,7 @@ def client_fold_check(ops: DataFrame) -> DataFrame:
     appends = (
         effective.where(F.col("op") == "append")
         .groupBy("key")
-        .agg(
-            F.concat_ws(
-                "",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seq", "value"))),
-                    lambda s: s["value"],
-                ),
-            ).alias("appends_in_order")
-        )
+        .agg(_ordered_concat("seq", "value").alias("appends_in_order"))
     )
     return replay(ops).join(appends, "key", "left")
 

@@ -20,6 +20,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# the directory holding the package: Python workers import it from here
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -71,6 +73,11 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_RESULT", "1g"),
         )
         .config("spark.ui.enabled", "false")
+        # Python workers (pandas UDFs) unpickle the package's functions
+        # by module name, so they need the package on their path whatever
+        # the cwd. Local-mode workers merge this with the process
+        # PYTHONPATH; on a cluster, ship the package with --py-files.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     )

@@ -16,6 +16,13 @@ module is the single place that decides which physical form runs:
   isolation — exactly the gap Delta closes.
 
 Both backends expose the same functions; callers never branch.
+
+On the parquet backend a MERGE target is rewritten every batch, so it is
+read with its declared schema (``read_state``): ``spark.read.parquet``
+without one infers the schema with a Spark job on every call. The
+merges cast their output to that declared schema, so a declared-schema
+read never meets a file it cannot decode (an int32 id column written by
+a first batch, say). A ``KVTableStore.apply_batch`` is then 8 jobs.
 """
 
 from __future__ import annotations
@@ -59,14 +66,25 @@ def _swap_dir(df: DataFrame, path: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def read_state(spark: SparkSession, path: str, schema) -> DataFrame:
+def read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Read a MERGE-target table regardless of backend; empty DataFrame
-    with the declared schema if it does not exist yet."""
+    with the declared schema if it does not exist yet. The parquet read
+    takes the declared schema too, so it fires no schema-inference job."""
     if delta_available(spark) and DeltaTable.isDeltaTable(spark, path):
         return spark.read.format("delta").load(path)
     if os.path.exists(path):
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     return spark.createDataFrame([], schema)
+
+
+def _as_schema(df: DataFrame, schema: str) -> DataFrame:
+    """``df`` with exactly the columns and types of the DDL ``schema``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    return df.select(
+        *[F.col(f.name).cast(f.dataType) for f in StructType.fromDDL(schema)]
+    )
 
 
 def merge_upsert_path(
@@ -142,7 +160,7 @@ def merge_kv_state(spark: SparkSession, path: str, folded: DataFrame) -> None:
         .otherwise(F.concat(F.coalesce(F.col("_base"), F.lit("")), F.col("_delta")))
         .alias("value"),
     )
-    _swap_dir(new_state, path)
+    _swap_dir(_as_schema(new_state, STATE_SCHEMA), path)
 
 
 def merge_high_water(spark: SparkSession, path: str, advances: DataFrame) -> None:
@@ -174,7 +192,7 @@ def merge_high_water(spark: SparkSession, path: str, advances: DataFrame) -> Non
         .groupBy("client_id")
         .agg(F.max("high_water").alias("high_water"))
     )
-    _swap_dir(merged, path)
+    _swap_dir(_as_schema(merged, HW_SCHEMA), path)
 
 
 # ---------------------------------------------------------------------------

@@ -10,7 +10,11 @@ shapes:
    production shape: all state lives in tables, nothing on the driver,
    and a batch is the unit of atomic install (the K5/P7 "apply once, in
    order" contract comes from Structured Streaming's serialized
-   micro-batches + checkpointing).
+   micro-batches + checkpointing). On the parquet backend one batch is
+   8 Spark jobs. The high-water advances from the raw batch: per
+   client, max(stored, max req_id over the batch) equals max(stored,
+   max req_id over the ops actually applied), because every op the
+   dedup drops sits at or below one of those two.
 
 2. ``stateful_fold_stream`` — per-key ``applyInPandasWithState``: the
    custom-stateful-operator shape for when per-event latency matters.
@@ -81,8 +85,15 @@ class KVTableStore:
 
     def apply_batch(self, batch: DataFrame) -> None:
         """Dedup the batch against persistent high-water, fold writes
-        into state, advance high-water — the K4+K2+K3 batch merge."""
-        from distributed_computing_spark.operators.kv import dedup_ops
+        into state, advance high-water — the K4+K2+K3 batch merge.
+
+        8 Spark jobs on the parquet backend: both table reads take their
+        declared schema (no inference job), the fold is one shuffle on
+        key, and nothing is persisted — a persisted frame would keep its
+        shuffle partitioning, since AQE does not coalesce a cached plan.
+        """
+        from distributed_computing_spark import sinks
+        from distributed_computing_spark.operators.kv import dedup_ops, fold_writes
 
         spark = self.spark
         hw = self.high_water()
@@ -92,40 +103,23 @@ class KVTableStore:
         fresh = joined.where(
             F.col("high_water").isNull() | (F.col("req_id") > F.col("high_water"))
         ).drop("high_water")
-        eff = dedup_ops(fresh)
-        eff.persist()
-        try:
-            # fold the batch's writes; the MERGE treats the existing
-            # value as a seq=-inf append base unless a put (_lp) resets.
-            writes = eff.where(F.col("op").isin("put", "append"))
-            last_put = writes.groupBy("key").agg(
-                F.max(F.when(F.col("op") == "put", F.col("seq"))).alias("_lp")
-            )
-            folded = (
-                writes.join(last_put, "key", "left")
-                .where(F.col("seq") >= F.coalesce(F.col("_lp"), F.lit(-1)))
-                .groupBy("key")
-                .agg(
-                    F.concat_ws(
-                        "",
-                        F.transform(
-                            F.array_sort(F.collect_list(F.struct("seq", "value"))),
-                            lambda s: s["value"],
-                        ),
-                    ).alias("_delta"),
-                    F.max("_lp").alias("_lp"),
-                )
-            )
-            from distributed_computing_spark import sinks
-
-            sinks.merge_kv_state(spark, self.state_dir, folded)
-            sinks.merge_high_water(
-                spark,
-                self.hw_dir,
-                eff.groupBy("client_id").agg(F.max("req_id").alias("high_water")),
-            )
-        finally:
-            eff.unpersist()
+        writes = dedup_ops(fresh).where(F.col("op").isin("put", "append"))
+        # the MERGE treats the stored value as a seq=-inf append base
+        # unless a put in the batch (_lp non-null) resets it
+        folded = fold_writes(writes).withColumnRenamed("value", "_delta")
+        sinks.merge_kv_state(spark, self.state_dir, folded)
+        # High-water from the RAW batch: max(stored, max req_id over the
+        # batch) == max(stored, max req_id over the applied ops), per
+        # client. An op the high-water filter dropped has req_id <=
+        # stored; an op the in-batch dedup dropped has req_id <= an
+        # earlier applied op of its client (the running max it lost to
+        # is attained by an applied op). So the deduped frame is not
+        # read twice and needs no persist.
+        sinks.merge_high_water(
+            spark,
+            self.hw_dir,
+            batch.groupBy("client_id").agg(F.max("req_id").alias("high_water")),
+        )
 
 
 def foreach_batch_apply(

@@ -293,3 +293,22 @@ def test_xo_scaling_cells_shed_last():
     # before any xo cell is sacrificed
     if len(kept) < 3:
         assert "recorded" not in out.get("crossover", {})
+
+
+def test_integer_shed_keeps_sub_second_cells():
+    """The integer-timing shed stage keeps one decimal below 1 s, so a
+    0.4 s cell does not round to 0 (which reads as dropped_from_bench),
+    and the line still fits the real budget."""
+    import bench
+
+    payload = _payload(with_queries=True)
+    payload["queries"] = {f"q{i:02d}_headline_query_name": 1.2345 for i in range(58)}
+    payload["queries"]["fast_cell"] = 0.4
+    out = bench._compact_for_tail(payload)
+    line = json.dumps(out, separators=(",", ":"))
+    assert len(line) <= bench._TAIL_BUDGET
+    # the shed reached the integer stage: every >= 1 s cell is an int
+    assert all(
+        isinstance(v, int) for k, v in out["queries"].items() if k.startswith("q")
+    )
+    assert out["queries"]["fast_cell"] == 0.4

@@ -21,9 +21,10 @@ from distributed_computing_spark.sources.catalog import load_table
 OPS_SCHEMA = "seq long, client_id long, req_id long, op string, key string, value string"
 
 
-def serial_replay(ops: list[tuple]) -> dict[str, str]:
+def serial_replay_hw(ops: list[tuple]) -> tuple[dict[str, str], dict[int, int]]:
     """Reference semantics, literally: single in-order apply loop with
-    per-client high-water dedup (kvraft/server.go:72-80, 113-121)."""
+    per-client high-water dedup (kvraft/server.go:72-80, 113-121).
+    Returns (state, per-client high-water)."""
     hw: dict[int, int] = {}
     db: dict[str, str] = {}
     for seq, client, req, op, key, value in sorted(ops):
@@ -34,7 +35,12 @@ def serial_replay(ops: list[tuple]) -> dict[str, str]:
             db[key] = value
         elif op == "append":
             db[key] = db.get(key, "") + value
-    return db
+    return db, hw
+
+
+def serial_replay(ops: list[tuple]) -> dict[str, str]:
+    """The state half of ``serial_replay_hw``."""
+    return serial_replay_hw(ops)[0]
 
 
 def random_ops(seed: int, n: int = 500) -> list[tuple]:

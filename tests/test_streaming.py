@@ -4,6 +4,7 @@ windowed aggs must equal their batch equivalents."""
 
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -22,7 +23,7 @@ from distributed_computing_spark.streaming.windows import (
     tumbling_counts,
 )
 from tests.test_kv import OPS_SCHEMA as OPS_DDL
-from tests.test_kv import random_ops, serial_replay
+from tests.test_kv import random_ops, serial_replay, serial_replay_hw
 
 
 def _write_ops_batches(spark, tmpdir: str, ops: list[tuple], n_batches: int = 3) -> str:
@@ -125,6 +126,110 @@ def test_foreach_batch_is_incremental(spark, tmp_path):
     got = {r["key"]: r["value"] for r in store.state().collect() if r["value"] != ""}
     want = {k: v for k, v in serial_replay(ops).items() if v != ""}
     assert got == want
+
+
+_groups = itertools.count()
+
+
+def _jobs(spark, fn):
+    """(fn(), ids of the Spark jobs fn fired)."""
+    sc = spark.sparkContext
+    group = f"test_streaming_{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _stage_call_sites(spark, job_ids) -> list[str]:
+    """Long call site of every stage of ``job_ids``."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    sites = []
+    for j in job_ids:
+        for s in sc.statusTracker().getJobInfo(j).stageIds:
+            stage = store.stageAttempt(
+                s, 0, False, sc._jvm.java.util.ArrayList(), False, no_quantiles
+            )._1()
+            sites.append(stage.details())
+    return sites
+
+
+def _state(store) -> dict[str, str]:
+    return {r["key"]: r["value"] for r in store.state().collect() if r["value"] != ""}
+
+
+def _high_water(store) -> dict[int, int]:
+    return {r["client_id"]: r["high_water"] for r in store.high_water().collect()}
+
+
+def test_apply_batch_job_budget(spark, tmp_path):
+    """A warm apply is at most 8 jobs, none of them a schema inference,
+    and reading the store's tables fires no job before the action: both
+    tables are read with their declared schema."""
+    ops = random_ops(3, n=400)
+    store = KVTableStore(spark, str(tmp_path / "store"))
+    store.apply_batch(spark.createDataFrame(ops[:200], OPS_DDL))
+    second = spark.createDataFrame(ops[200:], OPS_DDL)
+    _, apply_jobs = _jobs(spark, lambda: store.apply_batch(second))
+    assert len(apply_jobs) <= 8, f"apply fired {len(apply_jobs)} jobs"
+    inference = [s for s in _stage_call_sites(spark, apply_jobs) if "DataFrameReader" in s]
+    assert not inference, inference
+    # the detector sees a bare read's schema-inference stage
+    _, bare = _jobs(spark, lambda: spark.read.parquet(store.state_dir))
+    assert any("DataFrameReader" in s for s in _stage_call_sites(spark, bare))
+
+    state, state_jobs = _jobs(spark, store.state)
+    hw, hw_jobs = _jobs(spark, store.high_water)
+    assert state_jobs == [] and hw_jobs == []
+    want, want_hw = serial_replay_hw(ops)
+    assert {r["key"]: r["value"] for r in state.collect()} == want
+    assert {r["client_id"]: r["high_water"] for r in hw.collect()} == want_hw
+
+
+INT32_DDL = "seq int, client_id int, req_id int, op string, key string, value string"
+
+
+@pytest.mark.parametrize(
+    "seed, ddl, empty_first",
+    [
+        (1, OPS_DDL, False),
+        (7, OPS_DDL, False),
+        (42, OPS_DDL, False),
+        (5, INT32_DDL, False),
+        (9, OPS_DDL, True),
+    ],
+    ids=["seed1", "seed7", "seed42", "int32_ids", "empty_first_batch"],
+)
+def test_store_tracks_the_serial_fold_after_every_batch(
+    spark, tmp_path, seed, ddl, empty_first
+):
+    """random_ops' small req_id space re-sends stale and duplicate
+    requests across batch boundaries. After every batch both tables
+    equal the in-order fold of the ops applied so far, which pins that
+    a high-water advanced from the raw batch still keeps the stored
+    maximum. int32 ids and an empty first batch must give the same
+    answers: the sinks write the declared (long) schema, so every later
+    declared-schema read decodes the tables."""
+    ops = random_ops(seed)
+    batches = [[]] * empty_first + [ops[b * 125 : (b + 1) * 125] for b in range(4)]
+    store = KVTableStore(spark, str(tmp_path / "store"))
+    done: list[tuple] = []
+    for batch in batches:
+        store.apply_batch(spark.createDataFrame(batch, ddl))
+        done += batch
+        want, want_hw = serial_replay_hw(done)
+        assert _state(store) == want
+        assert _high_water(store) == want_hw
+    assert dict(spark.read.parquet(store.hw_dir).dtypes) == {
+        "client_id": "bigint",
+        "high_water": "bigint",
+    }
 
 
 def test_stateful_fold_pipeline_matches_batch(spark, tmp_path):
