@@ -274,27 +274,13 @@ def _compact_for_tail(payload: dict) -> dict:
         # tier dicts are embedded by reference from module globals, and
         # the shed loop below must never mutate the caller's payload.
         xo = dict(xo)
-        # The full recorded-tier tables no longer fit the tail capture
-        # next to 40 headline timings (round 6) — crossover now also
-        # emits `recorded_echo`, the curated stdout subset (current
-        # round's slope tiers + the standing DNF/crossover-win datums);
-        # the full tables stay in .bench_full.json and BASELINE.md.
+        # The full recorded-tier tables (`recorded_tiers`) never fit the
+        # tail capture next to the headline timings: they stay in
+        # .bench_full.json and BASELINE.md, and only `recorded_echo`, the
+        # curated subset (tools/crossover.RECORDED_ECHO_KEYS), rides
+        # stdout.
         echo = xo.pop("recorded_echo", None)
-        rec = dict(xo.pop("dedup_tier_recorded", None) or {})
-        rec.update(xo.pop("kv_tier_recorded", None) or {})
-        rec.update(xo.pop("r6_tier_recorded", None) or {})
-        rec.update(xo.pop("r7_tier_recorded", None) or {})
-        rec.update(xo.pop("r8_tier_recorded", None) or {})
-        rec.update(xo.pop("r9_tier_recorded", None) or {})
-        # Every recorded-tier table must join this pop list the round it
-        # is born: an un-popped table rides the tail RAW and blows the
-        # 2000-char capture (the round-4 artifact-destruction class —
-        # round 10's first clean bench measured 2784 chars before this
-        # line landed). test_bench_tail pins the budget.
-        rec.update(xo.pop("r10_tier_recorded", None) or {})
-        rec.update(xo.pop("r11_tier_recorded", None) or {})
-        rec.update(xo.pop("r12_tier_recorded", None) or {})
-        rec.update(xo.pop("r13_tier_recorded", None) or {})
+        xo.pop("recorded_tiers", None)
         if "queries" in xo:
             # VERDICT r7 item 3: the per-query crossover arrays get shed
             # from the tail when the line outgrows the budget, which in
@@ -339,22 +325,11 @@ def _compact_for_tail(payload: dict) -> dict:
                 for k, v in xo["queries"].items()
             }
         if echo:
-            compact = {
+            # legend: values are [spark_s, duckdb_s]; null = DNF (BASELINE.md)
+            xo["recorded"] = {
                 fam: {t: [r2(a), r2(b)] for t, (a, b) in tiers.items()}
                 for fam, tiers in echo.items()
             }
-        else:  # older payloads without the echo field: full tables
-            compact = {
-                fam: {
-                    t: [r2(d.get("spark_s")), r2(d.get("duckdb_s"))]
-                    for t, d in tiers.items()
-                }
-                for fam, tiers in rec.items()
-                if isinstance(tiers, dict)
-            }
-        if compact:
-            # legend: values are [spark_s, duckdb_s]; null = DNF (BASELINE.md)
-            xo["recorded"] = compact
         p["crossover"] = xo
 
     def _len(d):

@@ -31,10 +31,36 @@ dangling-mass redistribution is needed — asserted, not assumed.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.caching import track_persist
+
+# AQE-off clones per (parent session, static shuffle partitions). A
+# below-gate graph build reuses its clone instead of calling
+# ``newSession()`` every time, so the clone's catalog memo (schemas,
+# footer counts) hits on the next build. Weak on the parent: a clone
+# holds the SparkContext, not the parent session, so the memo never
+# keeps the parent alive, and a stopped-then-recreated parent is a new
+# key with a fresh clone (the sources/catalog.py pattern).
+_STATIC: weakref.WeakKeyDictionary[SparkSession, dict[int, SparkSession]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _static_session(spark: SparkSession, partitions: int) -> SparkSession:
+    """A clone of ``spark`` with AQE off and ``partitions`` static
+    shuffle partitions, made once per (session, partitions). The
+    parent's conf is untouched."""
+    clones = _STATIC.setdefault(spark, {})
+    if partitions not in clones:
+        s = spark.newSession()
+        s.conf.set("spark.sql.adaptive.enabled", "false")
+        s.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        clones[partitions] = s
+    return clones[partitions]
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
@@ -189,7 +215,7 @@ def pagerank_parts(
     every pair (warm 3.74/3.77/3.72 s vs 4.5/3.78/4.25 s; fresh-session
     first run 12.8-13.7 s vs 14.7-15.5 s — the driver-bench regime).
     The two deeper re-plans VERDICT suggested were probed and REJECTED
-    on measurement (tools/probe_pagerank_{b5,fold}.py): the
+    on measurement (commit 8e694e3, OPTIMIZATION_r13.md): the
     driver-fold Arrow pass lost 5× (40-47 s — the interpreted
     dict-loop class), and folding rank into the round aggregate via a
     dst_outdeg-carrying edge table lost ~10% (the extra persist build
@@ -202,8 +228,6 @@ def pagerank_parts(
     # parquet-footer bound: part cardinality >= distinct co-purchase
     # graph nodes; metadata-only, no data scan (broadcast-gate rule)
     if table_rows(spark, sf_dir, "part") <= 5_000_000:
-        s = spark.newSession()
-        s.conf.set("spark.sql.adaptive.enabled", "false")
         # With AQE off there is no runtime coalescing, so every
         # node-sized per-round exchange (the groupBy(dst) aggregates)
         # would run at the session's static 32 shuffle partitions —
@@ -213,7 +237,7 @@ def pagerank_parts(
         # 2.5-4.0 s vs 32's 5.6-6.4; 2/4/16 all measured worse
         # (4.0-5.5). Sized for the GATED regime, not the cluster —
         # above the gate the untouched session's AQE does the sizing.
-        s.conf.set("spark.sql.shuffle.partitions", "8")
+        s = _static_session(spark, 8)
     else:
         s = spark
     edges = copurchase_edges(load_table(s, sf_dir, "lineitem"))
@@ -470,9 +494,7 @@ def copurchase_triangles(
     from distributed_computing_spark.sources.catalog import load_table, table_rows
 
     if table_rows(spark, sf_dir, "lineitem") <= 10_000_000:
-        s = spark.newSession()
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        s.conf.set("spark.sql.shuffle.partitions", "16")
+        s = _static_session(spark, 16)
     else:
         s = spark
     edges = track_persist(copurchase_edges(load_table(s, sf_dir, "lineitem")))

@@ -1489,17 +1489,10 @@ _CLEAN_SQL = r"""trim(regexp_replace(
 
 # Ordering contract: the external driver's correctness gate covers the FIRST
 # 50 entries of this dict. The dict below groups queries by subject; the
-# _R5_WINDOW reorder at the bottom of this file puts the round-5 gate window
-# up front (staleness-driven rotation — see its comment). Every entry is
-# oracle-checked locally every round via tools/check_correctness.py
-# regardless of window position.
+# _GATE_WINDOW reorder at the end of this file is the only statement that
+# decides which 50 come first. Every entry is oracle-checked locally via
+# tools/check_correctness.py regardless of window position.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # ---- driver-gate window (first ~50): every entry here either has
-    # never had a driver CORRECTNESS row (the 12 round-2 additions,
-    # rotated in for round 3 per VERDICT r2 item 2) or was changed this
-    # round (stream_enriched / multimodal_features red-row fixes,
-    # pack_chunks regrouping, stream_config_poll idempotency).
-    # Twice-driver-proven stable entries moved below the boundary. ----
     # round-3 text-analysis / dedup additions
     "bigram_logprob": textstats.bigram_logprob,
     "source_token_kl": textstats.source_token_kl,
@@ -1576,9 +1569,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "decayed_user_activity": analytics.decayed_user_activity,
     "salted_revenue_join": salted_revenue_join,
     "value_histogram": analytics.value_histogram,
-    # ---- driver-gate window boundary (~50) — long tail below is
-    # oracle-checked locally every round via tools/check_correctness.py;
-    # every entry below has at least one green driver row (r1 or r2) ----
     # [EXT] text analysis (driver-proven r2, unchanged)
     "corpus_summary": textstats.corpus_summary,
     "build_vocab": textstats.build_vocab,
@@ -2861,50 +2851,6 @@ SELECT m.cluster_id, b.kept_doc,
 FROM mem m JOIN best b ON m.cluster_id = b.cluster_id AND b.rn = 1
 GROUP BY m.cluster_id, b.kept_doc"""
 )
-
-
-# ---------------------------------------------------------------------------
-# Driver-gate window rotation (round 5)
-# ---------------------------------------------------------------------------
-# The external driver gates the FIRST 50 entries of QUERIES each round.
-# Rotation policy (VERDICT r3 item 9): minimize staleness — no query
-# should go three rounds without a driver row. After r4, staleness is:
-# 25 queries last gated in r2, 48 in r3, 50 in r4 (union = all 123).
-# Round-5 window = new/changed round-5 queries + ALL 25 r2-stale + the
-# streaming family and oracle-exact twins from the r3 set (VERDICT r4
-# item 3 names them) + the heaviest r3 remainder. The ~25 r3-gated
-# queries left below the boundary become the core of the r6 window.
-_R5_WINDOW = [
-    # new or behavior-changed in round 5 (kv_replay_hotkey +
-    # multimodal_jpeg_decode new; customer_upsert's aggregate rewritten
-    # cents-as-long + persist)
-    "kv_replay_hotkey", "multimodal_jpeg_decode", "customer_upsert",
-    "customer_scd2", "priority_grouping_sets",
-    # last driver row r2 (all 25 — stalest first per VERDICT r4 item 3)
-    "bigram_counts", "build_vocab", "corpus_summary", "embedding_neardup",
-    "encode_docs", "event_anomalies", "fingerprints", "kv_state",
-    "lang_entropy_by_source", "lang_id", "minhash_incremental",
-    "minhash_neardup", "quality_calibration", "quality_scores",
-    "shingle_novelty", "simhash_neardup", "stopword_discovery",
-    "stream_sessions", "stream_sliding", "stream_windowed", "text_stats",
-    "tfidf_top_terms", "top_docs_per_lang", "unigram_logprob",
-    "user_retention",
-    # last driver row r3 — streaming family + oracle-exact twins first
-    # (VERDICT r4 item 3 names them), then the heaviest/most-
-    # consequential of the rest; the remainder rotates in next round
-    "stream_config_poll", "stream_curated_ingest", "stream_dedup_ops",
-    "stream_enriched", "stream_kv_state", "stream_kv_stateful",
-    "stream_stream_join",
-    "simhash_exact", "lsh_topk_exact", "ivf_topk_exact",
-    "sample_by_lang_exact",
-    "word_count_top10", "minhash_lsh_exact", "leakage_safe_split",
-    "corpus_pipeline", "pack_chunks", "decontaminate", "chunk_docs",
-    "repetition_scores", "cosine_topk",
-]
-assert len(_R5_WINDOW) == 50 and len(set(_R5_WINDOW)) == 50
-QUERIES = {name: QUERIES[name] for name in _R5_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R5_WINDOW)
-}
 
 
 # ---------------------------------------------------------------------------
@@ -8311,121 +8257,25 @@ ORACLES["stream_event_trigrams"] = ORACLES["event_path_trigrams"]
 
 
 # ---------------------------------------------------------------------------
-# Driver-gate window rotation (round 11 — VERDICT r10 item 2)
+# Driver-gate window
 # ---------------------------------------------------------------------------
-# Staleness-driven (the driver gates the FIRST 50 entries). Round-12
-# window (VERDICT r11 item 1): the staleness table rebuilt from
-# CORRECTNESS_r1..r11 puts 19 entries at r6-latest and 49 at
-# r7-latest. This window takes, in priority order:
-#   1. ALL 17 r6-stale oracle-backed entries (the late-batch-displaced
-#      cohort). The two r6 rows-only entries (multimodal_features,
-#      sample_by_lang) stay consciously skipped per the VERDICT r10
-#      item-5 slot rule — unchanged, exact pytest twins run every
-#      suite.
-#   2. Round-12-CHANGED queries that must re-prove under the driver:
-#      segment_revenue_gini (ADVICE r11 — the seg subtree is now
-#      track_persisted, a real plan change) and the stream_kv pair
-#      (kv_stream.py's order-sensitive fold was refactored to
-#      itertuples — value-identical by tests, but it IS the
-#      value-computing loop). The repo-wide mapInPandas dtype pins
-#      (VERDICT item 2: textstats/analytics/mapreduce/similarity/
-#      multimodal/curation/layout/burst emitters) change neither plans
-#      nor values — pd.Series dtype pinning on already-produced
-#      outputs — and are re-proved by the local full gate at both SFs
-#      plus the new tests/test_arrow_emitters.py sweep, so those
-#      queries do not consume slots.
-#   3. 30 of the 46 r7-stale oracle-backed entries, preferring the
-#      VERDICT-named examples, the mapreduce/kv families whose modules
-#      were touched this round, the dim-gate riders
-#      (revenue_by_segment / regional_revenue /
-#      regional_revenue_bucketed), and the heaviest oracles
-#      (neardup_clusters/canonical, bpe). The remaining 16 r7-stale
-#      entries are round 13's first picks: multimodal_mp3_decode,
-#      multimodal_png_decode, ngram_jaccard_pairs, order_percentiles,
-#      phrase_search_index, range_join_views, rolling_weekly_revenue,
-#      semi_anti_orders, set_ops, stream_blocklist_matches,
-#      stream_cms_counts, table_profile, tiered_rollup, top_orders,
-#      train_test_split, value_histogram (plus the r7 rows-only
-#      approx_distinct_users / frequent_items / parquet_profile —
-#      pair-rule: if any re-enters for a plan change its exact twin
-#      rides along, VERDICT r11 item 5).
-#   4. The four round-12 additions (never driver-gated -> must be in
-#      the 50): event_path_trigrams, retention_cohorts,
-#      doc_cooccurrence, stream_event_trigrams — displacing the four
-#      tail r7-stale picks hilbert_cells, hll_nation_rollup,
-#      ivm_customer_revenue, kmv_pair_sketches, which join the r13
-#      first-picks list above (making it 20 entries).
-_R12_WINDOW = [
-    # 1. the 17 r6-stale oracle-backed entries
-    "bigram_logprob", "bloom_semi_orders", "clean_docs",
-    "curated_read_pruned", "decayed_user_activity", "dq_audit",
-    "epoch_shuffle", "event_transitions", "events_gapfill",
-    "events_ohlc", "fuzzy_customer_match", "mixture_sample",
-    "multimodal_frames", "prefix_dups", "salted_revenue_join",
-    "source_token_kl", "zorder_cells",
-    # 2. round-12-changed
-    "segment_revenue_gini", "stream_kv_state", "stream_kv_stateful",
-    # 3. thirty r7-stale picks
-    "asof_attribution", "blocklist_phrase_matches", "cms_word_counts",
-    "edit1_customer_pairs", "events_json_extract", "events_windowed",
-    "exact_dedup", "funnel_conversion", "inverted_index",
-    "mapreduce_wordcount", "user_event_profile", "kv_state", "kv_get",
-    "kv_snapshot", "kv_changes", "kv_effective_ops",
-    "neardup_clusters", "neardup_canonical", "bpe_merges",
-    "bpe_encode_stats", "revenue_by_segment", "regional_revenue",
-    "regional_revenue_bucketed", "user_sessions", "shard_routing",
-    "shard_census",
-    # 4. round-12 additions (never driver-gated)
-    "event_path_trigrams", "retention_cohorts",
-    "doc_cooccurrence", "stream_event_trigrams",
-]
-assert len(_R12_WINDOW) == 50 and len(set(_R12_WINDOW)) == 50
-QUERIES = {name: QUERIES[name] for name in _R12_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R12_WINDOW)
-}
-
-# Every never-driver-gated query MUST sit inside the first-50 window —
-# this file-end block is the last statement touching QUERIES, and this
-# guard fails loudly if a future registration lands below it.
-_R12_NEW: list[str] = [
-    "event_path_trigrams", "retention_cohorts",
-    "doc_cooccurrence", "stream_event_trigrams",
-]
-_order = list(QUERIES)
-for _q in _R12_NEW:
-    if _order.index(_q) >= 50:
-        raise RuntimeError(
-            f"round-12 query {_q!r} fell outside the driver's first-50 "
-            "gate window — keep the _R12_WINDOW block at the END of "
-            "registry.py and add new registrations to it"
-        )
-
-
-# ---------------------------------------------------------------------------
-# Driver-gate window rotation (round 13 — VERDICT r12 item 1)
-# ---------------------------------------------------------------------------
-# Round-12 was rewrite-heavy but its window (correctly, per the r11
-# staleness rule) rotated to the stale cohort — so 23 of the 29
-# round-12-restructured queries have no driver-side value proof of
-# their new plans (VERDICT r12 "What's wrong" §1; round 9 proved a
-# driver-only red class the local harness can't see). This window
-# takes, in priority order:
-#   1. ALL 23 restructured-but-unverified queries (VERDICT's list:
-#      the triangle edge-iterator pair, both Hilbert rewrites, the
-#      basket pair, kmeans, pagerank, the spread multimodal decodes,
-#      the Arrow-pass text family, ks, Q16/Q11, dhash).
-#   2. The 20 r7/r11-stale first-picks VERDICT r11 named for round 13
-#      — minus the 3 already in bucket 1 (multimodal_mp3/png_decode,
-#      hilbert_cells), i.e. 17 entries. The rows-only
-#      approx_distinct_users / frequent_items / parquet_profile stay
-#      consciously skipped (slot rule: exact pytest twins run every
-#      suite; none re-enters for a plan change this round).
-#   3. 10 of the r8-stale oracle-backed entries, stalest cohort next
-#      in line. Queries round 13 itself restructures are all already
-#      inside buckets 1-2 (pagerank_parts, ngram_jaccard_pairs,
-#      minhash riders) — if a late round-13 change lands outside the
-#      window, swap it into bucket 3 before round end.
-_R13_WINDOW = [
+# The external driver gates the FIRST 50 entries of QUERIES against the
+# DuckDB oracles. _GATE_WINDOW is the one place that order is declared:
+# a rotation edits this list in place (stalest-first from the
+# CORRECTNESS_r*.json history, plus every query whose plan changed) and
+# regenerates tests/registry_snapshot.json, which pins it. Never append
+# another reorder block. Everything past position 50 is looked up by
+# name (bench, crossover, perfbench, the local gate), so its order is
+# whatever the registrations above leave.
+#
+# Current window (round 13, VERDICT r12 item 1), in priority order:
+#   1. the 23 round-12-restructured queries, for a driver value proof
+#      of their new plans (round 9 proved a driver-only red class);
+#   2. the 17 r7/r11-stale first-picks VERDICT r11 named for round 13.
+#      The rows-only approx_distinct_users / frequent_items /
+#      parquet_profile stay skipped (exact pytest twins run every suite);
+#   3. 10 r8-stale oracle-backed entries, the next-stalest cohort.
+_GATE_WINDOW = [
     # 1. the 23 round-12-restructured queries (driver value proof)
     "pagerank_parts", "copurchase_triangles", "copurchase_clustering",
     "kmeans_embeddings", "association_rules", "copurchase_cosine",
@@ -8453,7 +8303,7 @@ _R13_WINDOW = [
     "build_vocab", "chunk_docs", "corpus_summary", "corr_stats",
     "cosine_topk", "customer_scd2", "customer_state_cdc",
 ]
-assert len(_R13_WINDOW) == 50 and len(set(_R13_WINDOW)) == 50
-QUERIES = {name: QUERIES[name] for name in _R13_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R13_WINDOW)
+assert len(_GATE_WINDOW) == 50 and len(set(_GATE_WINDOW)) == 50
+QUERIES = {name: QUERIES[name] for name in _GATE_WINDOW} | {
+    k: v for k, v in QUERIES.items() if k not in set(_GATE_WINDOW)
 }

@@ -1,11 +1,14 @@
 """bench.py tail-compaction purity (ADVICE r5).
 
-_compact_for_tail receives a payload that embeds module-global recorded
-tier dicts BY REFERENCE (tools/crossover.RECORDED_*_TIERS); the
-compactor and its shed loop must never mutate the caller's structures —
-round 5's `rec |= pop(...)` folded KV tiers into the dedup global in
-place, and the shed path popped keys off the original crossover dict
-when 'queries' was absent. Pure-python tests, no Spark session.
+_compact_for_tail receives a crossover payload whose `recorded_tiers`
+(tools/crossover._all_recorded()) shares its tier cells BY REFERENCE
+with the module-global RECORDED_*_TIERS tables; the compactor and its
+shed loop must never mutate the caller's structures — round 5's
+`rec |= pop(...)` folded KV tiers into the dedup global in place, and
+the shed path popped keys off the original crossover dict when
+'queries' was absent. Every payload here carries the live
+`recorded_tiers` + `recorded_echo`, the form run_crossover emits.
+Pure-python tests, no Spark session.
 """
 
 from __future__ import annotations
@@ -14,13 +17,29 @@ import copy
 import json
 
 
+def _recorded() -> dict:
+    """The recorded-tier keys of a run_crossover payload, from the live
+    tables."""
+    from tools import crossover as xo_mod
+
+    return {
+        "recorded_tiers": xo_mod._all_recorded(),
+        "recorded_echo": xo_mod._recorded_echo(),
+    }
+
+
+def _echo_tail(echo: dict) -> dict:
+    """The echo as the tail prints it: [spark_s, duckdb_s] at 2 decimals."""
+    return {
+        fam: {t: [round(a, 2), round(b, 2)] for t, (a, b) in tiers.items()}
+        for fam, tiers in echo.items()
+    }
+
+
 def _payload(with_queries: bool) -> dict:
-    dedup = {"minhash_lsh_exact": {"R20": {"spark_s": 32.9, "duckdb_s": 49.8}}}
-    kv = {"kv_replay_hotkey": {"R50": {"spark_s": 6.86, "duckdb_s": 2.29}}}
     xo = {
         "R": 20,
-        "dedup_tier_recorded": dedup,
-        "kv_tier_recorded": kv,
+        **_recorded(),
         "rows": {"word_count_top10": 123},
     }
     if with_queries:
@@ -39,19 +58,18 @@ def _payload(with_queries: bool) -> dict:
 
 def test_compact_does_not_mutate_payload_or_tier_globals():
     from bench import _compact_for_tail
+    from tools import crossover as xo_mod
 
     payload = _payload(with_queries=True)
-    dedup_ref = payload["crossover"]["dedup_tier_recorded"]
     before = copy.deepcopy(payload)
+    tables = copy.deepcopy(xo_mod._all_recorded())
     out = _compact_for_tail(payload)
     assert payload == before, "caller's payload mutated"
-    # the KV fold must land in the output's merged view, NOT inside the
-    # (module-global-by-reference) dedup dict
-    assert "kv_replay_hotkey" not in dedup_ref
-    assert set(out["crossover"]["recorded"]) == {
-        "minhash_lsh_exact",
-        "kv_replay_hotkey",
-    }
+    # the tier cells are shared with the module globals: those must be
+    # untouched too
+    assert xo_mod._all_recorded() == tables
+    assert "recorded_tiers" not in out["crossover"]
+    assert out["crossover"]["recorded"] == _echo_tail(xo_mod._recorded_echo())
     assert out["crossover"]["queries"]["word_count_top10"] == [0.78, 0.11]
 
 
@@ -165,39 +183,31 @@ def test_recorded_echo_takes_precedence_and_fits():
             "spark_total_s": 83.474,
             "duckdb_total_s": 92.332,
             "spark_over_duckdb": 0.904,
-            "dedup_tier_recorded": {
-                "giant_family": {
-                    f"R{r}": {"spark_s": 1.0, "duckdb_s": 2.0}
-                    for r in range(100)
-                }
-            },
-            "recorded_echo": {
-                "dup_spans": {"R50": [59.7, 270.2]},
-                "neardup_clusters": {"R50": [1014.6, None]},
-            },
+            **_recorded(),
         },
     }
     c = _compact_for_tail(payload)
     line = json.dumps(c, separators=(",", ":"))
     assert len(line) <= _TAIL_BUDGET
-    # the echo subset is what rides stdout — not the 100-tier table
-    assert c["crossover"]["recorded"] == {
-        "dup_spans": {"R50": [59.7, 270.2]},
-        "neardup_clusters": {"R50": [1014.6, None]},
-    }
+    # the echo subset is what rides stdout — not the full tables
+    assert "recorded_tiers" not in c["crossover"]
+    assert c["crossover"]["recorded"] == _echo_tail(
+        payload["crossover"]["recorded_echo"]
+    )
     # original payload untouched (ADVICE r5 regression)
     assert "recorded_echo" in payload["crossover"]
-    assert "dedup_tier_recorded" in payload["crossover"]
+    assert "recorded_tiers" in payload["crossover"]
 
 
 def test_live_recorded_tables_all_popped_and_line_fits():
     """Round 10: the first clean bench of the round printed a
-    2784-char line because r10_tier_recorded was missing from the pop
-    list — every recorded table a future round adds must join it. This
-    builds the tail payload from the LIVE module globals (all recorded
-    tables, the real recorded_echo, a full-size headline dict and a
-    live-set-sized crossover queries dict) and pins the budget, so an
-    un-popped table can never reach the driver again."""
+    2784-char line because one recorded table was missing from a
+    ten-key pop list. Every recorded table now rides under the one
+    `recorded_tiers` key. This builds the tail payload from the LIVE
+    module globals (the merged tables, the real recorded_echo, a
+    full-size headline dict and a live-set-sized crossover queries
+    dict) and pins the budget, so the raw tables can never reach the
+    driver again."""
     import bench
     from tools import crossover as xo_mod
 
@@ -211,14 +221,7 @@ def test_live_recorded_tables_all_popped_and_line_fits():
         "spark_total_s": 137.534,
         "duckdb_total_s": 157.962,
         "spark_over_duckdb": 0.871,
-        "dedup_tier_recorded": xo_mod.RECORDED_DEDUP_TIERS,
-        "kv_tier_recorded": xo_mod.RECORDED_KV_TIERS,
-        "r6_tier_recorded": xo_mod.RECORDED_R6_TIERS,
-        "r7_tier_recorded": xo_mod.RECORDED_R7_TIERS,
-        "r8_tier_recorded": xo_mod.RECORDED_R8_TIERS,
-        "r9_tier_recorded": xo_mod.RECORDED_R9_TIERS,
-        "r10_tier_recorded": xo_mod.RECORDED_R10_TIERS,
-        "recorded_echo": xo_mod._recorded_echo(),
+        **_recorded(),
     }
     payload = {
         "metric": "headline_queries_total",
@@ -232,9 +235,8 @@ def test_live_recorded_tables_all_popped_and_line_fits():
     out = bench._compact_for_tail(payload)
     line = json.dumps(out, separators=(",", ":"))
     assert len(line) <= bench._TAIL_BUDGET, len(line)
-    # no raw recorded table may survive into the tail
-    for k in list(out.get("crossover", {})):
-        assert not k.endswith("_tier_recorded"), k
+    # the raw recorded tables never survive into the tail
+    assert "recorded_tiers" not in out["crossover"]
 
 
 def test_recorded_trim_keeps_head_families(spark=None):
@@ -253,7 +255,7 @@ def test_recorded_trim_keeps_head_families(spark=None):
         "spark_total_s": 1.0,
         "duckdb_total_s": 1.0,
         "spark_over_duckdb": 1.0,
-        "recorded_echo": xo_mod._recorded_echo(),
+        **_recorded(),
     }
     payload = {
         "metric": "headline_queries_total",
@@ -312,3 +314,17 @@ def test_integer_shed_keeps_sub_second_cells():
         isinstance(v, int) for k, v in out["queries"].items() if k.startswith("q")
     )
     assert out["queries"]["fast_cell"] == 0.4
+
+
+def test_every_echo_key_resolves_to_a_recorded_cell():
+    """A mistyped RECORDED_ECHO_KEYS family or tier would silently echo
+    [null, null]: every echoed (family, tier) must name a recorded cell
+    with a numeric spark_s."""
+    from tools import crossover as xo_mod
+
+    tables = xo_mod._all_recorded()
+    for fam, tiers in xo_mod.RECORDED_ECHO_KEYS.items():
+        for t in tiers:
+            cell = tables.get(fam, {}).get(t)
+            assert cell is not None, (fam, t)
+            assert isinstance(cell.get("spark_s"), (int, float)), (fam, t, cell)

@@ -70,7 +70,7 @@ def test_bench_tail_compaction_fits_driver_capture():
     import json
 
     import bench
-    from tools.crossover import RECORDED_DEDUP_TIERS
+    from tools.crossover import RECORDED_ECHO_KEYS, _all_recorded, _recorded_echo
 
     payload = {
         "metric": "headline_queries_total",
@@ -88,16 +88,22 @@ def test_bench_tail_compaction_fits_driver_capture():
             "spark_total_s": 123.456,
             "duckdb_total_s": 234.567,
             "spark_over_duckdb": 0.526,
-            "dedup_tier_recorded": RECORDED_DEDUP_TIERS,
+            "recorded_tiers": _all_recorded(),
+            "recorded_echo": _recorded_echo(),
         },
     }
     line = json.dumps(bench._compact_for_tail(payload), separators=(",", ":"))
     assert len(line) <= bench._TAIL_BUDGET, len(line)
     back = json.loads(line)
     assert back["value"] == 46.712 and len(back["queries"]) == len(bench.HEADLINE)
-    # recorded tiers survive compaction as [spark_s, duckdb_s] pairs
-    if "recorded" in back["crossover"]:
-        assert back["crossover"]["recorded"]["neardup_clusters"]["R50"][1] is None
+    # the recorded echo survives compaction as [spark_s, duckdb_s]
+    # pairs, its leading family first
+    rec = back["crossover"]["recorded"]
+    fam = next(iter(RECORDED_ECHO_KEYS))
+    assert list(rec)[0] == fam
+    assert rec[fam] == {
+        t: [round(a, 2), round(b, 2)] for t, (a, b) in _recorded_echo()[fam].items()
+    }
 
     # pathological growth still yields a parseable (shed) line
     payload["crossover"]["queries"] = {

@@ -146,17 +146,23 @@ def _jobs(spark, fn):
 
 
 def _stage_call_sites(spark, job_ids) -> list[str]:
-    """Long call site of every stage of ``job_ids``."""
+    """Long call site of every attempt of every stage of ``job_ids``.
+
+    A stage the job skipped (its shuffle output was reused) never ran,
+    and once the status store holds more than ``spark.ui.retainedStages``
+    it evicts skipped stages first — in a long suite that can happen
+    before this reads them. ``stageData`` returns no attempt for such a
+    stage instead of raising, as ``stageAttempt`` does."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
     no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
     sites = []
     for j in job_ids:
         for s in sc.statusTracker().getJobInfo(j).stageIds:
-            stage = store.stageAttempt(
-                s, 0, False, sc._jvm.java.util.ArrayList(), False, no_quantiles
-            )._1()
-            sites.append(stage.details())
+            attempts = store.stageData(
+                s, False, sc._jvm.java.util.ArrayList(), False, no_quantiles
+            )
+            sites += [attempts.apply(i).details() for i in range(attempts.size())]
     return sites
 
 

@@ -103,13 +103,14 @@ DEFAULT_QUERIES = [
 # DuckDB side is a recursive-CTE transitive closure that costs ~15 min
 # per invocation at 20×, too heavy for the thrice-repeated driver bench.
 # Measured numbers live in BASELINE.md ("Dedup/ANN family crossover")
-# and are echoed into the bench JSON below so every BENCH_r{N} snapshot
-# carries them; the `measured` field marks them as recorded, not re-run.
-# Keep this dict NUMBERS-ONLY: it is embedded in bench.py's single JSON
-# output line, and round 4's prose notes grew that line past the
-# driver's tail capture, destroying the artifact ("parsed": null in
-# BENCH_r04.json). All prose/context lives in BASELINE.md §"Dedup/ANN
-# family crossover"; "DNF" = DuckDB OutOfMemory (details there).
+# and every RECORDED_*_TIERS table rides the bench payload merged under
+# one `recorded_tiers` key (_all_recorded), so .bench_full.json carries
+# them; only the RECORDED_ECHO_KEYS subset reaches bench's stdout line.
+# Keep these dicts NUMBERS-ONLY: round 4's prose notes grew that line
+# past the driver's tail capture, destroying the artifact ("parsed":
+# null in BENCH_r04.json). All prose/context lives in BASELINE.md
+# §"Dedup/ANN family crossover"; "DNF" = DuckDB OutOfMemory (details
+# there).
 RECORDED_DEDUP_TIERS = {
     "note": "offline runs, see BASELINE.md 'Dedup/ANN family crossover'",
     "minhash_lsh_exact": {
@@ -1110,6 +1111,10 @@ _WEAK_CLASS_OVERRIDES: dict[str, str] = {
 
 
 def _all_recorded() -> dict:
+    """Every recorded table merged into {family: {tier: cell}}: the one
+    merge the echo, the weak dispositions and the bench payload read.
+    A family spread over several round tables keeps all its tiers; a
+    later table wins a tier recorded twice."""
     out: dict = {}
     for tbl in (
         RECORDED_DEDUP_TIERS, RECORDED_KV_TIERS, RECORDED_R6_TIERS,
@@ -1491,16 +1496,7 @@ def run_crossover(
         "spark_over_duckdb": (
             None if spark_only else round(spark_total / max(duck_total, 1e-9), 3)
         ),
-        "dedup_tier_recorded": RECORDED_DEDUP_TIERS,
-        "kv_tier_recorded": RECORDED_KV_TIERS,
-        "r6_tier_recorded": RECORDED_R6_TIERS,
-        "r7_tier_recorded": RECORDED_R7_TIERS,
-        "r8_tier_recorded": RECORDED_R8_TIERS,
-        "r9_tier_recorded": RECORDED_R9_TIERS,
-        "r10_tier_recorded": RECORDED_R10_TIERS,
-        "r11_tier_recorded": RECORDED_R11_TIERS,
-        "r12_tier_recorded": RECORDED_R12_TIERS,
-        "r13_tier_recorded": RECORDED_R13_TIERS,
+        "recorded_tiers": _all_recorded(),
         "recorded_echo": _recorded_echo(),
     }
 
@@ -1508,28 +1504,15 @@ def run_crossover(
 def _recorded_echo() -> dict:
     """The curated stdout subset of the recorded tiers (see
     RECORDED_ECHO_KEYS): {family: {tier: [spark_s, duckdb_s]}}."""
-    src = {
-        **RECORDED_DEDUP_TIERS,
-        **RECORDED_KV_TIERS,
-        **RECORDED_R6_TIERS,
-        **RECORDED_R7_TIERS,
-        **RECORDED_R8_TIERS,
-        **RECORDED_R9_TIERS,
-        **RECORDED_R10_TIERS,
-        **RECORDED_R11_TIERS,
-        **RECORDED_R12_TIERS,
-        **RECORDED_R13_TIERS,
-    }
-    return {
-        fam: {
-            t: [
-                (src.get(fam) or {}).get(t, {}).get("spark_s"),
-                (src.get(fam) or {}).get(t, {}).get("duckdb_s"),
-            ]
+    src = _all_recorded()
+    echo = {}
+    for fam, tiers in RECORDED_ECHO_KEYS.items():
+        cells = src.get(fam, {})
+        echo[fam] = {
+            t: [cells.get(t, {}).get("spark_s"), cells.get(t, {}).get("duckdb_s")]
             for t in tiers
         }
-        for fam, tiers in RECORDED_ECHO_KEYS.items()
-    }
+    return echo
 
 
 if __name__ == "__main__":
