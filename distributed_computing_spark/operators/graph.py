@@ -31,36 +31,19 @@ dangling-mass redistribution is needed — asserted, not assumed.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.caching import track_persist
 
-# AQE-off clones per (parent session, static shuffle partitions). A
-# below-gate graph build reuses its clone instead of calling
-# ``newSession()`` every time, so the clone's catalog memo (schemas,
-# footer counts) hits on the next build. Weak on the parent: a clone
-# holds the SparkContext, not the parent session, so the memo never
-# keeps the parent alive, and a stopped-then-recreated parent is a new
-# key with a fresh clone (the sources/catalog.py pattern).
-_STATIC: weakref.WeakKeyDictionary[SparkSession, dict[int, SparkSession]] = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def _static_session(spark: SparkSession, partitions: int) -> SparkSession:
-    """A clone of ``spark`` with AQE off and ``partitions`` static
-    shuffle partitions, made once per (session, partitions). The
-    parent's conf is untouched."""
-    clones = _STATIC.setdefault(spark, {})
-    if partitions not in clones:
-        s = spark.newSession()
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        s.conf.set("spark.sql.shuffle.partitions", str(partitions))
-        clones[partitions] = s
-    return clones[partitions]
+    """A new clone of ``spark`` with AQE off and ``partitions`` static
+    shuffle partitions; the parent's conf is untouched."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    return s
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:

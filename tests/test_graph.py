@@ -3,18 +3,10 @@ Python reference, structural invariants, and plan shape."""
 
 from __future__ import annotations
 
-import gc
-import subprocess
-import sys
-import textwrap
-import weakref
-from pathlib import Path
-
 import pytest
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.caching import release_tracked
-from distributed_computing_spark.operators import graph
 from distributed_computing_spark.operators.graph import (
     _static_session,
     copurchase_edges,
@@ -553,85 +545,16 @@ def test_bellman_ford_random_graphs_match_reference(spark, seed):
 
 # --- the AQE-off clone behind the graph gates -------------------------------
 
-_AQE = "spark.sql.adaptive.enabled"
-_PARTS = "spark.sql.shuffle.partitions"
 
-
-def _build_jobs(spark, sf_dir, group):
-    """(pagerank_parts DataFrame, ids of the jobs its build fired)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
+def test_graph_gates_build_on_an_aqe_off_clone(spark, sf_dir):
+    aqe, parts = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    before = (spark.conf.get(aqe), spark.conf.get(parts))
     try:
-        df = pagerank_parts(spark, sf_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return df, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_pagerank_builds_share_one_static_clone(spark, sf_dir):
-    before = (spark.conf.get(_AQE), spark.conf.get(_PARTS))
-    first, _ = _build_jobs(spark, sf_dir, "clone_build_1")
-    second, jobs = _build_jobs(spark, sf_dir, "clone_build_2")
-    try:
-        clone = _static_session(spark, 8)
-        assert first.sparkSession is clone and second.sparkSession is clone
+        clone = pagerank_parts(spark, sf_dir).sparkSession
         assert clone is not spark
-        assert (clone.conf.get(_AQE), clone.conf.get(_PARTS)) == ("false", "8")
-        assert (spark.conf.get(_AQE), spark.conf.get(_PARTS)) == before
-        # the triangle gate's 16-partition clone is a separate entry
-        assert _static_session(spark, 16).conf.get(_PARTS) == "16"
-        assert _static_session(spark, 16) is not clone
-        # the clone's catalog memo hits: no schema job on the second
-        # build, only pagerank's data-dependent deg.count() gate
-        assert len(jobs) <= 1, jobs
-        from tests.test_streaming import _stage_call_sites
-
-        sites = _stage_call_sites(spark, jobs)
-        assert not [s for s in sites if "DataFrameReader" in s], sites
-        assert first.collect() == second.collect()
+        assert (clone.conf.get(aqe), clone.conf.get(parts)) == ("false", "8")
+        other = _static_session(spark, 16)
+        assert (other.conf.get(aqe), other.conf.get(parts)) == ("false", "16")
+        assert (spark.conf.get(aqe), spark.conf.get(parts)) == before
     finally:
         release_tracked()
-
-
-def test_static_clone_memo_does_not_keep_the_parent_alive(spark):
-    parent = spark.newSession()
-    clone = _static_session(parent, 8)
-    assert clone.range(3).count() == 3
-    ref = weakref.ref(parent)
-    n = len(graph._STATIC)
-    del parent, clone
-    # pyspark's RDD.toDF closure holds the newest session; move it on
-    spark.newSession()
-    gc.collect()
-    assert ref() is None
-    assert len(graph._STATIC) == n - 1
-
-
-def test_stopped_then_recreated_parent_gets_a_fresh_clone():
-    """Run in a process of its own: stopping the suite's shared session
-    would break every later test."""
-    repo = Path(__file__).resolve().parents[1]
-    script = textwrap.dedent(f"""
-        import sys
-        sys.path.insert(0, {str(repo)!r})
-        from distributed_computing_spark.session import get_spark
-        from distributed_computing_spark.operators.graph import _static_session
-
-        s1 = get_spark(cpus=1, shuffle_partitions=1)
-        s1.sparkContext.setLogLevel("ERROR")
-        c1 = _static_session(s1, 8)
-        same = _static_session(s1, 8) is c1
-        s1.stop()
-        s2 = get_spark(cpus=1, shuffle_partitions=1)
-        c2 = _static_session(s2, 8)
-        print("CLONE", same, c2 is not c1, c2.range(5).count(),
-              c2.conf.get("spark.sql.adaptive.enabled"))
-        s2.stop()
-    """)
-    out = subprocess.run(
-        [sys.executable, "-c", script], cwd=repo, capture_output=True, text=True,
-        timeout=300,
-    )
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("CLONE")]
-    assert line, out.stderr[-2000:]
-    assert line[0].split()[1:] == ["True", "True", "5", "false"]

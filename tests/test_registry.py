@@ -67,9 +67,10 @@ def test_registry_matches_committed_snapshot():
     order ``__spark_entry__.queries()`` hands them to the driver's gate,
     the full name set, the sha256 of every oracle SQL string and the
     rows-only set. Positions 51+ are deliberately unpinned — everything
-    past the gate window looks queries up by name. The fixture changes
-    only with a deliberate rotation of ``registry._GATE_WINDOW`` or a
-    deliberate oracle edit."""
+    past the gate window looks queries up by name. The fixture is
+    regenerated, in the same change, by exactly three things: a rotation
+    of ``registry._GATE_WINDOW``, an oracle edit, and adding, removing or
+    renaming a query. Any other failure here is a broken contract."""
     import __spark_entry__ as e
 
     snap = json.loads(
