@@ -328,3 +328,101 @@ def test_every_echo_key_resolves_to_a_recorded_cell():
             cell = tables.get(fam, {}).get(t)
             assert cell is not None, (fam, t)
             assert isinstance(cell.get("spark_s"), (int, float)), (fam, t, cell)
+
+
+_XO_SCALING = ("dup_spans", "minhash_lsh_exact", "copurchase_triangles", "bigram_pmi")
+
+
+def _driver_payload() -> tuple[dict, dict]:
+    """A payload of the size bench.main builds on a driver run: every
+    HEADLINE timing, the four xo20: scaling cells, every DEFAULT_QUERIES
+    crossover cell (eight of them more than 2x, each with a
+    recorded far tier) and the live
+    `recorded_tiers`. Returns it with the {name: ratio} of its weak
+    cells."""
+    import bench
+    from tools import crossover as xo_mod
+
+    queries = {
+        name: round(1.0 + (i % 13) * 1.917, 3)
+        for i, name in enumerate(bench.HEADLINE)
+    }
+    # 0.44 stays 0.4; 0.96 and 1.46 round to 1.0 and 1.5 before the
+    # integer step, so they print 1 and 2
+    queries.update(top_orders=0.44, user_sessions=0.96, lang_id=1.46)
+    queries.update(
+        {f"xo20:{q}": 10.0 + 3.3 * i for i, q in enumerate(_XO_SCALING)}
+    )
+    # weak cells with a recorded far tier print the long disposition
+    # form, as on the driver's runs
+    far = [
+        n for n in xo_mod.DEFAULT_QUERIES
+        if xo_mod.weak_disposition(n, 3.0)[0] != "-"
+    ]
+    ratios = {name: 2.3 + 1.9 * ((3 * i) % 8) for i, name in enumerate(far[:8])}
+    xq = {
+        name: {"spark_s": round(4.0 * ratios.get(name, 0.7), 3), "duckdb_s": 4.0}
+        for name in xo_mod.DEFAULT_QUERIES
+    }
+    payload = {
+        "metric": "headline_queries_total",
+        "value": 164.549,
+        "unit": "sec",
+        "shared_prev_total": 160.748,
+        "queries": queries,
+        "sf": 0.1,
+        "crossover": {
+            "R": 20,
+            "rows": {t: 12_000_000 for t in ("documents", "events", "orders", "lineitem")},
+            "queries": xq,
+            "spark_total_s": 157.729,
+            "duckdb_total_s": 209.075,
+            "spark_over_duckdb": 0.754,
+            "recorded_tiers": xo_mod._all_recorded(),
+        },
+    }
+    return payload, ratios
+
+
+def test_driver_sized_payload_prints_the_driver_form():
+    """A driver-sized payload prints the form every driver record since
+    round 9 holds: integer timings (one decimal below 1 s), no per-query
+    crossover arrays, the 5 worst weak cells, and xo20: cells dropped
+    only from the end, only while the line is over budget."""
+    import bench
+
+    payload, ratios = _driver_payload()
+    out = bench._compact_for_tail(payload)
+    assert len(json.dumps(out, separators=(",", ":"))) <= bench._TAIL_BUDGET
+
+    q = out["queries"]
+    assert (q["top_orders"], q["user_sessions"], q["lang_id"]) == (0.4, 1, 2)
+    for k, v in q.items():
+        if payload["queries"][k] >= 1:
+            assert isinstance(v, int), (k, v)
+        else:
+            assert v == round(payload["queries"][k], 1), (k, v)
+
+    xo = out["crossover"]
+    assert list(xo) == [
+        "R", "spark_total_s", "duckdb_total_s", "spark_over_duckdb",
+        "weak", "n_weak_total",
+    ]
+    worst = sorted(ratios, key=lambda k: -round(ratios[k], 1))[:5]
+    assert list(xo["weak"]) == worst
+    for name, cell in xo["weak"].items():
+        assert cell.split(">")[0].split(":")[0] == str(round(ratios[name], 1))
+    assert xo["n_weak_total"] == len(ratios)
+
+    xo_all = [f"xo20:{c}" for c in _XO_SCALING]
+    kept = [k for k in q if k.startswith("xo20:")]
+    assert kept == xo_all[: len(kept)]
+    assert list(q)[: -len(kept) or None] == [
+        k for k in payload["queries"] if not k.startswith("xo20:")
+    ]
+    if len(kept) < len(xo_all):
+        # the guard stops as soon as the line fits: one more cell back
+        # would overflow
+        nxt = xo_all[len(kept)]
+        back = dict(out, queries={**q, nxt: int(payload["queries"][nxt])})
+        assert len(json.dumps(back, separators=(",", ":"))) > bench._TAIL_BUDGET
