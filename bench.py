@@ -240,10 +240,8 @@ def main() -> None:
 
     # The driver captures the LAST 2000 chars of stdout; round 4 lost
     # the artifact ("parsed": null) when this line outgrew the capture.
-    # Verbose payload goes to a local file; stdout gets a compacted line
-    # ([spark_s,duckdb_s] arrays, numbers-only recorded tiers) with a
-    # hard size guard that sheds optional sections before ever
-    # truncating mid-line again.
+    # The full payload goes to a local file; stdout gets the compact
+    # line _compact_for_tail builds.
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_full.json"),
         "w",
@@ -256,148 +254,60 @@ def main() -> None:
 _TAIL_BUDGET = 1900  # driver tail capture is 2000 chars; leave margin
 
 
-def _compact_for_tail(payload: dict) -> dict:
-    def r2(x):  # 2-decimal timings: the tail record trades 1 ms for fit
-        return round(x, 2) if isinstance(x, float) else x
+def _tail_timing(v):
+    """Whole seconds from 1 s up, one decimal below (a 0.4 s cell
+    rounded to 0 reads as dropped_from_bench). Rounds to one decimal
+    first, so 0.96 prints 1 and 1.46 prints 2."""
+    if not isinstance(v, float):
+        return v
+    v = round(v, 1)
+    return int(round(v)) if v >= 1 else v
 
+
+def _compact_for_tail(payload: dict) -> dict:
+    """The stdout form of the bench payload (full detail lives in
+    .bench_full.json): headline timings via _tail_timing; the crossover
+    summary without its per-query cells, row counts and recorded
+    tables, plus its 5 worst >2x cells; then trailing xo20: cells drop
+    while the line is over _TAIL_BUDGET. Never mutates ``payload``."""
     p = dict(payload)
-    # headline timings at 1 decimal: at 41 queries the 2-decimal form
-    # pushes the line past the tail budget and sheds the recorded echo;
-    # full 3-decimal timings live in .bench_full.json
-    p["queries"] = {
-        k: round(v, 1) if isinstance(v, float) else v
-        for k, v in p.get("queries", {}).items()
-    }
+    p["queries"] = {k: _tail_timing(v) for k, v in p.get("queries", {}).items()}
     xo = p.get("crossover")
     if isinstance(xo, dict):
-        # ADVICE r5: always shallow-copy before any pop — the recorded
-        # tier dicts are embedded by reference from module globals, and
-        # the shed loop below must never mutate the caller's payload.
-        xo = dict(xo)
-        # The full recorded-tier tables (`recorded_tiers`) never fit the
-        # tail capture next to the headline timings: they stay in
-        # .bench_full.json and BASELINE.md, and only `recorded_echo`, the
-        # curated subset (tools/crossover.RECORDED_ECHO_KEYS), rides
-        # stdout.
-        echo = xo.pop("recorded_echo", None)
-        xo.pop("recorded_tiers", None)
-        if "queries" in xo:
-            # VERDICT r7 item 3: the per-query crossover arrays get shed
-            # from the tail when the line outgrows the budget, which in
-            # round 7 erased the artifact trail of WHICH queries sit >2×.
-            # Distill the weak list first (only cells >2x, 1 decimal) —
-            # it is tiny and is never shed.
-            # VERDICT r11 item 6: each weak cell carries its far-tier
-            # disposition from the RECORDED tables, so a small-absolute
-            # fixed-cost floor (custdist: 54.8x at R20, 1.5 s absolute
-            # at R400) never reads like a genuinely open cell. Compact
-            # string form (tail budget): "<r20>><tier>:<far_ratio><c>"
+        cells = xo.get("queries", {})
+        p["crossover"] = xo = {
+            k: v for k, v in xo.items()
+            if k not in ("rows", "queries", "recorded_tiers")
+        }
+        weak = {}
+        for k, v in cells.items():
+            s, d = v.get("spark_s"), v.get("duckdb_s")
+            if isinstance(s, (int, float)) and isinstance(d, (int, float)) and d > 0 and s / d > 2:
+                weak[k] = round(s / d, 1)
+        if weak:
+            # each weak cell carries its far-tier disposition from the
+            # recorded tables (VERDICT r11 item 6), so a fixed-cost floor
+            # never reads like an open cell: "<r20>><tier>:<far_ratio><c>"
             # with class letter f=floor c=converging w=win n=noisy
-            # o=open; "<r20>:o" when no clean far tier is recorded.
-            try:
-                from tools.crossover import weak_disposition
-            except Exception:  # pragma: no cover - bench must not die on it
-                def weak_disposition(name, r):
-                    return ["-", None, "open"]
-            weak = {}
-            order = {}
-            for k, v in xo["queries"].items():
-                s, d = v.get("spark_s"), v.get("duckdb_s")
-                if isinstance(s, (int, float)) and isinstance(d, (int, float)) and d > 0 and s / d > 2:
-                    r = round(s / d, 1)
-                    tier, fr, cls = weak_disposition(k, r)
-                    if tier == "-":
-                        weak[k] = f"{r}:{cls[0]}"
-                    else:
-                        fr_s = "DNF" if fr is None else f"{fr}"
-                        weak[k] = f"{r}>{tier}:{fr_s}{cls[0]}"
-                    order[k] = r
-            if weak:
-                xo["weak"] = dict(
-                    sorted(weak.items(), key=lambda kv: -order[kv[0]])
+            # o=open, or "<r20>:<c>" when no far tier is recorded
+            from tools.crossover import weak_disposition
+
+            xo["weak"] = {}
+            for k in sorted(weak, key=lambda k: -weak[k])[:5]:
+                r = weak[k]
+                tier, fr, cls = weak_disposition(k, r)
+                xo["weak"][k] = (
+                    f"{r}:{cls[0]}" if tier == "-"
+                    else f"{r}>{tier}:{'DNF' if fr is None else fr}{cls[0]}"
                 )
-                # VERDICT r8 item 3: the shed loop may cap `weak` at
-                # its 10 worst cells — record the TOTAL count so a
-                # capped tail never reads as the full list.
-                xo["n_weak_total"] = len(weak)
-            xo["queries"] = {
-                k: [r2(v["spark_s"]), r2(v["duckdb_s"])]
-                for k, v in xo["queries"].items()
-            }
-        if echo:
-            # legend: values are [spark_s, duckdb_s]; null = DNF (BASELINE.md)
-            xo["recorded"] = {
-                fam: {t: [r2(a), r2(b)] for t, (a, b) in tiers.items()}
-                for fam, tiers in echo.items()
-            }
-        p["crossover"] = xo
+            xo["n_weak_total"] = len(weak)  # the full count, not just 5
 
-    def _len(d):
-        return len(json.dumps(d, separators=(",", ":")))
-
-    # shed optional detail, least essential first, until the line fits.
-    # Round 7: with 46 headline timings the live per-query crossover
-    # arrays no longer fit next to the curated recorded echo — shed
-    # the live arrays BEFORE the recorded slope cells (the totals +
-    # ratio still ride stdout; per-query lives in .bench_full.json).
-    # Round 8: two finer stages before dropping the recorded echo
-    # wholesale — cap the weak list at its 10 worst cells, then round
-    # the headline timings to integers (the driver-visible signal is
-    # which queries are slow, not their second decimal; full precision
-    # always lives in .bench_full.json).
-    # round 9: "_weak_cap5" added between the integer timings and the
-    # recorded drop — at 58 headline timings the line sat 15 chars over
-    # budget and the WHOLE 252-char recorded echo was sacrificed for
-    # it; trimming the weak list 10 -> 5 (n_weak_total keeps the count
-    # honest) is the cheaper cut.
-    # round 10: "_recorded_trim" added before the wholesale recorded
-    # drop — at 62 headline timings the full 7-family echo sat ~200
-    # chars over budget and vanished entirely (first clean r10 bench).
-    # The echo dict is ordered most-important-first (RECORDED_ECHO_KEYS
-    # puts the current round's stories at the head), so trimming
-    # families from the END keeps the newest datums on the tail.
-    # round 13: "_xo_trim" is the LAST resort — the xo20: scaling cells
-    # are the driver's only tail channel for the c8/c32 comparison
-    # (VERDICT r12 item 8), while the recorded echo is duplicated in
-    # crossover.py source + BASELINE.md for the judge — so the echo
-    # sheds first and the scaling cells only go when nothing else fits.
-    for drop in (
-        "rows", "queries", "_weak_cap", "_queries_int", "_weak_cap5",
-        "_recorded_trim", "recorded", "_xo_trim",
-    ):
-        if _len(p) <= _TAIL_BUDGET:
-            break
-        if drop == "_xo_trim":
-            qd = p.get("queries", {})
-            xo_keys = [k for k in qd if k.startswith("xo20:")]
-            while xo_keys and _len(p) > _TAIL_BUDGET:
-                qd.pop(xo_keys.pop(), None)
-            continue
-        if drop == "_recorded_trim":
-            xo2 = p.get("crossover")
-            if isinstance(xo2, dict) and isinstance(xo2.get("recorded"), dict):
-                fams = list(xo2["recorded"])
-                while len(fams) > 1 and _len(p) > _TAIL_BUDGET:
-                    xo2["recorded"] = {
-                        f: xo2["recorded"][f] for f in fams[:-1]
-                    }
-                    fams = fams[:-1]
-            continue
-        if drop in ("_weak_cap", "_weak_cap5"):
-            xo2 = p.get("crossover")
-            if isinstance(xo2, dict) and isinstance(xo2.get("weak"), dict):
-                n = 10 if drop == "_weak_cap" else 5
-                xo2["weak"] = dict(list(xo2["weak"].items())[:n])
-        elif drop == "_queries_int":
-            # sub-second cells keep one decimal: a 0.4 s cell rounded
-            # to 0 reads as dropped_from_bench
-            p["queries"] = {
-                k: (int(round(v)) if v >= 1 else round(v, 1))
-                if isinstance(v, float) else v
-                for k, v in p.get("queries", {}).items()
-            }
-        elif isinstance(p.get("crossover"), dict):
-            p["crossover"].pop(drop, None)
+    # the xo20: scaling cells are the driver's only tail channel for
+    # the c8/c32 comparison: the one thing cut to fit, from the end
+    qd = p["queries"]
+    xo_keys = [k for k in qd if k.startswith("xo20:")]
+    while xo_keys and len(json.dumps(p, separators=(",", ":"))) > _TAIL_BUDGET:
+        qd.pop(xo_keys.pop())
     return p
 
 

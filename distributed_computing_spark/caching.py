@@ -11,23 +11,17 @@ invocations accumulate cached blocks for the session lifetime.
 ``release_tracked()`` after each query's terminal action (the same
 discipline ``neardup_clusters`` applies inline, generalized to the
 lazy-builder case). tools/check_correctness.py, bench.py and the test
-session teardown all release.
-
-Scoping (ADVICE r4): ``_TRACKED`` is a process-global, which is correct
-for the repo's single-threaded harnesses but would let one request's
-``release_tracked()`` unpersist another's in-flight intermediate in a
-concurrent service. A service should wrap each request in
-``scoped_tracking()`` — a context manager that swaps in a private
-tracking list and unpersists exactly its own registrations on exit.
+session teardown all release. ``_TRACKED`` is a process-global, which
+fits the repo's single-threaded harnesses: under concurrent requests
+one ``release_tracked()`` would unpersist another's in-flight
+intermediate.
 """
 
 from __future__ import annotations
 
 import atexit
-import contextlib
 import shutil
 import tempfile
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
@@ -51,26 +45,6 @@ def track_persist(df: DataFrame, storage_level=None) -> DataFrame:
     df = df.persist(storage_level) if storage_level is not None else df.persist()
     _TRACKED.append(df)
     return df
-
-
-@contextlib.contextmanager
-def scoped_tracking() -> Iterator[list[DataFrame]]:
-    """Confine ``track_persist`` registrations to this scope: on exit,
-    unpersist exactly the intermediates registered inside it and
-    restore the enclosing tracker — the per-request discipline a
-    concurrent long-lived service needs (a global ``release_tracked``
-    there would unpersist another request's in-flight intermediate)."""
-    global _TRACKED
-    outer, _TRACKED = _TRACKED, []
-    try:
-        yield _TRACKED
-    finally:
-        for df in _TRACKED:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        _TRACKED = outer
 
 
 def release_tracked() -> None:

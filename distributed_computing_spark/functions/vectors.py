@@ -56,16 +56,6 @@ def dequantize(qstruct: Column) -> Column:
     )
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes for sign-LSH bucketing.
 

@@ -657,12 +657,13 @@ def events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CLOSED (round 5, VERDICT r4 item 8): the last untried lever — a
     # fused mapInPandas pre-agg, the shape that won word_count — LOSES
     # 2.5× here (0.64 s vs 1.61 s best-of-3 at the 20× tier, identical
-    # values; tools/events_windowed_probe.py). Per-row work is numeric
-    # (date_trunc + two sums), exactly what whole-stage codegen is best
-    # at; Arrow transfer + pandas groupby only pays off when the JVM
-    # alternative is explode/per-token expression trees. The residual
-    # ~9× vs DuckDB at small absolutes is engine fixed cost (bare scan
-    # is a third of the total); do not re-litigate without new evidence.
+    # values; events_windowed_probe.py, commit bcefe1f). Per-row work
+    # is numeric (date_trunc + two sums), exactly what whole-stage
+    # codegen is best at; Arrow transfer + pandas groupby only pays off
+    # when the JVM alternative is explode/per-token expression trees.
+    # The residual ~9× vs DuckDB at small absolutes is engine fixed cost
+    # (bare scan is a third of the total); do not re-litigate without
+    # new evidence.
     pre = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("window_start"),
         "event_type",

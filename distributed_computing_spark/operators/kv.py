@@ -264,24 +264,6 @@ def state_diff(ops: DataFrame, seq_from: int, seq_to: int) -> DataFrame:
     )
 
 
-def client_fold_check(ops: DataFrame) -> DataFrame:
-    """Port of the reference's linearizability invariant (§5 layer 3).
-
-    kvraft/test_test.go:51-77 checks each client's final value embeds
-    that client's own appends in order. Batch analog: per (client, key),
-    the deduped appends in seq order must appear as a subsequence of the
-    final state value. Returns per-key rows with both strings for
-    assertion in tests.
-    """
-    effective = dedup_ops(ops)
-    appends = (
-        effective.where(F.col("op") == "append")
-        .groupBy("key")
-        .agg(_ordered_concat("seq", "value").alias("appends_in_order"))
-    )
-    return replay(ops).join(appends, "key", "left")
-
-
 def merkle_digests(
     state: DataFrame,
     n_buckets: int = 256,

@@ -35,17 +35,6 @@ def key2shard(key: Column | str, nshards: int = NSHARDS) -> Column:
     return F.pmod(F.ascii(c), F.lit(nshards))
 
 
-def hash_shard(key: Column | str, nshards: int) -> Column:
-    """T6: general hash partitioner (Murmur3, Spark-native).
-
-    The reference uses FNV-32a (common_map.go:92-96); byte-parity is not
-    semantic, so we use Spark's hash — identical distribution behavior,
-    JVM-side, and consistent with what ``repartition(n, col)`` does.
-    """
-    c = F.col(key) if isinstance(key, str) else key
-    return F.pmod(F.hash(c), F.lit(nshards))
-
-
 @dataclass(frozen=True)
 class Config:
     """One shard-map version (shardmaster/common.go:24-32)."""

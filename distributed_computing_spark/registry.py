@@ -5358,7 +5358,7 @@ def _rev_mc():
     decimal×decimal multiply chain — algebraically identical
     (price·100 and disc·100 are exact integers; their long product is
     price·(1−disc)·10⁴, bounded ≤ ~1e11 per row, far under 2^63), and
-    the R400 probe (tools/probe_q11.py) measured the per-row decimal
+    the R400 probe (probe_q11.py, commit d8b78eb) measured the per-row decimal
     chain at ~8% of the whole 240 M-row rollup (13.7→10.3 s first-run,
     11.4→10.8-11.2 warm). Per-row value and type are unchanged, so
     every consumer's sums behave identically."""
@@ -5801,7 +5801,7 @@ def parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by |partsupp|, not |lineitem|). Part attrs and the (tiny)
     excluded-supplier set then broadcast onto the pair table — the
     anti-join is a broadcast left-anti over ~|partsupp| rows, never a
-    240 M-row join. R400 probe (tools/probe_q16_variance.py, warm,
+    240 M-row join. R400 probe (probe_q16_variance.py, commit d8b78eb, warm,
     default heap, solo): join-first 9.6-15.4 s → dedup-first
     7.4-10.4 s, answer-identical; GC halves (540 → 120-160 ms). The
     same probe showed the r11 "14-60 s variance" cell does NOT
@@ -7768,7 +7768,7 @@ def late_lines_priority_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final exchange. Counts are provably BIGINT-bounded (row
     counts).
 
-    Round-13 (VERDICT r12 item 5, tools/probe_bucketed_q4.py): the
+    Round-13 (VERDICT r12 item 5, probe_bucketed_q4.py, commit 84b5ad2): the
     "constant-factor single-node floor" is LAYOUT-DEPENDENT. On the
     R400 replica with orders+lineitem written bucketed by orderkey
     (32 buckets, one-time 99.9 s layout investment), the identical

@@ -76,9 +76,6 @@ def test_approx_distinct_within_error(spark, sf_dir):
 
 
 def test_entry_contract(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
 
     df = e.entry(spark)

@@ -487,27 +487,6 @@ def test_ngram_absolute_posting_guard(spark):
     assert unguarded.count() == 8 * 7 // 2
 
 
-def test_scoped_tracking_confines_release_to_its_own_persists(spark):
-    """ADVICE r5: a concurrent service wraps each request in
-    scoped_tracking() so releasing one request's intermediates cannot
-    unpersist another's in-flight persist tracked in the outer scope."""
-    from distributed_computing_spark import caching
-
-    caching.release_tracked()
-    outer_df = caching.track_persist(spark.range(10))
-    outer_df.count()
-    with caching.scoped_tracking() as inner:
-        inner_df = caching.track_persist(spark.range(20))
-        inner_df.count()
-        assert caching._TRACKED == [inner_df] and inner == [inner_df]
-        assert outer_df.storageLevel.useMemory
-    # exit: inner released, outer restored untouched
-    assert not inner_df.storageLevel.useMemory
-    assert caching._TRACKED == [outer_df]
-    assert outer_df.storageLevel.useMemory
-    caching.release_tracked()
-
-
 # --- exact substring-span dedup ---------------------------------------------
 
 

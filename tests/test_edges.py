@@ -65,12 +65,12 @@ def test_bench_tail_compaction_fits_driver_capture():
     """VERDICT r4 item 2: the driver records the LAST 2000 chars of
     bench stdout — BENCH_r04 lost its headline when the JSON line
     outgrew that. The compacted line must fit with margin for a
-    representative payload (30 headline + 14 crossover queries + every
-    recorded tier), and shedding must preserve the headline."""
+    representative payload (every headline timing + 14 crossover
+    queries + every recorded tier) and keep the headline."""
     import json
 
     import bench
-    from tools.crossover import RECORDED_ECHO_KEYS, _all_recorded, _recorded_echo
+    from tools.crossover import _all_recorded
 
     payload = {
         "metric": "headline_queries_total",
@@ -89,28 +89,19 @@ def test_bench_tail_compaction_fits_driver_capture():
             "duckdb_total_s": 234.567,
             "spark_over_duckdb": 0.526,
             "recorded_tiers": _all_recorded(),
-            "recorded_echo": _recorded_echo(),
         },
     }
     line = json.dumps(bench._compact_for_tail(payload), separators=(",", ":"))
     assert len(line) <= bench._TAIL_BUDGET, len(line)
     back = json.loads(line)
     assert back["value"] == 46.712 and len(back["queries"]) == len(bench.HEADLINE)
-    # the recorded echo survives compaction as [spark_s, duckdb_s]
-    # pairs, its leading family first
-    rec = back["crossover"]["recorded"]
-    fam = next(iter(RECORDED_ECHO_KEYS))
-    assert list(rec)[0] == fam
-    assert rec[fam] == {
-        t: [round(a, 2), round(b, 2)] for t, (a, b) in _recorded_echo()[fam].items()
-    }
+    assert back["crossover"]["spark_over_duckdb"] == 0.526
 
-    # pathological growth still yields a parseable (shed) line
+    # a long per-query crossover dict never reaches the line
     payload["crossover"]["queries"] = {
         f"very_long_crossover_query_name_padding_{i:03d}": {
             "spark_s": 1.0, "duckdb_s": 2.0}
         for i in range(60)
     }
     line2 = json.dumps(bench._compact_for_tail(payload), separators=(",", ":"))
-    assert len(line2) <= bench._TAIL_BUDGET
-    assert json.loads(line2)["crossover"]["spark_over_duckdb"] == 0.526
+    assert line2 == line

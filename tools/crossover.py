@@ -105,12 +105,10 @@ DEFAULT_QUERIES = [
 # Measured numbers live in BASELINE.md ("Dedup/ANN family crossover")
 # and every RECORDED_*_TIERS table rides the bench payload merged under
 # one `recorded_tiers` key (_all_recorded), so .bench_full.json carries
-# them; only the RECORDED_ECHO_KEYS subset reaches bench's stdout line.
-# Keep these dicts NUMBERS-ONLY: round 4's prose notes grew that line
-# past the driver's tail capture, destroying the artifact ("parsed":
-# null in BENCH_r04.json). All prose/context lives in BASELINE.md
-# §"Dedup/ANN family crossover"; "DNF" = DuckDB OutOfMemory (details
-# there).
+# them; bench's stdout line reads them only through the weak-cell
+# dispositions. Keep these dicts NUMBERS-ONLY: all prose/context lives
+# in BASELINE.md §"Dedup/ANN family crossover"; "DNF" = DuckDB
+# OutOfMemory (details there).
 RECORDED_DEDUP_TIERS = {
     "note": "offline runs, see BASELINE.md 'Dedup/ANN family crossover'",
     "minhash_lsh_exact": {
@@ -938,9 +936,9 @@ RECORDED_R11_TIERS: dict = {
 
 RECORDED_R12_TIERS: dict = {
     # VERDICT r11 item 3: parts_supplier_count's "14-60 s variance"
-    # did NOT reproduce (tools/probe_q16_variance.py: 4 warm runs
-    # 9.6-15.4 s, GC 230-540 ms — the 60 s r11 datum was host
-    # contention). The dedup-first re-plan (distinct (partkey,
+    # did NOT reproduce (probe_q16_variance.py, commit d8b78eb: 4
+    # warm runs 9.6-15.4 s, GC 230-540 ms — the 60 s r11 datum was
+    # host contention). The dedup-first re-plan (distinct (partkey,
     # suppkey) pairs BEFORE the part broadcast join) measured
     # 7.4-10.4 s on the same warmed replica, answer-identical, GC
     # halved; duckdb_s carries the r11 solo band (5.20-5.85) on the
@@ -1026,64 +1024,15 @@ RECORDED_R13_TIERS: dict = {
         "pkR20_8r": {"spark_s": 26.95, "duckdb_s": None},
     },
     # Round 13 (VERDICT r12 item 5): the Q12 bucketed-layout
-    # experiment (tools/probe_bucketed_q4.py) — same R400 replica,
-    # same session, orderkey-bucketed copies of both facts (one-time
-    # 99.9 s write): the fact-fact exchange disappears and the query
-    # drops ~3x, answer-identical; ratio vs the r12 DuckDB R400 cell
+    # experiment (probe_bucketed_q4.py, commit 84b5ad2) — same R400
+    # replica, same session, orderkey-bucketed copies of both facts
+    # (one-time 99.9 s write): the fact-fact exchange disappears and
+    # the query drops ~3x, answer-identical; ratio vs the r12 DuckDB R400 cell
     # (2.18 s) falls ~6x -> 1.6-2.0. The declared query still reads
     # plain parquet (input contract); this records the layout posture.
     "late_lines_priority_mix": {
         "R400_bucketed": {"spark_s": 3.85, "duckdb_s": 2.18, "ratio": 1.8},
     },
-}
-
-# The stdout-echo subset of the recorded tiers: the bench's compact
-# line must fit the driver's 2000-char tail capture alongside 40
-# headline timings, so only the CURRENT round's slope tiers plus the
-# two standing headline scale datums (the dedup-closure DNF, the KV
-# hot-key crossover win) ride stdout; every tier lives in
-# .bench_full.json and BASELINE.md.
-RECORDED_ECHO_KEYS: dict[str, tuple[str, ...]] = {
-    # Budgeted against the 58-query sf0.1 headline: the tail line must
-    # stay <= bench._TAIL_BUDGET or the shed loop drops the WHOLE
-    # recorded section (which is exactly what happened to the round-9
-    # first draft of this list — 11 families no longer fit next to 58
-    # timings, and the echo vanished). ONE cell per headline STORY,
-    # hardest-won datums only; every other tier lives in
-    # .bench_full.json and BASELINE.md:
-    #   dedup-closure DNF, the KV hot-key win, the kmeans win, the
-    #   FastSS near-flat endpoint, the second recursive-closure DNF,
-    #   and the round-9 spearman skew-fix flip.
-    # (round 10: the spearman R100 echo rotates out for the two new
-    # round-10 stories — the Q21 window-decorrelation FLIP and the
-    # weighted-median near-parity endpoint; spearman's full slope
-    # stays in .bench_full.json/BASELINE.md. ORDER MATTERS: bench's
-    # "_recorded_trim" shed stage drops families from the END, so the
-    # current round's stories lead and the standing datums trail.)
-    # (round 11: the two r10 stories — Q21 flip, weighted-median
-    # parity — rotate out for the round-11 pair: the Q20
-    # double-granularity 22.5× flip and the Q16 distinct-census flip;
-    # the full grid stays in .bench_full.json/BASELINE.md.)
-    # (round 11 late: the winnowing pair flip joins the echo — the
-    # largest late-round story; the full grid stays in
-    # .bench_full.json/BASELINE.md.)
-    # (round 11 late batch 9: link prediction's first-tier flip joins;
-    # neardup_clusters' standing DNF datum rotates out to make room —
-    # it remains in .bench_full.json/BASELINE.md. parts_supplier_count
-    # leaves the echo entirely: its R400 flip was RETRACTED on the
-    # default-heap re-measurement — see RECORDED_R11_TIERS.)
-    # (round 12: the R200 slope cell replaces R100 in the echo — the
-    # stronger datum; the full slope stays in BASELINE/.bench_full.)
-    # (round 13: the ngram two-engine R20 win leads the echo — the
-    # round's headline story; copurchase_components rotates out to
-    # keep the tail budget, full grid in .bench_full.json/BASELINE.)
-    "ngram_jaccard_pairs": ("R20",),
-    "copurchase_link_prediction": ("R200",),
-    "dominant_part_suppliers": ("R400",),
-    "winnow_neardup": ("R100",),
-    "kv_replay_hotkey": ("R500",),
-    "kmeans_embeddings": ("R50",),
-    "edit1_customer_pairs": ("R10",),
 }
 
 
@@ -1099,9 +1048,9 @@ RECORDED_ECHO_KEYS: dict[str, tuple[str, ...]] = {
 #   noisy      — far-tier band not yet reproducible (named in VERDICT)
 #   open       — no clean far tier recorded, or ratio not falling
 _WEAK_CLASS_OVERRIDES: dict[str, str] = {
-    # Round-12 decomposition (tools/probe_q11.py): the bare global
-    # sum of the revenue expression over 240 M rows is 8.4-9.3 s of
-    # the ~10-15 s total — the cell is single-pass SCAN-bound on both
+    # Round-12 decomposition (probe_q11.py, commit d8b78eb): the bare
+    # global sum of the revenue expression over 240 M rows is 8.4-9.3 s
+    # of the ~10-15 s total — the cell is single-pass SCAN-bound on both
     # engines (ratio tracks relative parquet-decode+expression
     # throughput, flat with scale), not plan-bound. "floor" despite
     # the ~10 s absolute: there is no structural re-plan, both sides
@@ -1112,7 +1061,7 @@ _WEAK_CLASS_OVERRIDES: dict[str, str] = {
 
 def _all_recorded() -> dict:
     """Every recorded table merged into {family: {tier: cell}}: the one
-    merge the echo, the weak dispositions and the bench payload read.
+    merge the weak dispositions and the bench payload read.
     A family spread over several round tables keeps all its tiers; a
     later table wins a tier recorded twice."""
     out: dict = {}
@@ -1497,22 +1446,7 @@ def run_crossover(
             None if spark_only else round(spark_total / max(duck_total, 1e-9), 3)
         ),
         "recorded_tiers": _all_recorded(),
-        "recorded_echo": _recorded_echo(),
     }
-
-
-def _recorded_echo() -> dict:
-    """The curated stdout subset of the recorded tiers (see
-    RECORDED_ECHO_KEYS): {family: {tier: [spark_s, duckdb_s]}}."""
-    src = _all_recorded()
-    echo = {}
-    for fam, tiers in RECORDED_ECHO_KEYS.items():
-        cells = src.get(fam, {})
-        echo[fam] = {
-            t: [cells.get(t, {}).get("spark_s"), cells.get(t, {}).get("duckdb_s")]
-            for t in tiers
-        }
-    return echo
 
 
 if __name__ == "__main__":
