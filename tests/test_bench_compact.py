@@ -40,28 +40,37 @@ def _payload(with_queries: bool) -> dict:
     }
 
 
-def test_compact_does_not_mutate_payload_or_tier_globals(monkeypatch):
+def _assert_pure_compaction(monkeypatch, with_queries: bool) -> None:
     """Neither the compaction nor the xo20: guard touches the caller's
-    payload or the module tables, with or without per-query crossover
-    cells; the tail keeps only the crossover summary."""
+    payload or the module tables; the tail keeps only the crossover
+    summary."""
     import bench
     from tools import crossover as xo_mod
 
     # force the guard to drop every xo20: cell
     monkeypatch.setattr(bench, "_TAIL_BUDGET", 1)
-    for with_queries in (True, False):
-        payload = _payload(with_queries)
-        payload["queries"]["xo20:dup_spans"] = 20.1
-        before = copy.deepcopy(payload)
-        tables = copy.deepcopy(xo_mod._all_recorded())
-        out = bench._compact_for_tail(payload)
-        assert payload == before, "caller's payload mutated"
-        # the tier cells are shared with the module globals: those must
-        # be untouched too
-        assert xo_mod._all_recorded() == tables
-        assert out["queries"] == {"word_count_top10": 2}
-        weak = {"weak": {"word_count_top10": "7.0:o"}, "n_weak_total": 1}
-        assert out["crossover"] == {"R": 20, **(weak if with_queries else {})}
+    payload = _payload(with_queries)
+    payload["queries"]["xo20:dup_spans"] = 20.1
+    before = copy.deepcopy(payload)
+    tables = copy.deepcopy(xo_mod._all_recorded())
+    out = bench._compact_for_tail(payload)
+    assert payload == before, "caller's payload mutated"
+    # the tier cells are shared with the module globals: those must be
+    # untouched too
+    assert xo_mod._all_recorded() == tables
+    assert out["queries"] == {"word_count_top10": 2}
+    weak = {"weak": {"word_count_top10": "7.0:o"}, "n_weak_total": 1}
+    assert out["crossover"] == {"R": 20, **(weak if with_queries else {})}
+
+
+def test_compact_does_not_mutate_payload_or_tier_globals(monkeypatch):
+    _assert_pure_compaction(monkeypatch, with_queries=True)
+
+
+def test_shed_without_queries_copies_crossover(monkeypatch):
+    """Without per-query crossover cells the guard still works on a
+    copy: the caller's crossover dict keeps every key."""
+    _assert_pure_compaction(monkeypatch, with_queries=False)
 
 
 def test_compact_line_fits_tail_budget():
