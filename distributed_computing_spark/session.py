@@ -11,6 +11,15 @@ config here is chosen for the 1000-executor / 100 TB posture:
 - Broadcast threshold sized so TPC-H-style dimension tables
   (region/nation/supplier/part at any sane SF) broadcast instead of
   shuffling the fact table.
+- Python workers fork from ``distributed_computing_spark.pyworker``, which
+  is pyspark's own daemon with one patch: pyspark invalidates import
+  caches before every task, and on CPython 3.10/3.11 that makes each
+  ``zipimporter`` eagerly re-read its whole archive (about 16 importers
+  into ``pyspark.zip`` per worker, most of a small task's CPU). The patch
+  re-reads only an archive whose size or mtime changed. It is safe in
+  local mode: the daemon runs on the driver's host with the package on
+  its ``PYTHONPATH`` (set below), a new py-file gets a new importer, and
+  a rewritten archive changes its signature, so it is still re-read.
 """
 
 from __future__ import annotations
@@ -78,6 +87,7 @@ def get_spark(
         # the cwd. Local-mode workers merge this with the process
         # PYTHONPATH; on a cluster, ship the package with --py-files.
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.python.daemon.module", "distributed_computing_spark.pyworker")
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     )

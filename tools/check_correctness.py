@@ -3,6 +3,7 @@
 Runs every queries() entry at a given SF, compares row count, column
 names, and order-insensitive value multiset against the DuckDB oracle.
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+(sf_dir defaults to the repository's copy of the sf0.01 tables).
 """
 
 from __future__ import annotations
@@ -11,7 +12,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -19,8 +21,7 @@ from __spark_entry__ import oracle_sql, queries
 from distributed_computing_spark.caching import release_tracked
 from distributed_computing_spark.session import get_spark
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = set(sys.argv[2:])
+DEFAULT_SF_DIR = os.path.join(ROOT, "perfbench", "data", "sf0.01")
 
 
 def norm_cell(v):
@@ -43,19 +44,19 @@ def multiset(rows, cols):
     return sorted("|".join(norm_cell(r[i]) for i in order) for r in rows)
 
 
-def main() -> None:
+def main(sf_dir: str, only: set[str]) -> None:
     spark = get_spark(cpus=8, shuffle_partitions=8)
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem events documents embeddings").split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     qs, oracles = queries(), oracle_sql()
     n_pass = n_fail = 0
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             srows = sdf.collect()
             scols = sdf.columns
         except Exception as e:
@@ -95,4 +96,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR, set(sys.argv[2:]))
