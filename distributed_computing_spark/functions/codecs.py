@@ -6,9 +6,8 @@ the BMP/PNG output, any audio player the WAV, any video player the
 AVI — implemented with struct+numpy+zlib so the decode path has no
 PIL/ffmpeg dependency (both absent in this container). They make the
 multimodal decode pipeline end-to-end real. Baseline JPEG lives in the
-sibling functions/jpeg.py (round 5, pure-numpy DCT); only MP3's
-psychoacoustic MDCT still genuinely needs a library (the ``_HAS_PIL``
-gate in operators/multimodal.py).
+sibling functions/jpeg.py (pure-numpy DCT); only MP3's psychoacoustic
+MDCT still genuinely needs a library.
 
 Format notes:
 - BMP: ``BM`` magic, BITMAPFILEHEADER(14) + BITMAPINFOHEADER(40),

@@ -5,14 +5,19 @@ The GENERIC decode kernels (`decode_images`/`decode_audio`) sniff the
 container's magic bytes and dispatch to the repo's REAL pure-python
 decoders — BMP/WAV/AVI/PNG/GIF (functions/codecs.py), baseline JPEG
 (functions/jpeg.py), the MP3 frame layer (functions/mp3.py) — no PIL
-or ffmpeg needed (round 8; previously the generic path always faked).
-Only a blob matching no known magic (or failing its format's parse)
-falls to a clearly-marked deterministic fake, so the Spark-side
-plumbing — schemas, batch iteration, partition sizing, UDF signatures
-— is identical for decodable and undecodable inputs; swap the fake
-for a PIL/ffmpeg call and nothing else changes. MP3's nonzero-spectrum
-transform decode raises its recorded dead end (ISO tables) rather than
-faking a known format.
+or ffmpeg needed. Only a blob matching no known magic (or failing its
+format's parse) falls to a clearly-marked deterministic fake, so the
+Spark-side plumbing — schemas, batch iteration, partition sizing, UDF
+signatures — is identical for decodable and undecodable inputs. MP3's
+nonzero-spectrum transform decode raises its recorded dead end (ISO
+tables) rather than faking a known format.
+
+Every per-row Arrow stage goes through ``_map_rows``: one batch loop
+whose output frame takes each column's dtype from the declared DDL
+schema, so a batch that emits no rows still converts instead of
+inferring float64 for a long/binary/array column. Only
+``decode_images_png`` keeps a batch-level body (its unfilter runs over
+the whole batch) and shares the frame maker.
 
 Scale notes: binary payloads ride ``BinaryType`` columns in parquet;
 ``mapInPandas`` streams Arrow batches so one task never materializes
@@ -23,13 +28,33 @@ decode before shuffle is the rule (ship features, not pixels).
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
+from distributed_computing_spark.functions.codecs import (
+    decode_avi,
+    decode_bmp,
+    decode_gif,
+    decode_png,
+    decode_png_headers,
+    decode_wav,
+    encode_avi,
+    encode_bmp,
+    encode_gif,
+    encode_png,
+    encode_wav,
+    mean_pool,
+    unfilter_scanlines_batch,
+)
+from distributed_computing_spark.functions.jpeg import Q_FLAT16, decode_jpeg, encode_jpeg
+from distributed_computing_spark.functions.mp3 import decode_mp3, encode_mp3_silence, parse_mp3
 from distributed_computing_spark.parallelism import spread_for_arrow
 
 BLOB_SCHEMA = (
@@ -38,6 +63,100 @@ BLOB_SCHEMA = (
 )
 
 FEATURE_DIM = 16
+
+_IMAGE_MEANS = (
+    "blob_id long, width int, height int, mean_r double, mean_g double, mean_b double"
+)
+
+# pandas dtype per Spark simpleString; every other type is an object column
+_PANDAS_DTYPES = {"bigint": "int64", "int": "int32", "double": "float64", "float": "float32"}
+
+
+def _frame_maker(schema: StructType) -> Callable[[list[tuple]], pd.DataFrame]:
+    """A function that turns a batch's output tuples into a frame with
+    every column pinned to its ``schema`` dtype — an empty or all-None
+    batch never infers float64 for a long/binary/array column."""
+    fields = [
+        (f.name, _PANDAS_DTYPES.get(f.dataType.simpleString(), object))
+        for f in schema.fields
+    ]
+
+    def build(rows: list[tuple]) -> pd.DataFrame:
+        cols = list(zip(*rows)) if rows else [()] * len(fields)
+        return pd.DataFrame(
+            {name: pd.Series(list(c), dtype=dt) for (name, dt), c in zip(fields, cols)}
+        )
+
+    return build
+
+
+def _map_rows(df: DataFrame, row_fn: Callable[..., Iterable[tuple]], schema: str) -> DataFrame:
+    """Arrow row map: ``row_fn`` gets each row of ``df`` as positional
+    values (in column order) and yields zero or more output tuples in
+    ``schema`` order; each batch's tuples become one dtype-pinned
+    frame. Works on streaming frames too (a stateless map). The DDL is
+    parsed once, when the operator is called, not per batch."""
+    out_schema = DataType.fromDDL(schema)
+    build = _frame_maker(out_schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield build(
+                [out for row in pdf.itertuples(index=False, name=None) for out in row_fn(*row)]
+            )
+
+    return df.mapInPandas(run, schema=out_schema)
+
+
+def _blob_table(docs: DataFrame, make_blob: Callable[[int], bytes]) -> DataFrame:
+    """One ``(blob_id, data)`` row per document: ``make_blob(doc_id)``
+    encodes the payload, on inputs spread over every core first."""
+    return _map_rows(
+        spread_for_arrow(docs.select("doc_id")),
+        lambda did: [(int(did), make_blob(int(did)))],
+        "blob_id long, data binary",
+    )
+
+
+def _solid_pixels(did: int, size: int = 16, f: int = 0) -> np.ndarray:
+    """A size×size frame of ONE color: (7, 13, 29)·did + (3, 5, 7)·f
+    mod 256 — the BMP/JPEG plant (f = 0) and frame f of an AVI plant."""
+    px = np.empty((size, size, 3), np.uint8)
+    px[...] = [(did * 7 + 3 * f) % 256, (did * 13 + 5 * f) % 256, (did * 29 + 7 * f) % 256]
+    return px
+
+
+def _two_band_pixels(did: int) -> np.ndarray:
+    """16×16, top half (7, 13, 29)·did, bottom half (11, 17, 23)·did mod
+    256 — the PNG/GIF plant, so each channel mean is (a + b) / 2."""
+    px = np.empty((16, 16, 3), np.uint8)
+    px[:8] = [(did * 7) % 256, (did * 13) % 256, (did * 29) % 256]
+    px[8:] = [(did * 11) % 256, (did * 17) % 256, (did * 23) % 256]
+    return px
+
+
+def _pooled_row(bid, img: np.ndarray, out_w: int, out_h: int, pool=mean_pool) -> tuple:
+    """(blob_id, width, height, mean_r, mean_g, mean_b) of a decoded
+    image after resizing it to (out_h, out_w); gray replicates."""
+    if img.shape[2] == 1:
+        img = np.repeat(img, 3, axis=2)
+    small = pool(img, out_h, out_w)
+    return (
+        int(bid),
+        img.shape[1],
+        img.shape[0],
+        *(float(small[..., c].mean()) for c in range(3)),
+    )
+
+
+def _decode_means(blobs: DataFrame, decode, out_w: int, out_h: int) -> DataFrame:
+    """The shared image-decoder path: ``decode(bytes)`` → mean-pool →
+    channel means, in the ``_IMAGE_MEANS`` contract."""
+    return _map_rows(
+        blobs.select("blob_id", "data"),
+        lambda bid, data: [_pooled_row(bid, decode(bytes(data)), out_w, out_h)],
+        _IMAGE_MEANS,
+    )
 
 
 def make_blob_table(spark, n: int = 64) -> DataFrame:
@@ -142,19 +261,14 @@ def _decode_rgb_any(data: bytes, width: int, height: int) -> np.ndarray:
     known magic — or that fails its format's parse (a text blob that
     happens to start with 'BM') — falls through to the deterministic
     fake, whose dimensions come from the meta struct."""
-    from distributed_computing_spark.functions import codecs, jpeg
-
     fmt = sniff_format(data)
     real = {
-        "png": codecs.decode_png,
-        "bmp": codecs.decode_bmp,
-        "gif": codecs.decode_gif,
-        "jpeg": jpeg.decode_jpeg,
+        "png": decode_png,
+        "bmp": decode_bmp,
+        "gif": decode_gif,
+        "jpeg": decode_jpeg,
     }.get(fmt)
     if real is not None:
-        import struct
-        import zlib
-
         try:
             return real(data)
         except (ValueError, IndexError, KeyError, struct.error, zlib.error):
@@ -162,58 +276,39 @@ def _decode_rgb_any(data: bytes, width: int, height: int) -> np.ndarray:
     return _fake_decode_rgb(data, width, height)
 
 
+def _block_mean(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
+    """Block-mean resize to (out_h, out_w) for any input shape (the
+    generic path's stand-in for ``mean_pool``, which needs divisible
+    shapes)."""
+    ys = np.linspace(0, img.shape[0], out_h + 1, dtype=int)
+    xs = np.linspace(0, img.shape[1], out_w + 1, dtype=int)
+    return np.array(
+        [
+            [img[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean(axis=(0, 1)) for j in range(out_w)]
+            for i in range(out_h)
+        ]
+    )
+
+
 def decode_images(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
     """Decode + resize image blobs → per-pixel-mean features.
 
-    mapInPandas: each Arrow batch decodes independently; output schema
-    is fixed so downstream plans don't depend on the codec. Non-image
-    rows are filtered before Python (predicate stays JVM-side).
-    Round 8: known containers (PNG/BMP/GIF/JPEG) route through the
-    REAL decoders via magic-byte sniff; the reported width/height are
-    then the DECODED dimensions, with the meta struct consulted only
-    for the unknown-format fake."""
+    Each Arrow batch decodes independently; output schema is fixed so
+    downstream plans don't depend on the codec. Non-image rows are
+    filtered before Python (predicate stays JVM-side). Known
+    containers (PNG/BMP/GIF/JPEG) route through the REAL decoders via
+    magic-byte sniff; the reported width/height are then the DECODED
+    dimensions, with the meta struct consulted only for the
+    unknown-format fake."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "blob_id": pdf["blob_id"],
-                "width": [],
-                "height": [],
-                "mean_r": [],
-                "mean_g": [],
-                "mean_b": [],
-            }
-            for data, w, h in zip(pdf["data"], pdf["width"], pdf["height"]):
-                img = _decode_rgb_any(bytes(data), int(w), int(h))
-                # "resize": block-mean down to (out_h, out_w)
-                ys = np.linspace(0, img.shape[0], out_h + 1, dtype=int)
-                xs = np.linspace(0, img.shape[1], out_w + 1, dtype=int)
-                small = np.array(
-                    [
-                        [
-                            img[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean(axis=(0, 1))
-                            for j in range(out_w)
-                        ]
-                        for i in range(out_h)
-                    ]
-                )
-                out["width"].append(int(img.shape[1]))
-                out["height"].append(int(img.shape[0]))
-                out["mean_r"].append(float(small[..., 0].mean()))
-                out["mean_g"].append(float(small[..., 1].mean()))
-                out["mean_b"].append(float(small[..., 2].mean()))
-            yield pd.DataFrame(out)
+    def row(bid, data, w, h):
+        img = _decode_rgb_any(bytes(data), int(w), int(h))
+        yield _pooled_row(bid, img, out_w, out_h, pool=_block_mean)
 
     imgs = blobs.where(F.col("modality") == "image").select(
-        "blob_id",
-        "data",
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
+        "blob_id", "data", "meta.width", "meta.height"
     )
-    return imgs.mapInPandas(
-        decode,
-        schema="blob_id long, width int, height int, mean_r double, mean_g double, mean_b double",
-    )
+    return _map_rows(imgs, row, _IMAGE_MEANS)
 
 
 def _decode_wave_any(
@@ -226,18 +321,16 @@ def _decode_wave_any(
     faking a known format). Unknown bytes (or magic false positives)
     fall through to the deterministic fake waveform sized from the
     meta duration."""
-    from distributed_computing_spark.functions import codecs, mp3
-
     fmt = sniff_format(data)
     if fmt == "wav":
         try:
-            samples, _rate = codecs.decode_wav(data)
+            samples, _rate = decode_wav(data)
             return samples.reshape(-1).astype(np.float64)
         except (ValueError, IndexError):
             pass
     elif fmt == "mp3":
         try:
-            return mp3.decode_mp3(data).reshape(-1).astype(np.float64)
+            return decode_mp3(data).reshape(-1).astype(np.float64)
         except ValueError:
             pass  # sync-byte false positive: not an MP3 stream
     n = max(int(duration_ms) * sample_rate // 1000, 1)
@@ -251,8 +344,8 @@ def _decode_wave_any(
 def decode_audio(blobs: DataFrame, sample_rate: int = 8000) -> DataFrame:
     """Decode audio blobs → waveform stats (n_samples, rms, peak).
 
-    Round 8: known containers route through the REAL decoders via the
-    same magic-byte sniff as decode_images (PCM WAV fully decoded; MP3
+    Known containers route through the REAL decoders via the same
+    magic-byte sniff as decode_images (PCM WAV fully decoded; MP3
     frame layer fully parsed with exact zero-spectrum PCM — nonzero
     spectra raise the recorded ISO-tables dead end). Only unknown
     formats get the deterministic fake waveform; swap it for
@@ -260,22 +353,14 @@ def decode_audio(blobs: DataFrame, sample_rate: int = 8000) -> DataFrame:
     are unchanged.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"blob_id": pdf["blob_id"], "n_samples": [], "rms": [], "peak": []}
-            for data, dur in zip(pdf["data"], pdf["duration_ms"]):
-                wave = _decode_wave_any(bytes(data), int(dur), sample_rate)
-                out["n_samples"].append(int(wave.shape[0]))
-                out["rms"].append(float(np.sqrt((wave**2).mean())))
-                out["peak"].append(float(np.abs(wave).max()))
-            yield pd.DataFrame(out)
+    def row(bid, data, dur):
+        wave = _decode_wave_any(bytes(data), int(dur), sample_rate)
+        yield int(bid), wave.shape[0], float(np.sqrt((wave**2).mean())), float(np.abs(wave).max())
 
     auds = blobs.where(F.col("modality") == "audio").select(
-        "blob_id", "data", F.col("meta.duration_ms").alias("duration_ms")
+        "blob_id", "data", "meta.duration_ms"
     )
-    return auds.mapInPandas(
-        decode, schema="blob_id long, n_samples long, rms double, peak double"
-    )
+    return _map_rows(auds, row, "blob_id long, n_samples long, rms double, peak double")
 
 
 def sample_frames(blobs: DataFrame, k: int = 4) -> DataFrame:
@@ -304,34 +389,22 @@ def extract_features(blobs: DataFrame) -> DataFrame:
     embedding → ANN pipeline composes end-to-end.
     """
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for data in pdf["data"]:
-                seed = hashlib.sha256(bytes(data)).digest()
-                raw = (seed * ((FEATURE_DIM + 31) // 32))[:FEATURE_DIM]
-                # bytes → finite floats in [-1, 1] (raw float32 reinterpret
-                # can yield inf/NaN), then unit-normalize
-                vec = (np.frombuffer(raw, dtype=np.uint8).astype(np.float32) - 127.5) / 127.5
-                vec = vec / (np.linalg.norm(vec) or 1.0)
-                feats.append([float(x) for x in vec])
-            # dtype pins (CLAUDE.md r11): an empty batch would infer
-            # float64 for the list column — the exact winnow Arrow
-            # NumPyConverter failure class (array<float> schema).
-            yield pd.DataFrame(
-                {
-                    "blob_id": pdf["blob_id"],
-                    "embedding": pd.Series(feats, dtype=object),
-                }
-            )
+    def row(bid, data):
+        seed = hashlib.sha256(bytes(data)).digest()
+        raw = (seed * ((FEATURE_DIM + 31) // 32))[:FEATURE_DIM]
+        # bytes → finite floats in [-1, 1] (raw float32 reinterpret
+        # can yield inf/NaN), then unit-normalize
+        vec = (np.frombuffer(raw, dtype=np.uint8).astype(np.float32) - 127.5) / 127.5
+        vec = vec / (np.linalg.norm(vec) or 1.0)
+        yield int(bid), [float(x) for x in vec]
 
-    return blobs.select("blob_id", "data").mapInPandas(
-        featurize, schema="blob_id long, embedding array<float>"
+    return _map_rows(
+        blobs.select("blob_id", "data"), row, "blob_id long, embedding array<float>"
     )
 
 
 # ---------------------------------------------------------------------------
-# REAL-codec path (uncompressed formats, pure-numpy codecs — no PIL)
+# REAL-codec path (pure-numpy codecs — no PIL)
 # ---------------------------------------------------------------------------
 
 
@@ -345,37 +418,17 @@ def bmp_wav_blobs(docs: DataFrame) -> DataFrame:
     stand-in. PNG/GIF/JPEG have their own real pure-python decoders
     (functions/codecs.py, functions/jpeg.py) reachable both through
     their dedicated operators and the GENERIC sniff dispatch."""
-    from distributed_computing_spark.functions.codecs import encode_bmp, encode_wav
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mods, datas = [], [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 2 == 0:
-                    px = np.zeros((16, 16, 3), np.uint8)
-                    px[..., 0] = (did * 7) % 256
-                    px[..., 1] = (did * 13) % 256
-                    px[..., 2] = (did * 29) % 256
-                    ids.append(did)
-                    mods.append("image")
-                    datas.append(encode_bmp(px))
-                else:
-                    i = np.arange(256, dtype=np.int64)
-                    s = ((did * 31 + i * 17) % 65536) - 32768
-                    ids.append(did)
-                    mods.append("audio")
-                    datas.append(encode_wav(s))
-            yield pd.DataFrame(
-                {
-                    "blob_id": pd.array(ids, dtype="int64"),
-                    "modality": mods,
-                    "data": datas,
-                }
-            )
+    def row(did):
+        did = int(did)
+        if did % 2 == 0:
+            yield did, "image", encode_bmp(_solid_pixels(did))
+        else:
+            i = np.arange(256, dtype=np.int64)
+            yield did, "audio", encode_wav(((did * 31 + i * 17) % 65536) - 32768)
 
-    return spread_for_arrow(docs.select("doc_id")).mapInPandas(
-        gen, schema="blob_id long, modality string, data binary"
+    return _map_rows(
+        spread_for_arrow(docs.select("doc_id")), row, "blob_id long, modality string, data binary"
     )
 
 
@@ -384,65 +437,25 @@ def decode_images_bmp(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> DataF
     padding, BGR order, bottom-up flip), exact mean-pool resize,
     per-channel means. Same Arrow plumbing and output contract as the
     gated stub path — real bytes in."""
-    from distributed_computing_spark.functions.codecs import decode_bmp, mean_pool
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "blob_id": pdf["blob_id"],
-                "width": [],
-                "height": [],
-                "mean_r": [],
-                "mean_g": [],
-                "mean_b": [],
-            }
-            for data in pdf["data"]:
-                img = decode_bmp(bytes(data))
-                small = mean_pool(img, out_h, out_w)
-                out["width"].append(img.shape[1])
-                out["height"].append(img.shape[0])
-                out["mean_r"].append(float(small[..., 0].mean()))
-                out["mean_g"].append(float(small[..., 1].mean()))
-                out["mean_b"].append(float(small[..., 2].mean()))
-            yield pd.DataFrame(out)
-
-    imgs = blobs.where(F.col("modality") == "image").select("blob_id", "data")
-    return imgs.mapInPandas(
-        run,
-        schema="blob_id long, width int, height int, "
-        "mean_r double, mean_g double, mean_b double",
-    )
+    imgs = blobs.where(F.col("modality") == "image")
+    return _decode_means(imgs, decode_bmp, out_w, out_h)
 
 
 def decode_audio_wav(blobs: DataFrame) -> DataFrame:
     """REAL audio decode: walk the RIFF chunks, parse PCM-16 samples,
     emit integer waveform stats (sum/peak are exact integers, so the
     gate hash carries no float risk)."""
-    from distributed_computing_spark.functions.codecs import decode_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "blob_id": pdf["blob_id"],
-                "n_samples": [],
-                "sample_rate": [],
-                "peak": [],
-                "sum_samples": [],
-            }
-            for data in pdf["data"]:
-                s, rate = decode_wav(bytes(data))
-                s64 = s.astype(np.int64)  # abs(int16 -32768) would wrap
-                out["n_samples"].append(len(s64))
-                out["sample_rate"].append(rate)
-                out["peak"].append(int(np.abs(s64).max()))
-                out["sum_samples"].append(int(s64.sum()))
-            yield pd.DataFrame(out)
+    def row(bid, data):
+        s, rate = decode_wav(bytes(data))
+        s64 = s.astype(np.int64)  # abs(int16 -32768) would wrap
+        yield int(bid), len(s64), rate, int(np.abs(s64).max()), int(s64.sum())
 
     auds = blobs.where(F.col("modality") == "audio").select("blob_id", "data")
-    return auds.mapInPandas(
-        run,
-        schema="blob_id long, n_samples int, sample_rate int, "
-        "peak long, sum_samples long",
+    return _map_rows(
+        auds,
+        row,
+        "blob_id long, n_samples int, sample_rate int, peak long, sum_samples long",
     )
 
 
@@ -450,25 +463,10 @@ def avi_blobs(docs: DataFrame, n_frames: int = 4, size: int = 8) -> DataFrame:
     """REAL-format video blobs: every doc carries a genuine
     uncompressed-DIB AVI (pure-numpy encoder, stock-player-openable)
     of ``n_frames`` solid-color frames derived from (doc_id, frame)."""
-    from distributed_computing_spark.functions.codecs import encode_avi
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, datas = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                frames = np.zeros((n_frames, size, size, 3), np.uint8)
-                for f in range(n_frames):
-                    frames[f, ..., 0] = (did * 7 + 3 * f) % 256
-                    frames[f, ..., 1] = (did * 13 + 5 * f) % 256
-                    frames[f, ..., 2] = (did * 29 + 7 * f) % 256
-                ids.append(did)
-                datas.append(encode_avi(frames))
-            yield pd.DataFrame(
-                {"blob_id": pd.array(ids, dtype="int64"), "data": datas}
-            )
-
-    return spread_for_arrow(docs.select("doc_id")).mapInPandas(gen, schema="blob_id long, data binary")
+    return _blob_table(
+        docs,
+        lambda did: encode_avi(np.stack([_solid_pixels(did, size, f) for f in range(n_frames)])),
+    )
 
 
 def sample_frames_avi(blobs: DataFrame, stride: int = 2) -> DataFrame:
@@ -476,40 +474,17 @@ def sample_frames_avi(blobs: DataFrame, stride: int = 2) -> DataFrame:
     walk), keep every ``stride``-th frame, emit per-frame channel
     means — the decode/frame-sample step of a video training pipeline,
     over genuine bytes."""
-    from distributed_computing_spark.functions.codecs import decode_avi
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "blob_id": [],
-                "frame_idx": [],
-                "mean_r": [],
-                "mean_g": [],
-                "mean_b": [],
-            }
-            for bid, data in zip(pdf["blob_id"], pdf["data"]):
-                frames = decode_avi(bytes(data))
-                for f in range(0, frames.shape[0], stride):
-                    m = frames[f].astype(np.float64).mean(axis=(0, 1))
-                    out["blob_id"].append(int(bid))
-                    out["frame_idx"].append(f)
-                    out["mean_r"].append(float(m[0]))
-                    out["mean_g"].append(float(m[1]))
-                    out["mean_b"].append(float(m[2]))
-            yield pd.DataFrame(
-                {
-                    "blob_id": pd.array(out["blob_id"], dtype="int64"),
-                    "frame_idx": pd.array(out["frame_idx"], dtype="int32"),
-                    "mean_r": out["mean_r"],
-                    "mean_g": out["mean_g"],
-                    "mean_b": out["mean_b"],
-                }
-            )
+    def row(bid, data):
+        frames = decode_avi(bytes(data))
+        for f in range(0, frames.shape[0], stride):
+            m = frames[f].astype(np.float64).mean(axis=(0, 1))
+            yield int(bid), f, float(m[0]), float(m[1]), float(m[2])
 
-    return blobs.mapInPandas(
-        run,
-        schema="blob_id long, frame_idx int, "
-        "mean_r double, mean_g double, mean_b double",
+    return _map_rows(
+        blobs.select("blob_id", "data"),
+        row,
+        "blob_id long, frame_idx int, mean_r double, mean_g double, mean_b double",
     )
 
 
@@ -517,31 +492,9 @@ def png_blobs(docs: DataFrame) -> DataFrame:
     """REAL compressed-format blob table over ``documents``: every doc
     carries a genuine 16×16 8-bit RGB PNG (two horizontal color bands
     derived from doc_id, Paeth-filtered scanlines, zlib-compressed
-    IDAT, CRC-checked chunks — stock viewers open them). PNG is the
-    round-4 bridge past the "compressed formats are env-blocked" line:
-    its only codec dependency is DEFLATE, which the stdlib ships; only
-    transform codecs (JPEG/MP3) still need PIL/ffmpeg."""
-    from distributed_computing_spark.functions.codecs import encode_png
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, datas = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                px = np.zeros((16, 16, 3), np.uint8)
-                px[:8, :, 0] = (did * 7) % 256
-                px[:8, :, 1] = (did * 13) % 256
-                px[:8, :, 2] = (did * 29) % 256
-                px[8:, :, 0] = (did * 11) % 256
-                px[8:, :, 1] = (did * 17) % 256
-                px[8:, :, 2] = (did * 23) % 256
-                ids.append(did)
-                datas.append(encode_png(px, filter_type=4))
-            yield pd.DataFrame(
-                {"blob_id": pd.array(ids, dtype="int64"), "data": datas}
-            )
-
-    return spread_for_arrow(docs.select("doc_id")).mapInPandas(gen, schema="blob_id long, data binary")
+    IDAT, CRC-checked chunks — stock viewers open them). Its only codec
+    dependency is DEFLATE, which the stdlib ships."""
+    return _blob_table(docs, lambda did: encode_png(_two_band_pixels(did), filter_type=4))
 
 
 def decode_images_png(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
@@ -550,101 +503,47 @@ def decode_images_png(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> DataF
     resize, per-channel means — same Arrow plumbing and output contract
     as decode_images_bmp, over genuinely compressed bytes.
 
-    Round 5: within each Arrow batch, same-shape images unfilter
-    TOGETHER via codecs.unfilter_scanlines_batch — the Sub/Avg/Paeth
-    recurrence is sequential along x, so the scalar path pays
-    H·stride Python steps per image; the batched path runs them once
-    as N-vector numpy ops (measured 28× on 16×16 RGB, bit-identical;
-    the decode-side analog of the fused-Arrow-pass wins). Odd shapes
-    fall back to the scalar decoder."""
-    from distributed_computing_spark.functions.codecs import (
-        decode_png,
-        decode_png_headers,
-        mean_pool,
-        unfilter_scanlines_batch,
-    )
+    Within each Arrow batch, same-shape images unfilter TOGETHER via
+    codecs.unfilter_scanlines_batch — the Sub/Avg/Paeth recurrence is
+    sequential along x, so the scalar path pays H·stride Python steps
+    per image; the batched path runs them once as N-vector numpy ops
+    (measured 28× on 16×16 RGB, bit-identical). Odd shapes fall back to
+    the scalar decoder."""
+    out_schema = DataType.fromDDL(_IMAGE_MEANS)
+    build = _frame_maker(out_schema)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = len(pdf)
-            widths = [0] * n
-            heights = [0] * n
-            means: list[tuple[float, float, float]] = [None] * n  # type: ignore
-
+            bids, datas = list(pdf["blob_id"]), [bytes(d) for d in pdf["data"]]
+            rows: list[tuple] = [()] * len(bids)
             # group same-(h,w,ch) images for the batched unfilter
             groups: dict[tuple[int, int, int], list[tuple[int, bytes]]] = {}
-            for idx, data in enumerate(pdf["data"]):
-                h, w, ch, raw = decode_png_headers(bytes(data))
+            for idx, data in enumerate(datas):
+                h, w, ch, raw = decode_png_headers(data)
                 groups.setdefault((h, w, ch), []).append((idx, raw))
             for (h, w, ch), members in groups.items():
                 if h % out_h == 0 and w % out_w == 0 and ch == 3:
-                    imgs = unfilter_scanlines_batch(
-                        [raw for _, raw in members], h, w, ch
-                    )
-                    for (idx, _), img in zip(members, imgs):
-                        small = mean_pool(img, out_h, out_w)
-                        widths[idx], heights[idx] = w, h
-                        means[idx] = (
-                            float(small[..., 0].mean()),
-                            float(small[..., 1].mean()),
-                            float(small[..., 2].mean()),
-                        )
+                    imgs = unfilter_scanlines_batch([raw for _, raw in members], h, w, ch)
                 else:  # scalar fallback for odd shapes / gray / RGBA
-                    for idx, _ in members:
-                        img = decode_png(bytes(pdf["data"].iloc[idx]))
-                        small = mean_pool(img, out_h, out_w)
-                        widths[idx], heights[idx] = img.shape[1], img.shape[0]
-                        means[idx] = (
-                            float(small[..., 0].mean()),
-                            float(small[..., 1].mean()),
-                            float(small[..., 2].mean()),
-                        )
-            out = {
-                "blob_id": pdf["blob_id"],
-                "width": widths,
-                "height": heights,
-                "mean_r": [m[0] for m in means],
-                "mean_g": [m[1] for m in means],
-                "mean_b": [m[2] for m in means],
-            }
-            yield pd.DataFrame(out)
+                    imgs = [decode_png(datas[idx]) for idx, _ in members]
+                for (idx, _), img in zip(members, imgs):
+                    rows[idx] = _pooled_row(bids[idx], img, out_w, out_h)
+            yield build(rows)
 
-    return blobs.select("blob_id", "data").mapInPandas(
-        run,
-        schema="blob_id long, width int, height int, "
-        "mean_r double, mean_g double, mean_b double",
-    )
+    return blobs.select("blob_id", "data").mapInPandas(run, schema=out_schema)
 
 
 def jpeg_blobs(docs: DataFrame) -> DataFrame:
-    """REAL transform-codec blob table over ``documents`` (round 5):
-    every doc carries a genuine baseline JFIF JPEG — Annex K Huffman
-    tables, DCT + quantization, 0xFF-stuffed entropy stream; stock
-    viewers open them. The planted image is one SOLID color per doc_id
-    with a flat q=16 quantization table, so every 8×8 block is DC-only
-    and the lossy pipeline has an exact closed form the SQL oracle can
-    replicate (see functions/jpeg.py's exact-DC rounding contract).
-    This retires the repo's last fake-kernel line: after PNG (round 4,
-    stdlib zlib) and JPEG (pure-numpy DCT), only MP3's psychoacoustic
-    MDCT still genuinely needs a library."""
-    from distributed_computing_spark.functions.jpeg import Q_FLAT16, encode_jpeg
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, datas = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                px = np.zeros((16, 16, 3), np.uint8)
-                px[..., 0] = (did * 7) % 256
-                px[..., 1] = (did * 13) % 256
-                px[..., 2] = (did * 29) % 256
-                ids.append(did)
-                datas.append(encode_jpeg(px, qtables=(Q_FLAT16, Q_FLAT16)))
-            yield pd.DataFrame(
-                {"blob_id": pd.array(ids, dtype="int64"), "data": datas}
-            )
-
-    return spread_for_arrow(docs.select("doc_id")).mapInPandas(gen, schema="blob_id long, data binary")
+    """REAL transform-codec blob table over ``documents``: every doc
+    carries a genuine baseline JFIF JPEG — Annex K Huffman tables,
+    DCT + quantization, 0xFF-stuffed entropy stream; stock viewers
+    open them. The planted image is one SOLID color per doc_id with a
+    flat q=16 quantization table, so every 8×8 block is DC-only and
+    the lossy pipeline has an exact closed form the SQL oracle can
+    replicate (see functions/jpeg.py's exact-DC rounding contract)."""
+    return _blob_table(
+        docs, lambda did: encode_jpeg(_solid_pixels(did), qtables=(Q_FLAT16, Q_FLAT16))
+    )
 
 
 def decode_images_jpeg(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
@@ -652,36 +551,7 @@ def decode_images_jpeg(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> Data
     DHT, MCU entropy decode (DC prediction, run/size AC), dequantize,
     8×8 IDCT, YCbCr→RGB — same Arrow plumbing and output contract as
     decode_images_png, over genuinely DCT-compressed bytes."""
-    from distributed_computing_spark.functions.codecs import mean_pool
-    from distributed_computing_spark.functions.jpeg import decode_jpeg
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "blob_id": pdf["blob_id"],
-                "width": [],
-                "height": [],
-                "mean_r": [],
-                "mean_g": [],
-                "mean_b": [],
-            }
-            for data in pdf["data"]:
-                img = decode_jpeg(bytes(data))
-                if img.shape[2] == 1:  # grayscale: replicate channels
-                    img = np.repeat(img, 3, axis=2)
-                small = mean_pool(img, out_h, out_w)
-                out["width"].append(img.shape[1])
-                out["height"].append(img.shape[0])
-                out["mean_r"].append(float(small[..., 0].mean()))
-                out["mean_g"].append(float(small[..., 1].mean()))
-                out["mean_b"].append(float(small[..., 2].mean()))
-            yield pd.DataFrame(out)
-
-    return blobs.select("blob_id", "data").mapInPandas(
-        run,
-        schema="blob_id long, width int, height int, "
-        "mean_r double, mean_g double, mean_b double",
-    )
+    return _decode_means(blobs, decode_jpeg, out_w, out_h)
 
 
 def gif_blobs(docs: DataFrame) -> DataFrame:
@@ -689,28 +559,8 @@ def gif_blobs(docs: DataFrame) -> DataFrame:
     a genuine 16×16 GIF87a (two horizontal color bands from doc_id —
     the png_blobs pattern — palette-indexed, LZW-compressed sub-blocks;
     stock viewers open them). GIF closes the third compression family:
-    DEFLATE (PNG, round 4), DCT (JPEG, round 5), LZW (round 6)."""
-    from distributed_computing_spark.functions.codecs import encode_gif
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, datas = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                px = np.zeros((16, 16, 3), np.uint8)
-                px[:8, :, 0] = (did * 7) % 256
-                px[:8, :, 1] = (did * 13) % 256
-                px[:8, :, 2] = (did * 29) % 256
-                px[8:, :, 0] = (did * 11) % 256
-                px[8:, :, 1] = (did * 17) % 256
-                px[8:, :, 2] = (did * 23) % 256
-                ids.append(did)
-                datas.append(encode_gif(px))
-            yield pd.DataFrame(
-                {"blob_id": pd.array(ids, dtype="int64"), "data": datas}
-            )
-
-    return spread_for_arrow(docs.select("doc_id")).mapInPandas(gen, schema="blob_id long, data binary")
+    DEFLATE (PNG), DCT (JPEG), LZW."""
+    return _blob_table(docs, lambda did: encode_gif(_two_band_pixels(did)))
 
 
 def decode_images_gif(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
@@ -718,69 +568,27 @@ def decode_images_gif(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> DataF
     table, variable-width LSB-first LZW (clear/EOI, KwKwK, 4096
     reset), palette mapping, exact mean-pool resize, per-channel
     means — the decode_images_bmp/png output contract over LZW bytes."""
-    from distributed_computing_spark.functions.codecs import decode_gif, mean_pool
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            widths, heights, mr, mg, mb = [], [], [], [], []
-            for data in pdf["data"]:
-                img = decode_gif(bytes(data))
-                small = mean_pool(img, out_h, out_w)
-                heights.append(img.shape[0])
-                widths.append(img.shape[1])
-                mr.append(float(small[..., 0].mean()))
-                mg.append(float(small[..., 1].mean()))
-                mb.append(float(small[..., 2].mean()))
-            # dtype pins (CLAUDE.md r11): empty batch ⇒ bare lists
-            # would infer float64 against the long width/height schema
-            yield pd.DataFrame(
-                {
-                    "blob_id": pdf["blob_id"],
-                    "width": pd.Series(widths, dtype="int64"),
-                    "height": pd.Series(heights, dtype="int64"),
-                    "mean_r": pd.Series(mr, dtype="float64"),
-                    "mean_g": pd.Series(mg, dtype="float64"),
-                    "mean_b": pd.Series(mb, dtype="float64"),
-                }
-            )
-
-    return blobs.mapInPandas(
-        run,
-        schema="blob_id long, width int, height int, "
-        "mean_r double, mean_g double, mean_b double",
-    )
+    return _decode_means(blobs, decode_gif, out_w, out_h)
 
 
 def mp3_blobs(docs: DataFrame) -> DataFrame:
-    """REAL MPEG-1 Layer III blob table over ``documents`` (round 7):
-    every doc carries a spec-valid mono Layer III SILENCE stream
+    """REAL MPEG-1 Layer III blob table over ``documents``: every doc
+    carries a spec-valid mono Layer III SILENCE stream
     (2 + doc_id%3 frames, bitrate cycling all 14 CBR indices,
     doc-derived global_gain / scalefac_compress side-info fields) from
     functions/mp3.py's frame writer — stock players accept these. The
     zero-spectrum plant is what keeps the decode exactly closed-form
     without the non-derivable spec tables; the frame/side-info PARSE is
     fully real (see functions/mp3.py's honest-scope docstring)."""
-    from distributed_computing_spark.functions.mp3 import encode_mp3_silence
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, datas = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ids.append(did)
-                datas.append(
-                    encode_mp3_silence(
-                        n_frames=2 + did % 3,
-                        bitrate_index=1 + did % 14,
-                        global_gain=(did * 7) % 256,
-                        scalefac_compress=did % 16,
-                    )
-                )
-            yield pd.DataFrame(
-                {"blob_id": pd.array(ids, dtype="int64"), "data": datas}
-            )
-
-    return spread_for_arrow(docs.select("doc_id")).mapInPandas(gen, schema="blob_id long, data binary")
+    return _blob_table(
+        docs,
+        lambda did: encode_mp3_silence(
+            n_frames=2 + did % 3,
+            bitrate_index=1 + did % 14,
+            global_gain=(did * 7) % 256,
+            scalefac_compress=did % 16,
+        ),
+    )
 
 
 def decode_audio_mp3(blobs: DataFrame) -> DataFrame:
@@ -790,48 +598,32 @@ def decode_audio_mp3(blobs: DataFrame) -> DataFrame:
     side-info fields the oracle closed-forms, plus peak over the
     decoded PCM (exactly 0 for the silence plant). Same Arrow plumbing
     as decode_audio_wav."""
-    from distributed_computing_spark.functions.mp3 import decode_mp3, parse_mp3
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "blob_id": pdf["blob_id"],
-                "n_frames": [],
-                "bitrate_kbps": [],
-                "sample_rate": [],
-                "total_bytes": [],
-                "n_samples": [],
-                "peak": [],
-                "gg0": [],
-            }
-            for data in pdf["data"]:
-                raw = bytes(data)
-                frames = parse_mp3(raw)
-                pcm = decode_mp3(raw)
-                out["n_frames"].append(len(frames))
-                out["bitrate_kbps"].append(frames[0]["bitrate_kbps"])
-                out["sample_rate"].append(frames[0]["sample_rate"])
-                out["total_bytes"].append(len(raw))
-                out["n_samples"].append(len(pcm))
-                out["peak"].append(
-                    int(np.abs(pcm.astype(np.int64)).max(initial=0))
-                )
-                out["gg0"].append(
-                    frames[0]["side_info"]["granules"][0]["global_gain"]
-                )
-            yield pd.DataFrame(out)
+    def row(bid, data):
+        raw = bytes(data)
+        frames, pcm = parse_mp3(raw), decode_mp3(raw)
+        yield (
+            int(bid),
+            len(frames),
+            frames[0]["bitrate_kbps"],
+            frames[0]["sample_rate"],
+            len(raw),
+            len(pcm),
+            int(np.abs(pcm.astype(np.int64)).max(initial=0)),
+            frames[0]["side_info"]["granules"][0]["global_gain"],
+        )
 
-    return blobs.select("blob_id", "data").mapInPandas(
-        run,
-        schema="blob_id long, n_frames int, bitrate_kbps int, "
-        "sample_rate int, total_bytes long, n_samples long, "
-        "peak long, gg0 int",
+    return _map_rows(
+        blobs.select("blob_id", "data"),
+        row,
+        "blob_id long, n_frames int, bitrate_kbps int, sample_rate int, "
+        "total_bytes long, n_samples long, peak long, gg0 int",
     )
 
 
 # ---------------------------------------------------------------------------
-# Round 9: perceptual-hash image near-dup (the dedup family crossed with
-# the real-codec path)
+# Perceptual-hash image near-dup (the dedup family crossed with the
+# real-codec path)
 # ---------------------------------------------------------------------------
 
 # dHash geometry: an (HASH_W+1) x HASH_H integer point-sample grid gives
@@ -888,22 +680,7 @@ def textured_blobs(docs: DataFrame, group_size: int = 20) -> DataFrame:
     pair output — grow quadratically with the corpus). Payloads are
     genuine BMPs from the pure-numpy encoder; the decode side re-parses
     the real byte stream."""
-    from distributed_computing_spark.functions.codecs import encode_bmp
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, datas = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ids.append(did)
-                datas.append(encode_bmp(textured_pixels(did, group_size)))
-            yield pd.DataFrame(
-                {"blob_id": pd.array(ids, dtype="int64"), "data": datas}
-            )
-
-    return spread_for_arrow(docs.select("doc_id")).mapInPandas(
-        gen, schema="blob_id long, data binary"
-    )
+    return _blob_table(docs, lambda did: encode_bmp(textured_pixels(did, group_size)))
 
 
 def textured_pixels(did: int, group_size: int = 20) -> "np.ndarray":
@@ -934,22 +711,10 @@ def dhash_images(blobs: DataFrame) -> DataFrame:
     fake at 16x16) then the 56-bit integer dHash — the whole Arrow
     batch emits (blob_id, dhash BIGINT), so everything downstream of
     the Python stage is id+hash-sized."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = [
-                dhash_py(_decode_rgb_any(bytes(d), 16, 16))
-                for d in pdf["data"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "blob_id": pdf["blob_id"],
-                    "dhash": pd.array(hashes, dtype="int64"),
-                }
-            )
-
-    return blobs.select("blob_id", "data").mapInPandas(
-        run, schema="blob_id long, dhash long"
+    return _map_rows(
+        blobs.select("blob_id", "data"),
+        lambda bid, data: [(int(bid), dhash_py(_decode_rgb_any(bytes(data), 16, 16)))],
+        "blob_id long, dhash long",
     )
 
 
@@ -1044,33 +809,15 @@ def textured_avi_blobs(
     genuine uncompressed-DIB AVIs (pure-numpy encoder); solid-frame
     ``avi_blobs`` stays the decode/frame-sample fixture (its dHash
     would be degenerate — no gradients)."""
-    from distributed_computing_spark.functions.codecs import encode_avi
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, datas = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                seed, member = did // group_size, did % group_size
-                frames = np.stack(
-                    [
-                        textured_pixels(seed * 997 + f * 31, 1)
-                        for f in range(n_frames)
-                    ]
-                )
-                slot = member % n_frames
-                frames[slot] = textured_pixels(
-                    500_000 + seed * 997 + slot * 31 + member, 1
-                )
-                ids.append(did)
-                datas.append(encode_avi(frames))
-            yield pd.DataFrame(
-                {"blob_id": pd.array(ids, dtype="int64"), "data": datas}
-            )
+    def make_blob(did: int) -> bytes:
+        seed, member = did // group_size, did % group_size
+        frames = np.stack([textured_pixels(seed * 997 + f * 31, 1) for f in range(n_frames)])
+        slot = member % n_frames
+        frames[slot] = textured_pixels(500_000 + seed * 997 + slot * 31 + member, 1)
+        return encode_avi(frames)
 
-    return spread_for_arrow(docs.select("doc_id")).mapInPandas(
-        gen, schema="blob_id long, data binary"
-    )
+    return _blob_table(docs, make_blob)
 
 
 def video_frame_hashes(blobs: DataFrame) -> DataFrame:
@@ -1078,27 +825,13 @@ def video_frame_hashes(blobs: DataFrame) -> DataFrame:
     (nested RIFF walk) then the shared integer dHash per frame — the
     Arrow stage emits (blob_id, frame_idx, dhash), so everything
     downstream is id+hash-sized."""
-    from distributed_computing_spark.functions.codecs import decode_avi
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bids, idxs, hs = [], [], []
-            for bid, data in zip(pdf["blob_id"], pdf["data"]):
-                frames = decode_avi(bytes(data))
-                for f in range(frames.shape[0]):
-                    bids.append(int(bid))
-                    idxs.append(f)
-                    hs.append(dhash_py(frames[f]))
-            yield pd.DataFrame(
-                {
-                    "blob_id": pd.array(bids, dtype="int64"),
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "dhash": pd.array(hs, dtype="int64"),
-                }
-            )
+    def row(bid, data):
+        for f, frame in enumerate(decode_avi(bytes(data))):
+            yield int(bid), f, dhash_py(frame)
 
-    return blobs.select("blob_id", "data").mapInPandas(
-        run, schema="blob_id long, frame_idx int, dhash long"
+    return _map_rows(
+        blobs.select("blob_id", "data"), row, "blob_id long, frame_idx int, dhash long"
     )
 
 
@@ -1107,7 +840,7 @@ def video_neardup_pairs(
     min_shared: int = 4,
     max_bucket: int = 1_000,
 ) -> DataFrame:
-    """Video near-dup via FRAME-HASH OVERLAP (round 9): two videos are
+    """Video near-dup via FRAME-HASH OVERLAP: two videos are
     near-duplicates when they share >= min_shared distinct frame
     hashes — the standard shot-level video dedup shape (hash each
     sampled frame, join on exact hash, count agreements). The join is

@@ -13,6 +13,7 @@ covered by recall/error-bound tests in tests/.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -22,6 +23,7 @@ from distributed_computing_spark.operators import (
     analytics,
     curation,
     dedup,
+    multimodal,
     similarity,
     textstats,
 )
@@ -532,7 +534,12 @@ r AS (
 SELECT q_id, nn_id, rank FROM r WHERE rank <= {k}"""
 
 
-_CURATED_WRITTEN: set[tuple[int, str]] = set()
+# Per session, sf_dir -> where its curated corpus was written: a
+# ``session_tmpdir`` (removed at interpreter exit), written once per
+# session + sf. Weak on the session, like the catalog memo.
+_CURATED: weakref.WeakKeyDictionary[SparkSession, dict[str, str]] = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def curated_read_pruned_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -544,23 +551,21 @@ def curated_read_pruned_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``documents`` (same md5 split), so the whole write→prune→read path
     is value-gated."""
     import os
-    import tempfile
 
     from distributed_computing_spark import sinks
+    from distributed_computing_spark.caching import session_tmpdir
     from distributed_computing_spark.operators.curation import hash_split
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_curated_{abs(hash((id(spark), sf_dir)))}",
-    )
-    key = (id(spark), sf_dir)
-    if key not in _CURATED_WRITTEN or not os.path.exists(path):
+    written = _CURATED.setdefault(spark, {})
+    path = written.get(sf_dir)
+    if path is None or not os.path.exists(path):
+        path = os.path.join(session_tmpdir("spark_graft_curated_"), "corpus")
         docs = load_table(spark, sf_dir, "documents")
         cur = docs.join(
             hash_split(docs.select("doc_id")).select("doc_id", "split"), "doc_id"
         ).select("doc_id", "text", "source", "n_chars", "lang", "split")
         sinks.write_curated_corpus(cur, path)
-        _CURATED_WRITTEN.add(key)
+        written[sf_dir] = path
     sl = sinks.read_corpus_slice(spark, path, lang="en", split="train")
     return sl.groupBy("source").agg(
         F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars")
@@ -1201,20 +1206,14 @@ def stream_kv_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from distributed_computing_spark.operators import multimodal
-
     return multimodal.blobs_from_documents(load_table(spark, sf_dir, "documents"))
 
 
 def multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from distributed_computing_spark.operators import multimodal
-
     return multimodal.blob_stats(_blobs(spark, sf_dir))
 
 
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from distributed_computing_spark.operators import multimodal
-
     return multimodal.sample_frames(_blobs(spark, sf_dir), k=4)
 
 
@@ -1225,8 +1224,6 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads carry no container magic, so they exercise the
     unknown-format fake branch — rows-only check; decode semantics in
     tests/test_multimodal.py."""
-    from distributed_computing_spark.operators import multimodal
-
     return multimodal.decode_images(_blobs(spark, sf_dir))
 
 
@@ -1235,8 +1232,6 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal_decode: real WAV/MP3-frame decode for real containers,
     deterministic fake for these text-byte payloads — rows-only;
     semantics in tests)."""
-    from distributed_computing_spark.operators import multimodal
-
     return multimodal.decode_audio(_blobs(spark, sf_dir))
 
 
@@ -1246,8 +1241,6 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy BMP parser, mean-pool resized, per-channel means — the
     oracle states the expected means in closed form, so the whole
     encode→parse→resize→featurize path is hash-checked."""
-    from distributed_computing_spark.operators import multimodal
-
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.decode_images_bmp(multimodal.bmp_wav_blobs(docs))
 
@@ -1256,8 +1249,6 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-codec audio path, VALUE-GATED: genuine PCM-16 WAV payloads
     decoded by the RIFF chunk walker; integer waveform stats
     (sum/peak) make the gate hash float-free."""
-    from distributed_computing_spark.operators import multimodal
-
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.decode_audio_wav(multimodal.bmp_wav_blobs(docs))
 
@@ -1266,8 +1257,6 @@ def multimodal_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-codec video path, VALUE-GATED: genuine uncompressed-DIB AVI
     payloads parsed by the nested RIFF walker, every 2nd frame sampled,
     per-frame channel means stated in closed form by the oracle."""
-    from distributed_computing_spark.operators import multimodal
-
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.sample_frames_avi(multimodal.avi_blobs(docs), stride=2)
 
@@ -1282,11 +1271,8 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form: the oracle replicates RGB→YCbCr rounding, DC
     quantization (floor(8(c−128)/16 + 0.5)), reconstruction
     (16·qDC/8 + 128) and YCbCr→RGB — bit-exact under the hash gate
-    thanks to the codec's exact-DC contract (functions/jpeg.py). This
-    retires the repo's last fake-kernel line (multimodal.decode_images'
-    _HAS_PIL gate); only MP3's MDCT still needs a library."""
-    from distributed_computing_spark.operators import multimodal
-
+    thanks to the codec's exact-DC contract (functions/jpeg.py). Only
+    MP3's MDCT still needs a library."""
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.decode_images_jpeg(multimodal.jpeg_blobs(docs))
 
@@ -1302,8 +1288,6 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     This retired the 'compressed formats are env-blocked' line for PNG
     in round 4; round 5 closed JPEG too (multimodal_jpeg_decode) —
     only MP3's MDCT still needs a library."""
-    from distributed_computing_spark.operators import multimodal
-
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.decode_images_png(multimodal.png_blobs(docs))
 
@@ -1324,10 +1308,6 @@ def multimodal_real_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     (all intermediates < 2⁶³; dot products here are non-negative).
     Ranking is monotone in cosine up to the quantization; sub-1e-8
     near-ties break deterministically by nn_id on both sides."""
-    from distributed_computing_spark.operators import multimodal
-
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     feats = (
         multimodal.decode_images_bmp(multimodal.bmp_wav_blobs(docs))
@@ -1380,8 +1360,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry emits only canonicalizable scalars (dim, squared norm, first
     components). The array<float> API is unchanged — multimodal_ann
     consumes it directly."""
-    from distributed_computing_spark.operators import multimodal
-
     feats = multimodal.extract_features(_blobs(spark, sf_dir))
     sq_norm = F.aggregate(
         "embedding",
@@ -1401,8 +1379,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compose: blobs → feature extraction → exact cosine top-k. The
     full multimodal-to-ANN pipeline on one plan."""
-    from distributed_computing_spark.operators import multimodal
-
     feats = multimodal.extract_features(_blobs(spark, sf_dir))
     queries = feats.where(F.col("blob_id") % 25 == 0)
     # footer-only bound: |queries| <= |documents| — never re-runs the
@@ -3532,8 +3508,6 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec-vector-pinned in tests) decoded by the pure-stdlib parser.
     Two planted bands per doc_id keep each channel mean closed-form:
     (band_a + band_b) / 2 — the same contract as the PNG/JPEG gates."""
-    from distributed_computing_spark.operators import multimodal
-
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.decode_images_gif(multimodal.gif_blobs(docs))
 
@@ -3563,8 +3537,6 @@ def multimodal_mp3_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-forms every parsed field: frame count, bitrate table
     lookup, the spec frame-size formula, sample math, and the
     side-info global_gain round-trip."""
-    from distributed_computing_spark.operators import multimodal
-
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.decode_audio_mp3(multimodal.mp3_blobs(docs))
 
@@ -4870,15 +4842,10 @@ def image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     REAL BMP byte stream, making the gate an independent derivation.
     The pure-Python twin (tests/test_multimodal.py, shared dhash_py
     definition) stays as the third leg."""
-    from distributed_computing_spark.operators.multimodal import (
-        dhash_images,
-        image_neardup_pairs,
-        textured_blobs,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
-    hashes = dhash_images(textured_blobs(docs))
-    return image_neardup_pairs(hashes, max_hamming=4).orderBy("a", "b")
+    hashes = multimodal.dhash_images(multimodal.textured_blobs(docs))
+    return multimodal.image_neardup_pairs(hashes, max_hamming=4).orderBy("a", "b")
 
 
 QUERIES["image_dhash_neardup"] = image_dhash_neardup
@@ -5081,19 +5048,15 @@ FROM w GROUP BY 1, 2 ORDER BY 1, 2"""
 # Rows-only under the driver (no SQL decode); the exact twin is
 # tests/test_streaming.py's stream==batch equality.
 def stream_dhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from distributed_computing_spark.operators.multimodal import (
-        dhash_images,
-        textured_blobs,
-    )
     from distributed_computing_spark.streaming.runner import (
         run_to_batch,
         stream_table,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    blobs = textured_blobs(docs)
+    blobs = multimodal.textured_blobs(docs)
     sdf = stream_table(spark, blobs)
-    out = run_to_batch(dhash_images(sdf), spark, output_mode="append")
+    out = run_to_batch(multimodal.dhash_images(sdf), spark, output_mode="append")
     return out.orderBy("blob_id")
 
 
@@ -5201,15 +5164,10 @@ def video_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer algebra, so the oracle derives every expected frame hash in
     SQL (_dhash_core_cte) and replays the exact-hash overlap join —
     the Spark side still parses the REAL AVI byte stream."""
-    from distributed_computing_spark.operators.multimodal import (
-        textured_avi_blobs,
-        video_frame_hashes,
-        video_neardup_pairs,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
-    fh = video_frame_hashes(textured_avi_blobs(docs))
-    return video_neardup_pairs(fh, min_shared=4).orderBy("a", "b")
+    fh = multimodal.video_frame_hashes(multimodal.textured_avi_blobs(docs))
+    return multimodal.video_neardup_pairs(fh, min_shared=4).orderBy("a", "b")
 
 
 QUERIES["video_dhash_neardup"] = video_dhash_neardup

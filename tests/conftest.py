@@ -13,6 +13,15 @@ SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MID = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "slow: over 2 s in a --durations=0 run of the full suite on a 4-vCPU "
+        "VM; `pytest -m 'not slow'` is the fast tier for iteration, and the "
+        "full suite stays the gate",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)

@@ -39,6 +39,7 @@ def _multiset(rows, cols):
     return sorted("|".join(_norm(r[i]) for i in order) for r in rows)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("name", CHECK)
 def test_query_matches_oracle(spark, sf_dir, name):
     sdf = QUERIES[name](spark, sf_dir)
@@ -54,6 +55,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
     assert _multiset([tuple(r) for r in srows], scols) == _multiset(orows, ocols)
 
 
+@pytest.mark.slow
 def test_approx_distinct_within_error(spark, sf_dir):
     import pyspark.sql.functions as F
 
@@ -75,6 +77,7 @@ def test_approx_distinct_within_error(spark, sf_dir):
         assert abs(approx[k] - v) <= max(2.0, 0.05 * v)
 
 
+@pytest.mark.slow
 def test_entry_contract(spark):
     import __spark_entry__ as e
 
@@ -126,6 +129,7 @@ def test_frequent_items_contains_true_heavy_hitters(spark, sf_dir):
     assert true_heavy <= candidates  # sketch guarantee: no false negatives
 
 
+@pytest.mark.slow
 def test_events_gapfill_densifies_missing_hours(spark, tmp_path):
     import datetime as dt
 
@@ -232,6 +236,7 @@ def test_user_retention_hand_matrix(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_copurchase_pairs_basket_bounded(spark, tmp_path):
     """Pairs form only within an order (basket), canonicalized a < b."""
     from distributed_computing_spark.operators.analytics import copurchase_pairs

@@ -177,7 +177,40 @@ def _case_winnow_all_short(spark, tmp_path):
     return winnow_docs(docs)
 
 
+# multimodal generator -> decoder pairs: two docs over eight partitions,
+# so most Arrow batches of both stages are empty
+_MULTIMODAL_PAIRS = {
+    "bmp": ("bmp_wav_blobs", "decode_images_bmp"),
+    "wav": ("bmp_wav_blobs", "decode_audio_wav"),
+    "avi_frames": ("avi_blobs", "sample_frames_avi"),
+    "png": ("png_blobs", "decode_images_png"),
+    "jpeg": ("jpeg_blobs", "decode_images_jpeg"),
+    "gif": ("gif_blobs", "decode_images_gif"),
+    "mp3": ("mp3_blobs", "decode_audio_mp3"),
+    "dhash": ("textured_blobs", "dhash_images"),
+    "video_dhash": ("textured_avi_blobs", "video_frame_hashes"),
+}
+
+
+def _multimodal_case(gen: str, dec: str, id_type: str = "long"):
+    def case(spark, tmp_path):
+        from distributed_computing_spark.operators import multimodal
+
+        docs = _docs(spark, ["abc", "defg"], n_parts=8)
+        docs = docs.withColumn("doc_id", F.col("doc_id").cast(id_type))
+        return getattr(multimodal, dec)(getattr(multimodal, gen)(docs))
+
+    return case
+
+
 _CASES = {
+    **{
+        f"multimodal_{name}_sparse_partitions": _multimodal_case(gen, dec)
+        for name, (gen, dec) in _MULTIMODAL_PAIRS.items()
+    },
+    "multimodal_jpeg_int32_doc_id": _multimodal_case(
+        "jpeg_blobs", "decode_images_jpeg", id_type="int"
+    ),
     "bigram_pmi_zero_tokens": _case_bigram_pmi_zero_tokens,
     "basket_pairs_all_single": _case_basket_pairs_all_single,
     "basket_pairs_over_cap": _case_basket_pairs_over_cap,
@@ -205,7 +238,7 @@ def test_arrow_emitter_survives_empty_and_zero_output_shapes(
         schema = df.schema  # must resolve
         rows = df.collect()  # must not throw in the Arrow converter
         assert df.schema == schema
-        if name in (
+        if name.startswith("multimodal_") or name in (
             "map_reduce_none_reducef",
             "cosine_gemm_sparse_partitions",
             "extract_features_sparse_partitions",
@@ -215,11 +248,28 @@ def test_arrow_emitter_survives_empty_and_zero_output_shapes(
         release_tracked()
 
 
+def test_multimodal_frame_maker_pins_every_column_on_an_empty_batch(spark):
+    """An empty batch through ``_map_rows``' frame maker keeps the
+    declared dtypes (bare lists would all infer object or float64)."""
+    from pyspark.sql.types import DataType
+
+    from distributed_computing_spark.operators.multimodal import _frame_maker
+
+    schema = DataType.fromDDL("a long, b int, c double, d float, e binary, f array<float>")
+    empty = _frame_maker(schema)([])
+    assert list(empty.columns) == list("abcdef")
+    assert [str(t) for t in empty.dtypes] == [
+        "int64", "int32", "float64", "float32", "object", "object"
+    ]
+
+
 def test_no_unpinned_bare_list_frames_in_named_sites():
     """The nine VERDICT-r11-named emitter sites must build every
     Python-list column as an explicitly-typed pd.Series/pd.array —
     regression-grep the fixed files for the named functions' yield
-    blocks having at least one dtype pin."""
+    blocks having at least one dtype pin. In the multimodal module the
+    only ``mapInPandas`` sites are ``_map_rows`` and the PNG batch
+    body, both building frames with the schema-pinned frame maker."""
     import re
     from pathlib import Path
 
@@ -240,3 +290,12 @@ def test_no_unpinned_bare_list_frames_in_named_sites():
             rel,
             fn,
         )
+    # the multimodal emitters build frames only through _map_rows'
+    # schema-pinned frame maker; decode_images_png's batch body reuses it
+    src = (pkg / "operators/multimodal.py").read_text()
+    owners = sorted(
+        re.findall(r"\ndef (\w+)", src[: m.start()])[-1]
+        for m in re.finditer(r"\.mapInPandas\(", src)
+    )
+    assert owners == ["_map_rows", "decode_images_png"], owners
+    assert "build(rows)" in src[src.index("def decode_images_png") :]

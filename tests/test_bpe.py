@@ -3,6 +3,8 @@ sequence; encode-by-join fertility/OOV semantics are hand-checked."""
 
 from __future__ import annotations
 
+import pytest
+
 from distributed_computing_spark.operators.bpe import (
     END,
     encode_with_pieces,
@@ -36,6 +38,7 @@ def test_classic_merge_sequence(spark):
     assert [n for _, _, n in rules] == [9, 9, 9, 7, 7]
 
 
+@pytest.mark.slow
 def test_full_training_collapses_frequent_words(spark):
     docs = _corpus(spark, [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)])
     rules, pieces = train_bpe(spark, docs, n_merges=10)
@@ -54,6 +57,7 @@ def test_min_count_stops_training(spark):
     assert rules == []
 
 
+@pytest.mark.slow
 def test_encode_join_fertility_and_oov(spark):
     """Known words encode via the trained table (low -> 1 piece); OOV
     words fall back to chars + end marker; self-encoding the training

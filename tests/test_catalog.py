@@ -13,6 +13,7 @@ import textwrap
 import weakref
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.sources.catalog import (
@@ -89,6 +90,7 @@ def test_memo_does_not_keep_a_session_alive(spark):
     assert ref() is None
 
 
+@pytest.mark.slow
 def test_stopped_then_recreated_session_reinfers():
     """Run in a process of its own: stopping the suite's shared session
     would break every later test."""

@@ -4,6 +4,7 @@ DQ audit detection on deliberately corrupted tables."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.operators.curation import (
@@ -101,6 +102,7 @@ def test_pack_chunks_capacity_bound(spark):
     assert sum(r["bin_tokens"] for r in bins) == total
 
 
+@pytest.mark.slow
 def test_pack_chunks_hierarchical_matches_single_window(spark):
     """The two-level prefix sum must produce bin assignments IDENTICAL
     to a single per-group cumulative window (offset + local cum ==
@@ -246,6 +248,7 @@ def test_hash_split_is_map_only(spark):
     assert "Exchange" not in operator_tree(df)
 
 
+@pytest.mark.slow
 def test_leakage_safe_split_never_splits_a_cluster(spark, sf_dir):
     """The whole point: no near-dup pair may straddle train/test."""
     from distributed_computing_spark.operators.curation import leakage_safe_split
@@ -319,6 +322,7 @@ def test_fused_chunk_docs_validates_stride(spark):
         fused_chunk_docs(docs, size=4, stride=5)
 
 
+@pytest.mark.slow
 def test_pack_chunks_equi_depth_banding_under_skew(spark):
     """round-4: banding='depth' balances band occupancy when doc_ids
     cluster in a narrow slice of the group's id range (the case that

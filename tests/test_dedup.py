@@ -3,6 +3,7 @@ Jaccard oracle, SimHash sanity."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.operators.dedup import (
@@ -35,6 +36,7 @@ def test_exact_dedup_planted(spark):
     assert kept == [1, 3]
 
 
+@pytest.mark.slow
 def test_minhash_recall_against_exact(spark, sf_dir):
     """MinHash-LSH must find ≥90% of true Jaccard≥0.5 pairs (sf0.01 has
     25 planted near-dup pairs at j≥0.9, so recall should be 100%)."""
@@ -147,6 +149,7 @@ def test_max_df_guard_drops_head_shingles(spark):
     assert no_guard > 0 and guarded == 0
 
 
+@pytest.mark.slow
 def test_simhash_identical_docs_same_hash(spark):
     rows = [
         (1, "alpha beta gamma delta", "en", "s", 10),
@@ -192,6 +195,7 @@ def test_simhash_pigeonhole_recall_at_radius_6(spark):
     assert (0, 7) not in got  # distance 7 verified out
 
 
+@pytest.mark.slow
 def test_neardup_clusters_chain_and_singletons(spark):
     """Connected components on a crafted graph: a 5-node CHAIN (label
     must propagate across multiple iterations), a 2-node pair, and
@@ -210,6 +214,7 @@ def test_neardup_clusters_chain_and_singletons(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 5, 6: 6, 7: 7, 8: 7, 9: 9}
 
 
+@pytest.mark.slow
 def test_minhash_incremental_against_persisted_index(spark, tmp_path):
     """New-batch-vs-index dedup: exact re-submissions of indexed docs
     are caught with est_jaccard 1.0 against their corpus twin; novel
@@ -278,6 +283,7 @@ def test_decontaminate_broadcasts_benchmark_side(spark):
     assert "SortMergeJoin" not in tree and "NestedLoop" not in tree
 
 
+@pytest.mark.slow
 def test_fused_decontaminate_identical_to_hash_plan(spark):
     """The adopted map-only Arrow pass (bench set as task broadcast)
     must match the broadcast-join plan row-for-row, including the
@@ -616,6 +622,7 @@ def test_span_dedup_apply_empty_result_hashes_empty_string(spark):
     assert rows[1]["kept_tokens"] == 12
 
 
+@pytest.mark.slow
 def test_prefix_filtered_jaccard_identical_to_baseline_plan(spark):
     """PPJoin prefix filtering is an OPTIMIZER variant: identical pairs
     and jaccard values to ngram_jaccard_pairs on real data, via fewer

@@ -4,6 +4,7 @@ routinely at scale (filters, pruning, skewed splits)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.functions.text import tokens
@@ -31,6 +32,7 @@ def test_empty_ops_log(spark):
     assert dedup_ops(empty).count() == 0
 
 
+@pytest.mark.slow
 def test_empty_and_single_doc_corpus(spark):
     empty = spark.createDataFrame([], DOCS)
     one = spark.createDataFrame([(1, "only one document here")], DOCS)

@@ -44,6 +44,7 @@ def toy_edges():
     ]
 
 
+@pytest.mark.slow
 def test_pagerank_matches_python_reference(spark, toy_edges):
     df = spark.createDataFrame(toy_edges, "src long, dst long")
     got = {
@@ -115,6 +116,7 @@ def test_pagerank_iteration_shuffle_budget(spark, toy_edges):
     assert n <= n_iter + 2, n
 
 
+@pytest.mark.slow
 def test_pagerank_shuffle_fallback_matches_broadcast(spark, toy_edges):
     """Above broadcast_nodes_max the co-partitioned shuffle path must
     produce bit-identical ranks (the dispatch changes the plan, never
@@ -152,6 +154,7 @@ def _py_triangles(und_pairs):
     return {n: c for n, c in counts.items() if c}
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize(
     "pairs",
     [
@@ -512,6 +515,7 @@ def test_edges_weighted_truncating_div(spark):
 import pytest
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [7, 19, 43])
 def test_bellman_ford_random_graphs_match_reference(spark, seed):
     """Seeded random weighted graphs vs the python reference — the

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.streaming.ingest import CorpusIngestStore
@@ -18,6 +19,7 @@ def _doc(i: int, text: str):
     return (i, text, "en", "s", len(text))
 
 
+@pytest.mark.slow
 def test_streaming_ingest_dedup_across_batches(spark, tmp_path):
     def base(i: int) -> str:
         return f"unique document number {i} with plenty of distinctive words " * 4
@@ -56,6 +58,7 @@ def test_streaming_ingest_dedup_across_batches(spark, tmp_path):
     assert admitted == {1, 2, 12}, admitted
 
 
+@pytest.mark.slow
 def test_retried_batch_is_idempotent(spark, tmp_path):
     """At-least-once delivery: a retried (namespace, batch_id) — whether
     after a successful commit or after a mid-write crash that left a
@@ -80,6 +83,7 @@ def test_retried_batch_is_idempotent(spark, tmp_path):
     assert store.corpus().count() == 4
 
 
+@pytest.mark.slow
 def test_redelivered_batch_admits_nothing(spark, tmp_path):
     """Replaying identical content (retry/redelivery) admits zero new
     docs — content-level exactly-once."""
@@ -129,6 +133,7 @@ def test_curated_ingest_cleans_filters_and_dedups(spark, tmp_path):
     assert corpus[1]["n_chars"] == len(corpus[1]["text"])
 
 
+@pytest.mark.slow
 def test_exact_only_batches_still_index_signatures(spark, tmp_path):
     """round-4 ADVICE: near_dup=False admission must still persist REAL
     MinHash signatures, so a later near_dup=True batch near-dup-checks

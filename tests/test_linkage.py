@@ -3,6 +3,7 @@ brute-force reference, block-cap determinism, and plan shape."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.operators.linkage import (
@@ -23,6 +24,7 @@ def _lev(a: str, b: str) -> int:
     return prev[-1]
 
 
+@pytest.mark.slow
 def test_matches_brute_force_on_real_names(spark, sf_dir):
     """Every equal-length pair at distance <= 1 is found (pigeonhole is
     complete below the cap), and nothing else is."""

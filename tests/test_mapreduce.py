@@ -5,6 +5,7 @@ round-trip property (mapreduce/test_test.go:15-95)."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 from distributed_computing_spark.operators.mapreduce import (
     grouped_values,
@@ -204,6 +205,7 @@ def test_map_reduce_rdd_matches_pandas_facade(spark):
     assert a == b == {("the", "3"), ("cat", "2"), ("sat", "1"), ("ran", "1"), ("mile", "1")}
 
 
+@pytest.mark.slow
 def test_synthetic_roundtrip_through_facade(spark):
     """Port of the reference's harness test (mapreduce/test_test.go:
     15-85): synthetic sequential ints through identity mapF/reduceF

@@ -4,6 +4,7 @@ and scale guards must behave as documented."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.operators.dedup import minhash_lsh_pairs
@@ -25,6 +26,7 @@ def test_replay_invariant_to_row_order_and_partitioning(spark):
     assert got == want
 
 
+@pytest.mark.slow
 def test_minhash_pairs_invariant_to_partitioning(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     a = {tuple(r) for r in minhash_lsh_pairs(docs, threshold=0.35).collect()}
@@ -146,6 +148,7 @@ def test_neardup_canonical_invariants_random(spark):
         assert r["dropped_chars"] == sum(lens[m] for m in mem) - lens[r["kept_doc"]]
 
 
+@pytest.mark.slow
 def test_minhash_exact_matches_bruteforce_hypothesis(spark):
     """For ANY small corpus, minhash_lsh_exact must agree with a pure-
     Python re-computation of the SAME md5-family pipeline (signatures →
@@ -209,6 +212,7 @@ def test_minhash_exact_matches_bruteforce_hypothesis(spark):
     check()
 
 
+@pytest.mark.slow
 def test_epoch_shuffle_matches_sorted_hash_hypothesis(spark):
     """For ANY id set, the two-level-rank shuffle index equals the
     naive sort-by-(md5 hash, id) position."""
@@ -336,6 +340,7 @@ def test_jpeg_roundtrip_psnr_hypothesis():
     check()
 
 
+@pytest.mark.slow
 def test_grouped_min_rank_matches_bruteforce_with_ties(spark):
     """Property: the two-level bucketed ranking equals the textbook
     min-rank (1 + count of strictly smaller values in the group) on

@@ -11,6 +11,7 @@ import json
 from pathlib import Path
 
 import duckdb
+import pytest
 
 from distributed_computing_spark.registry import ORACLES, QUERIES
 from distributed_computing_spark.sources.catalog import TABLES
@@ -86,6 +87,7 @@ def test_registry_matches_committed_snapshot():
     assert sorted(set(names) - set(oracles)) == snap["rows_only"]
 
 
+@pytest.mark.slow
 def test_no_decimal_type_in_any_gated_output_schema(spark, sf_dir):
     """VERDICT r8 item 1: the round-8 driver bisect proved DECIMAL
     final columns value-hash differently in the driver environment

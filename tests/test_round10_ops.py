@@ -9,6 +9,7 @@ from __future__ import annotations
 import datetime
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_merkle_repair_catches_null_value_divergence(spark):
@@ -148,6 +149,7 @@ def _brute_quantile(pairs, q_permille):
     raise AssertionError("unreachable for q <= 1000")
 
 
+@pytest.mark.slow
 def test_grouped_weighted_quantile_matches_bruteforce(spark):
     """VERDICT r9 item 3: the three-pass q-permille generalization is
     gate-only — pin it against a sorted-reference brute force on
@@ -236,6 +238,7 @@ def test_order_price_quantiles_matches_bruteforce(spark, tmp_path):
         assert got[g] == want, (g, got[g], want)
 
 
+@pytest.mark.slow
 def test_grouped_min_rank_adversarial_matches_window_rank(spark):
     """VERDICT r9 item 6: grouped_min_rank is exact for min-rank
     because ties never span buckets — prove it on the adversarial
@@ -742,6 +745,7 @@ def test_segment_allocation_sums_to_budget_and_known_case(spark, tmp_path):
     assert sum(r["units"] for r in rows) == 10_000
 
 
+@pytest.mark.slow
 def test_dow_anomalies_weekly_rhythm_not_flagged_corruption_is(
     spark, tmp_path
 ):

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 
 def _write_events(spark, path, rows):
     spark.createDataFrame(
@@ -23,6 +25,7 @@ def _write_events(spark, path, rows):
     ).write.mode("overwrite").parquet(f"{path}/events.parquet")
 
 
+@pytest.mark.slow
 def test_dow_anomalies_hash_bearing_event_type_groups_correctly(
     spark, tmp_path
 ):
@@ -318,6 +321,7 @@ def test_stream_burst_rates_equals_batch(spark):
     assert sorted(map(tuple, batch)) == sorted(map(tuple, stream))
 
 
+@pytest.mark.slow
 def test_burst_alerts_ties_eviction_and_stream_equals_batch(spark, tmp_path):
     """Planted alert scenario exercising the two exactness obligations:
     equal-timestamp PEERS count toward each other's window (RANGE
@@ -357,6 +361,7 @@ def test_burst_alerts_ties_eviction_and_stream_equals_batch(spark, tmp_path):
     assert batch == [(1, base + 100, 3), (2, base + 3599, 3)]
 
 
+@pytest.mark.slow
 def test_stream_burst_alerts_state_spans_batches(spark, tmp_path):
     """A burst assembled ACROSS micro-batches: the first two events and
     the third arrive in different seq-source batches (timestamps span
@@ -870,6 +875,7 @@ def test_lag_autocorr_detects_weekly_rhythm(spark, tmp_path):
     assert got[1][2] < 400000  # lag-1 is weak on an alternating series
 
 
+@pytest.mark.slow
 def test_common_neighbor_pairs_anchors(spark):
     """Link prediction brute-force anchors (the K4/star/pendant style
     of the clustering tests): a path predicts its endpoints, a 4-cycle

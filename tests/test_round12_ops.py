@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -75,6 +76,7 @@ def test_event_path_trigrams_matches_brute_force(spark, tmp_path):
     assert got == _brute_trigrams(rows)
 
 
+@pytest.mark.slow
 def test_stream_event_trigrams_equals_batch_across_boundaries(
     spark, tmp_path
 ):

@@ -415,6 +415,7 @@ def test_merkle_repair_keys_recovers_exact_mutation_set(spark):
     assert got == want
 
 
+@pytest.mark.slow
 def test_robust_outliers_planted_heavy_tail(spark, tmp_path):
     """The robust screen's point: a single wild value moves the
     mean/stddev but not median/MAD — on planted data (five 10.00s, four

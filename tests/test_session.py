@@ -14,6 +14,7 @@ import zipimport
 from pathlib import Path
 
 import pandas as pd
+import pytest
 
 from tests.conftest import SF_DIR_MID
 
@@ -97,6 +98,7 @@ def test_workers_run_under_the_daemon(spark):
     assert _daemon_module_of_workers(spark) == {DAEMON}
 
 
+@pytest.mark.slow
 def test_workers_import_the_package_from_any_cwd(tmp_path):
     """A pandas-UDF query run from an unrelated cwd with PYTHONPATH
     unset: the Python workers, and the daemon they fork from, still
@@ -150,6 +152,7 @@ def _daemon_pids(marker: str) -> list[int]:
     return pids
 
 
+@pytest.mark.slow
 def test_no_daemon_outlives_the_session(tmp_path):
     """Stopping Spark and the gateway the way perfbench does leaves no
     daemon or worker process behind."""

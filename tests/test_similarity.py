@@ -3,6 +3,7 @@ force, pandas path parity."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.operators.similarity import (
@@ -203,6 +204,7 @@ def test_ivf_append_then_query_finds_new_vectors(spark, tmp_path):
     assert all_ids & appended or all(r["nn_id"] < 400 for r in res)
 
 
+@pytest.mark.slow
 def test_ivf_exact_recall_vs_bruteforce(spark, sf_dir):
     """Deterministic-codebook IVF at n_probe=4/16 should recover most
     brute-force neighbors (planted near-dups share lists); and its
@@ -424,6 +426,7 @@ def test_kmeans_trace_and_shift_contract(spark):
     release_tracked()
 
 
+@pytest.mark.slow
 def test_kmeans_gemm_path_identical_to_jvm_path(spark):
     import random
 

@@ -3,6 +3,7 @@ partition pruning (PartitionFilters) and bucket-join shuffle removal."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_computing_spark.plans import operator_tree, physical_plan
@@ -153,3 +154,45 @@ def test_partitioned_corpus_write_prunes_partitions(spark, tmp_path, sf_dir):
     # pruned read returns exactly the en/train rows
     expect = cur.where((F.col("lang") == "en") & (F.col("split") == "train")).count()
     assert sl.count() == expect and expect > 0
+
+
+@pytest.mark.slow
+def test_curated_query_writes_its_corpus_once_and_removes_it_at_exit(tmp_path):
+    """``curated_read_pruned_q`` writes the corpus once per session + sf
+    (a second build reuses it) into a directory that is gone once the
+    process exits."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    script = textwrap.dedent(f"""
+        from distributed_computing_spark import registry, sinks
+        from distributed_computing_spark.session import get_spark
+
+        paths = []
+        write = sinks.write_curated_corpus
+
+        def counting(df, path, **kw):
+            paths.append(path)
+            return write(df, path, **kw)
+
+        sinks.write_curated_corpus = counting
+        spark = get_spark(cpus=1, shuffle_partitions=1)
+        first = registry.curated_read_pruned_q(spark, {SF_DIR!r}).collect()
+        second = registry.curated_read_pruned_q(spark, {SF_DIR!r}).collect()
+        assert sorted(first) == sorted(second) and first
+        print("WRITES", len(paths), paths[0])
+    """)
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=Path(__file__).resolve().parents[1],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    line = [ln for ln in out.stdout.splitlines() if ln.startswith("WRITES")]
+    assert line, out.stderr[-2000:]
+    _, n_writes, path = line[0].split()
+    assert n_writes == "1"
+    assert path.startswith(str(tmp_path)) and not os.path.exists(path)
+    assert not list(tmp_path.glob("spark_graft_curated_*"))

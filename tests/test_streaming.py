@@ -40,6 +40,7 @@ def _write_ops_batches(spark, tmpdir: str, ops: list[tuple], n_batches: int = 3)
     return src
 
 
+@pytest.mark.slow
 def test_foreach_batch_apply_matches_batch_replay(spark, tmp_path):
     ops = random_ops(11, n=300)
     src = _write_ops_batches(spark, str(tmp_path), ops)
@@ -54,6 +55,7 @@ def test_foreach_batch_apply_matches_batch_replay(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_foreach_batch_continuous_trigger_live_arrivals(spark, tmp_path):
     """The live (processingTime-trigger, unbounded) mode of the apply
     loop: ops files arrive WHILE the query runs — the reference's
@@ -110,6 +112,7 @@ def test_foreach_batch_continuous_trigger_live_arrivals(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_foreach_batch_is_incremental(spark, tmp_path):
     """New files after the first run are picked up from the checkpoint
     and applied exactly once (restart = reference's snapshot restore)."""
@@ -174,6 +177,7 @@ def _high_water(store) -> dict[int, int]:
     return {r["client_id"]: r["high_water"] for r in store.high_water().collect()}
 
 
+@pytest.mark.slow
 def test_apply_batch_job_budget(spark, tmp_path):
     """A warm apply is at most 8 jobs, none of them a schema inference,
     and reading the store's tables fires no job before the action: both
@@ -201,6 +205,7 @@ def test_apply_batch_job_budget(spark, tmp_path):
 INT32_DDL = "seq int, client_id int, req_id int, op string, key string, value string"
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize(
     "seed, ddl, empty_first",
     [
@@ -238,6 +243,7 @@ def test_store_tracks_the_serial_fold_after_every_batch(
     }
 
 
+@pytest.mark.slow
 def test_stateful_fold_pipeline_matches_batch(spark, tmp_path):
     """dedup_stream (per-client K4) → intermediate sink → fold stream
     (per-key K2/K3) reaches exactly the serial-replay state."""
@@ -323,6 +329,7 @@ def test_session_and_sliding_plans_build(spark, sf_dir):
     assert sliding_rates(ev).count() > 0
 
 
+@pytest.mark.slow
 def test_watermark_drops_late_data(spark, tmp_path):
     """Late-data semantics across RESTARTS: run 1 commits a watermark to
     the checkpoint; a beyond-watermark event arriving in run 2 is
@@ -446,6 +453,7 @@ def test_kafka_source_gate_and_decode(spark, tmp_path):
     assert {r["_corrupt"] for r in bad} == {"not json", '{"op": "get"}'}
 
 
+@pytest.mark.slow
 def test_kafka_file_fallback_feeds_apply_loop(spark, tmp_path):
     """read_ops_stream's file fallback is the same OPS_SCHEMA stream:
     wiring it into KVTableStore reaches serial-replay state (the
@@ -462,6 +470,7 @@ def test_kafka_file_fallback_feeds_apply_loop(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_config_poll_applies_versions_in_order(spark, tmp_path):
     """P8: each micro-batch routes by the latest config installed at
     poll time — versions are observed one-by-one, in install order
@@ -525,6 +534,7 @@ def test_config_poll_applies_versions_in_order(spark, tmp_path):
     assert latest.count() == 10  # one row per shard
 
 
+@pytest.mark.slow
 def test_config_poll_restart_resumes_from_checkpoint(spark, tmp_path):
     """P8 across a restart: a second AvailableNow run sharing the
     checkpoint replays only NEW ops batches (exactly-once routing), and
@@ -584,6 +594,7 @@ def test_config_poll_restart_resumes_from_checkpoint(spark, tmp_path):
     assert Counter(r["config_num"] for r in routed) == {1: 10, 2: 10, 3: 10}
 
 
+@pytest.mark.slow
 def test_config_poll_batch_retry_is_idempotent(spark, tmp_path):
     """A retried foreachBatch invocation (same batch_id) must neither
     duplicate routed rows nor advance the config version: the install
@@ -630,6 +641,7 @@ def test_config_poll_batch_retry_is_idempotent(spark, tmp_path):
     assert Counter(r["config_num"] for r in rows) == {1: 10, 2: 10}
 
 
+@pytest.mark.slow
 def test_interval_join_stream_stream_bounds(spark, tmp_path):
     """Only purchases in [click_ts, click_ts + 30 min] by the same user
     match; earlier/later/other-user purchases do not."""
@@ -695,6 +707,7 @@ def test_cms_stream_equals_batch_sketch(spark):
     assert len(streamed) <= 4 * 64
 
 
+@pytest.mark.slow
 def test_cms_stream_restart_recovers_sketch_state(spark, tmp_path):
     """A second AvailableNow run sharing the checkpoint reads ONLY the
     files added after run 1, so the final sketch being equal to the
@@ -753,6 +766,7 @@ def test_cms_stream_restart_recovers_sketch_state(spark, tmp_path):
     assert got2 != batch1  # run 2 really advanced the recovered state
 
 
+@pytest.mark.slow
 def test_stateful_fold_restart_recovers_per_key_state(spark, tmp_path):
     """applyInPandasWithState across a checkpoint restart: run 2 (same
     checkpoint, only NEW files) must fold onto the RECOVERED per-key
@@ -847,6 +861,7 @@ def test_stream_dhash_ingest_equals_batch(spark):
     assert got == want and len(got) > 0
 
 
+@pytest.mark.slow
 def test_stream_cusum_drift_equals_batch(spark):
     """Round 10: the CUSUM detector over streamed daily counts — the
     streaming aggregation's final state must reproduce the batch
@@ -860,6 +875,7 @@ def test_stream_cusum_drift_equals_batch(spark):
     assert batch == stream and len(batch) > 0
 
 
+@pytest.mark.slow
 def test_interarrival_gaps_span_batches(spark, tmp_path):
     """Cross-batch state: a key whose consecutive events land in
     DIFFERENT micro-batches must still emit the boundary gap (from the
