@@ -27,7 +27,7 @@ equivalent lives in streaming/kv_stream.py (applyInPandasWithState).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 OPS_COLUMNS = ("seq", "client_id", "req_id", "op", "key", "value")
@@ -63,6 +63,41 @@ def ops_from_events(events: DataFrame, keep_ts: bool = False) -> DataFrame:
     )
 
 
+def dedup_sql(ops: str) -> str:
+    """K4 as SQL text over the relation ``ops`` (a ``{name}`` placeholder
+    or a parenthesised subquery): drop each op whose req_id is at or
+    below an earlier req_id of its client.
+
+    ``ORDER BY seq`` sorts NULLs first, so a row with a NULL seq acts as
+    its client's prior high-water: ``KVTableStore.apply_batch`` enters
+    the stored high-water that way."""
+    return (
+        "SELECT * EXCEPT (_hw) FROM (SELECT *, max(req_id) OVER ("
+        "PARTITION BY client_id ORDER BY seq "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS _hw "
+        f"FROM {ops}) WHERE _hw IS NULL OR req_id > _hw"
+    )
+
+
+def fold_sql(ops: str) -> str:
+    """K2+K3 as SQL text: the per-key ordered fold of the put/append
+    ops of the relation ``ops`` → ``(key, value, _lp)``.
+
+    ``value`` is the key's last Put value followed by the later Appends
+    in seq order; ``_lp`` is that last Put's seq, null when the key saw
+    only Appends (the value then extends whatever the key held before).
+    One shuffle on key: the last-Put cutoff is a window and the concat
+    a groupBy over the same partitioning."""
+    return (
+        "SELECT key, concat_ws('', transform(array_sort(collect_list("
+        "struct(seq, value))), s -> s.value)) AS value, max(_lp) AS _lp "
+        "FROM (SELECT *, max(CASE WHEN op = 'put' THEN seq END) "
+        "OVER (PARTITION BY key) AS _lp "
+        f"FROM {ops} WHERE op IN ('put', 'append')) "
+        "WHERE seq >= coalesce(_lp, -1) GROUP BY key"
+    )
+
+
 def dedup_ops(ops: DataFrame) -> DataFrame:
     """K4: drop ops whose req_id is ≤ the client's prior high-water mark.
 
@@ -71,21 +106,12 @@ def dedup_ops(ops: DataFrame) -> DataFrame:
     ``req_id >= this req_id`` — stale req_ids are dropped too, not just
     exact re-sends. One shuffle on client_id.
     """
-    w = (
-        Window.partitionBy("client_id")
-        .orderBy("seq")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        ops.withColumn("_hw", F.max("req_id").over(w))
-        .where(F.col("_hw").isNull() | (F.col("req_id") > F.col("_hw")))
-        .drop("_hw")
-    )
+    return ops.sparkSession.sql(dedup_sql("{ops}"), ops=ops)
 
 
 def _ordered_concat(order_col: str, value_col: str):
     """Aggregate: the group's ``value_col`` strings concatenated in
-    ``order_col`` order."""
+    ``order_col`` order (``fold_sql``'s concat, for the salted fold)."""
     return F.concat_ws(
         "",
         F.transform(
@@ -96,45 +122,21 @@ def _ordered_concat(order_col: str, value_col: str):
 
 
 def fold_writes(writes: DataFrame) -> DataFrame:
-    """Per-key ordered fold of put/append ops → ``(key, value, _lp)``.
+    """Per-key ordered fold of put/append ops → ``(key, value, _lp)``;
+    see ``fold_sql``."""
+    return writes.sparkSession.sql(fold_sql("{writes}"), writes=writes)
 
-    ``value`` is the key's last Put value followed by the later Appends
-    in seq order; ``_lp`` is that last Put's seq, null when the key saw
-    only Appends (the value then extends whatever the key held before).
-    One shuffle on key: the last-Put cutoff is a window and the concat
-    a groupBy over the same partitioning. ``replay`` drops ``_lp``
-    (column pruning removes its aggregate); ``KVTableStore.apply_batch``
-    hands it to the state MERGE as the put-reset flag.
+
+def _salted_fold(writes: DataFrame, salt_buckets: int) -> DataFrame:
+    """The hot-key form of ``fold_sql``'s fold → ``(key, value)``.
+
+    The fold runs in two phases — sub-fold within (key, contiguous seq
+    range) so a hot key spreads over ``salt_buckets`` tasks, then concat
+    the per-bucket partials in range order (string concat is
+    associative). The last-Put cutoff switches from a window to a
+    partial-aggregated groupBy + skew-aware equi-join, so NO stage
+    processes a whole hot key in one task.
     """
-    w_key = Window.partitionBy("key")
-    last_put = F.max(F.when(F.col("op") == "put", F.col("seq"))).over(w_key)
-    eff = writes.withColumn("_lp", last_put).where(
-        F.col("seq") >= F.coalesce(F.col("_lp"), F.lit(-1))
-    )
-    return eff.groupBy("key").agg(
-        _ordered_concat("seq", "value").alias("value"), F.max("_lp").alias("_lp")
-    )
-
-
-def _fold_effective_writes(
-    writes: DataFrame, salt_buckets: int | None = None
-) -> DataFrame:
-    """Per-key ordered fold: value = last Put's value + later Appends.
-
-    Put resets the key, Append concatenates (missing key starts at "").
-    Implemented as: keep only writes at-or-after the key's last Put,
-    then seq-ordered concat (``fold_writes``). No driver-side iteration.
-
-    ``salt_buckets``: the hot-key path. The fold runs in two phases —
-    sub-fold within (key, contiguous seq range) so a hot key spreads
-    over ``salt_buckets`` tasks, then concat the per-bucket partials in
-    range order (string concat is associative). The last-Put cutoff
-    switches from a window to a partial-aggregated groupBy + skew-aware
-    equi-join, so NO stage processes a whole hot key in one task.
-    """
-    if not salt_buckets:
-        return fold_writes(writes).drop("_lp")
-
     # The salted path references `writes` TWICE (last-put aggregate +
     # the fold probe), and Catalyst re-evaluates the subtree — with a
     # deduped input that meant running the client_id dedup window twice
@@ -174,13 +176,18 @@ def replay(
     The reference applies committed entries one-by-one in a single
     goroutine (kvraft/server.go:166-199); the batch-equivalent semantics
     is this deduped, seq-ordered fold — same final state, but computed
-    as two distributed stages instead of a serial loop. Pass
+    as two distributed stages instead of a serial loop, built as one
+    statement from ``dedup_sql`` and ``fold_sql``. Pass
     ``salt_buckets`` when the key distribution is skewed (hot keys).
     """
+    if not salt_buckets:
+        src = f"({dedup_sql('{ops}')})" if dedup else "{ops}"
+        return ops.sparkSession.sql(
+            f"SELECT key, value FROM ({fold_sql(src)})", ops=ops
+        )
     if dedup:
         ops = dedup_ops(ops)
-    writes = ops.where(F.col("op").isin("put", "append"))
-    return _fold_effective_writes(writes, salt_buckets=salt_buckets)
+    return _salted_fold(ops.where(F.col("op").isin("put", "append")), salt_buckets)
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:

@@ -22,7 +22,18 @@ read with its declared schema (``read_state``): ``spark.read.parquet``
 without one infers the schema with a Spark job on every call. The
 merges cast their output to that declared schema, so a declared-schema
 read never meets a file it cannot decode (an int32 id column written by
-a first batch, say). A ``KVTableStore.apply_batch`` is then 8 jobs.
+a first batch, say). A standalone merge swaps its one directory
+(``_swap_dir``); a crash between the swap's two renames leaves
+``path.old``, which the next read or swap puts back.
+
+``KVTableStore`` keeps its two tables in generations instead
+(``commit_generation``): ``root/gen-NNNNNNNN/{state,high_water}``, the
+live one named by the file ``root/CURRENT``. A batch writes both tables
+of the next generation and installs them with one rename of
+``CURRENT``, so a crash at any point leaves the whole previous batch
+live, and a retry of the batch rewrites the same generation. A
+``KVTableStore.apply_batch`` is then 6 Spark jobs: one statement per
+table, each a write over its shuffles.
 """
 
 from __future__ import annotations
@@ -54,16 +65,62 @@ def delta_available(spark: SparkSession) -> bool:
     return "DeltaSparkSessionExtension" in ext
 
 
+def _restore(path: str) -> None:
+    """Finish what a failed ``_swap_dir`` left: ``path.old`` is the last
+    committed table when ``path`` is missing (the failure fell between
+    the two renames), and is stale when ``path`` exists."""
+    old = path + ".old"
+    if os.path.exists(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.replace(old, path)
+
+
 def _swap_dir(df: DataFrame, path: str) -> None:
     """Stage-then-swap parquet write: the reader never observes a
-    half-written table (same pattern as KVTableStore round 1)."""
+    half-written table, and a failure between the two renames leaves
+    ``path.old`` for ``_restore``."""
     tmp = path + ".tmp"
     df.write.mode("overwrite").parquet(tmp)
+    _restore(path)
     old = path + ".old"
     if os.path.exists(path):
         os.replace(path, old)
     os.replace(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
+
+
+def live_generation(root: str) -> str:
+    """Directory of the live generation under ``root``: the one
+    ``root/CURRENT`` names, or the absent ``gen-00000000`` (whose tables
+    read empty) before the first commit."""
+    try:
+        with open(os.path.join(root, "CURRENT")) as f:
+            return os.path.join(root, f.read().strip())
+    except FileNotFoundError:
+        return os.path.join(root, "gen-00000000")
+
+
+def commit_generation(root: str, tables: dict[str, DataFrame]) -> None:
+    """Write each of ``tables`` as ``<next generation>/<name>`` under
+    ``root``, then make that generation live with one rename of
+    ``CURRENT``. Until the rename every reader sees the previous
+    generation whole; a failed attempt's directory is rewritten by the
+    next one, and older generations are removed after the rename."""
+    live = live_generation(root)
+    name = f"gen-{int(live.rsplit('-', 1)[1]) + 1:08d}"
+    staged = os.path.join(root, name)
+    shutil.rmtree(staged, ignore_errors=True)
+    for table, df in tables.items():
+        df.write.parquet(os.path.join(staged, table))
+    tmp = os.path.join(root, "CURRENT.tmp")
+    with open(tmp, "w") as f:
+        f.write(name)
+    os.replace(tmp, os.path.join(root, "CURRENT"))
+    for d in os.listdir(root):
+        if d.startswith("gen-") and d != name:
+            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
 
 
 def read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -72,18 +129,41 @@ def read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
     takes the declared schema too, so it fires no schema-inference job."""
     if delta_available(spark) and DeltaTable.isDeltaTable(spark, path):
         return spark.read.format("delta").load(path)
+    _restore(path)
     if os.path.exists(path):
         return spark.read.schema(schema).parquet(path)
     return spark.createDataFrame([], schema)
 
 
-def _as_schema(df: DataFrame, schema: str) -> DataFrame:
-    """``df`` with exactly the columns and types of the DDL ``schema``."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
+# The KV-state MERGE rule, target ``t`` and source ``s`` (key, _delta,
+# _lp): a put in the batch (_lp non-null) resets the stored value, else
+# the batch's folded writes append to it.
+_KV_MATCHED = (
+    "CASE WHEN s._lp IS NOT NULL THEN s._delta "
+    "ELSE concat(coalesce(t.value, ''), s._delta) END"
+)
 
-    return df.select(
-        *[F.col(f.name).cast(f.dataType) for f in StructType.fromDDL(schema)]
+
+def kv_state_merge_sql(state: str, folded: str) -> str:
+    """SQL text of the parquet KV-state MERGE: the full-outer merge of
+    the relation ``state`` (key, value) with ``folded`` (key, _delta,
+    _lp), cast to ``STATE_SCHEMA``."""
+    return (
+        "SELECT CAST(key AS STRING) AS key, CAST(CASE WHEN s._delta IS NULL "
+        f"THEN t.value ELSE {_KV_MATCHED} END AS STRING) AS value "
+        f"FROM {state} t FULL OUTER JOIN {folded} s USING (key)"
+    )
+
+
+def high_water_merge_sql(hw: str, advances: str) -> str:
+    """SQL text of the parquet high-water MERGE: per client, the max of
+    the relations ``hw`` and ``advances`` (client_id, high_water), cast
+    to ``HW_SCHEMA``."""
+    return (
+        "SELECT CAST(client_id AS BIGINT) AS client_id, "
+        "CAST(max(high_water) AS BIGINT) AS high_water FROM ("
+        f"SELECT client_id, high_water FROM {hw} UNION ALL "
+        f"SELECT client_id, high_water FROM {advances}) GROUP BY client_id"
     )
 
 
@@ -109,6 +189,7 @@ def merge_upsert_path(
         return
     from distributed_computing_spark.operators.kv import merge_upsert
 
+    _restore(path)
     if os.path.exists(path):
         merged = merge_upsert(spark.read.parquet(path), updates, key)
     else:
@@ -133,34 +214,19 @@ def merge_kv_state(spark: SparkSession, path: str, folded: DataFrame) -> None:
             DeltaTable.forPath(spark, path)
             .alias("t")
             .merge(folded.alias("s"), "t.key = s.key")
-            .whenMatchedUpdate(
-                set={
-                    "value": (
-                        "CASE WHEN s._lp IS NOT NULL THEN s._delta "
-                        "ELSE concat(coalesce(t.value, ''), s._delta) END"
-                    )
-                }
-            )
+            .whenMatchedUpdate(set={"value": _KV_MATCHED})
             .whenNotMatchedInsert(values={"key": "s.key", "value": "s._delta"})
             .execute()
         )
         return
-    # parquet stand-in: full-outer fold then swap (single writer)
-    from pyspark.sql import functions as F
-
+    # parquet stand-in: full-outer fold then swap (single writer), in
+    # the session ``folded`` belongs to
     from distributed_computing_spark.streaming.kv_stream import STATE_SCHEMA
 
-    cur = read_state(spark, path, STATE_SCHEMA).select(
-        "key", F.col("value").alias("_base")
-    )
-    new_state = cur.join(folded, "key", "full").select(
-        "key",
-        F.when(F.col("_delta").isNull(), F.col("_base"))
-        .when(F.col("_lp").isNotNull(), F.col("_delta"))
-        .otherwise(F.concat(F.coalesce(F.col("_base"), F.lit("")), F.col("_delta")))
-        .alias("value"),
-    )
-    _swap_dir(_as_schema(new_state, STATE_SCHEMA), path)
+    session = folded.sparkSession
+    cur = read_state(session, path, STATE_SCHEMA)
+    merged = session.sql(kv_state_merge_sql("{cur}", "{folded}"), cur=cur, folded=folded)
+    _swap_dir(merged, path)
 
 
 def merge_high_water(spark: SparkSession, path: str, advances: DataFrame) -> None:
@@ -182,17 +248,12 @@ def merge_high_water(spark: SparkSession, path: str, advances: DataFrame) -> Non
             .execute()
         )
         return
-    from pyspark.sql import functions as F
-
     from distributed_computing_spark.streaming.kv_stream import HW_SCHEMA
 
-    cur = read_state(spark, path, HW_SCHEMA)
-    merged = (
-        cur.unionByName(advances)
-        .groupBy("client_id")
-        .agg(F.max("high_water").alias("high_water"))
-    )
-    _swap_dir(_as_schema(merged, HW_SCHEMA), path)
+    session = advances.sparkSession
+    cur = read_state(session, path, HW_SCHEMA)
+    merged = session.sql(high_water_merge_sql("{cur}", "{adv}"), cur=cur, adv=advances)
+    _swap_dir(merged, path)
 
 
 # ---------------------------------------------------------------------------

@@ -32,7 +32,6 @@ from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -63,15 +62,30 @@ class KVTableStore:
     distributed merge: read state, apply the (deduped) batch delta,
     commit. The physical form is decided by ``sinks``: real
     ``MERGE INTO`` when the session has Delta (ACID under concurrent
-    writers, matched-file-only rewrites), staged parquet swap otherwise
-    (same all-or-nothing batch semantics, single writer).
+    writers, matched-file-only rewrites), a generation of parquet tables
+    installed by one rename otherwise (same all-or-nothing batch
+    semantics, single writer). ``state_dir`` and ``hw_dir`` name the
+    live tables.
     """
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
         self.root = root
-        self.state_dir = os.path.join(root, "state")
-        self.hw_dir = os.path.join(root, "high_water")
+
+    def _live(self) -> str:
+        from distributed_computing_spark import sinks
+
+        if sinks.delta_available(self.spark):
+            return self.root
+        return sinks.live_generation(self.root)
+
+    @property
+    def state_dir(self) -> str:
+        return os.path.join(self._live(), "state")
+
+    @property
+    def hw_dir(self) -> str:
+        return os.path.join(self._live(), "high_water")
 
     def state(self) -> DataFrame:
         from distributed_computing_spark import sinks
@@ -87,38 +101,74 @@ class KVTableStore:
         """Dedup the batch against persistent high-water, fold writes
         into state, advance high-water — the K4+K2+K3 batch merge.
 
-        8 Spark jobs on the parquet backend: both table reads take their
-        declared schema (no inference job), the fold is one shuffle on
-        key, and nothing is persisted — a persisted frame would keep its
-        shuffle partitioning, since AQE does not coalesce a cached plan.
+        On the parquet backend each table is one SQL statement over the
+        batch and the stored tables, written into the next generation;
+        the generation goes live with one rename, so a failure anywhere
+        leaves both tables at the previous batch. 6 Spark jobs: the
+        state is a write over three shuffles (client window, key fold,
+        stored state), the high-water a write over one. Both tables are
+        read with their declared schema (no inference job) in the
+        batch's own session: a ``foreachBatch`` frame belongs to the
+        stream's cloned session, where the store's session's views do
+        not resolve.
         """
         from distributed_computing_spark import sinks
-        from distributed_computing_spark.operators.kv import dedup_ops, fold_writes
+        from distributed_computing_spark.operators.kv import dedup_sql, fold_sql
 
-        spark = self.spark
-        hw = self.high_water()
-        # Drop ops at-or-below each client's persisted high-water (K4
-        # across batches), then in-batch dedup (K4 within the batch).
-        joined = batch.join(F.broadcast(hw), "client_id", "left")
-        fresh = joined.where(
-            F.col("high_water").isNull() | (F.col("req_id") > F.col("high_water"))
-        ).drop("high_water")
-        writes = dedup_ops(fresh).where(F.col("op").isin("put", "append"))
+        spark = batch.sparkSession
+        live = self._live()
+        hw = sinks.read_state(spark, os.path.join(live, "high_water"), HW_SCHEMA)
+        # The stored high-water enters each client's window as its first
+        # row (NULL seq sorts first, NULL op is no write), so one window
+        # drops ops at-or-below it (K4 across batches) and ops beaten by
+        # an earlier req_id of the batch (K4 within the batch).
+        ops = (
+            "(SELECT CAST(NULL AS BIGINT) AS seq, client_id, high_water AS req_id, "
+            "CAST(NULL AS STRING) AS op, CAST(NULL AS STRING) AS key, "
+            "CAST(NULL AS STRING) AS value FROM {hw} "
+            "UNION ALL SELECT seq, client_id, req_id, op, key, value FROM {batch})"
+        )
         # the MERGE treats the stored value as a seq=-inf append base
         # unless a put in the batch (_lp non-null) resets it
-        folded = fold_writes(writes).withColumnRenamed("value", "_delta")
-        sinks.merge_kv_state(spark, self.state_dir, folded)
+        deduped = f"({dedup_sql(ops)})"
+        folded = f"(SELECT key, value AS _delta, _lp FROM ({fold_sql(deduped)}))"
         # High-water from the RAW batch: max(stored, max req_id over the
         # batch) == max(stored, max req_id over the applied ops), per
         # client. An op the high-water filter dropped has req_id <=
         # stored; an op the in-batch dedup dropped has req_id <= an
         # earlier applied op of its client (the running max it lost to
-        # is attained by an applied op). So the deduped frame is not
-        # read twice and needs no persist.
-        sinks.merge_high_water(
-            spark,
-            self.hw_dir,
-            batch.groupBy("client_id").agg(F.max("req_id").alias("high_water")),
+        # is attained by an applied op). The parquet merge's GROUP BY
+        # takes the max over the raw rows; a Delta MERGE needs one
+        # source row per client.
+        advances = "(SELECT client_id, req_id AS high_water FROM {batch})"
+        if sinks.delta_available(spark):
+            sinks.merge_kv_state(
+                spark,
+                self.state_dir,
+                spark.sql(f"SELECT * FROM {folded}", hw=hw, batch=batch),
+            )
+            sinks.merge_high_water(
+                spark,
+                self.hw_dir,
+                spark.sql(
+                    "SELECT client_id, max(high_water) AS high_water "
+                    f"FROM {advances} GROUP BY client_id",
+                    batch=batch,
+                ),
+            )
+            return
+        state = sinks.read_state(spark, os.path.join(live, "state"), STATE_SCHEMA)
+        sinks.commit_generation(
+            self.root,
+            {
+                "state": spark.sql(
+                    sinks.kv_state_merge_sql("{state}", folded),
+                    state=state, hw=hw, batch=batch,
+                ),
+                "high_water": spark.sql(
+                    sinks.high_water_merge_sql("{hw}", advances), hw=hw, batch=batch
+                ),
+            },
         )
 
 

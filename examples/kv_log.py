@@ -45,18 +45,19 @@ def main() -> None:
 
     # streaming form: same log consumed as micro-batches into a
     # persistent store (exactly-once across batches via high-water)
-    src = tempfile.mkdtemp(prefix="kv_example_src_")
-    ops.where("seq <= 4").coalesce(1).write.mode("append").parquet(src)
-    ops.where("seq > 4").coalesce(1).write.mode("append").parquet(src)
-    store = KVTableStore(spark, tempfile.mkdtemp(prefix="kv_example_store_"))
-    stream = spark.readStream.schema(ops.schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src)
-    foreach_batch_apply(
-        stream, store, tempfile.mkdtemp(prefix="kv_example_ckpt_")
-    ).awaitTermination(120)
-    print("final state (streaming foreachBatch apply):")
-    store.state().orderBy("key").show(truncate=False)
+    with tempfile.TemporaryDirectory(prefix="kv_example_") as tmp:
+        src = os.path.join(tmp, "src")
+        ops.where("seq <= 4").coalesce(1).write.mode("append").parquet(src)
+        ops.where("seq > 4").coalesce(1).write.mode("append").parquet(src)
+        store = KVTableStore(spark, os.path.join(tmp, "store"))
+        stream = spark.readStream.schema(ops.schema).option(
+            "maxFilesPerTrigger", "1"
+        ).parquet(src)
+        foreach_batch_apply(
+            stream, store, os.path.join(tmp, "ckpt")
+        ).awaitTermination(120)
+        print("final state (streaming foreachBatch apply):")
+        store.state().orderBy("key").show(truncate=False)
 
 
 if __name__ == "__main__":

@@ -81,7 +81,8 @@ def test_merge_sink_upsert_parquet_backend(spark, tmp_path):
 def test_merge_sink_kv_state_and_high_water(spark, tmp_path):
     """merge_kv_state: _lp (last put) resets the value, else the delta
     concat-appends onto the stored base; merge_high_water keeps the max
-    per client — the two MERGEs KVTableStore.apply_batch commits."""
+    per client — the two MERGEs KVTableStore.apply_batch commits on the
+    Delta backend, and the rules its parquet statement shares."""
     from distributed_computing_spark import sinks
     from distributed_computing_spark.streaming.kv_stream import HW_SCHEMA
 
@@ -110,6 +111,53 @@ def test_merge_sink_kv_state_and_high_water(spark, tmp_path):
     )
     got = {r["client_id"]: r["high_water"] for r in spark.read.parquet(hw).collect()}
     assert got == {1: 10, 2: 20, 3: 30}
+
+
+@pytest.mark.parametrize("table", ["kv_state", "upsert"])
+def test_swap_failed_between_renames_keeps_the_old_table(
+    spark, tmp_path, monkeypatch, table
+):
+    """A crash between _swap_dir's two renames leaves only path.old.
+    The next read and the next merge put it back: reading an empty table
+    there would rebuild the state from the next batch alone."""
+    import os
+
+    from distributed_computing_spark import sinks
+    from distributed_computing_spark.streaming.kv_stream import STATE_SCHEMA
+
+    path = str(tmp_path / table)
+    ddl = "key string, _delta string, _lp long"
+
+    def merge(rows):
+        if table == "kv_state":
+            sinks.merge_kv_state(spark, path, spark.createDataFrame(rows, ddl))
+        else:
+            updates = spark.createDataFrame([r[:2] for r in rows], STATE_SCHEMA)
+            sinks.merge_upsert_path(spark, path, updates, "key")
+
+    def read():
+        df = sinks.read_state(spark, path, STATE_SCHEMA)
+        return {r["key"]: r["value"] for r in df.collect()}
+
+    merge([("a", "1", 0), ("b", "2", 1)])
+    replace, calls = os.replace, []
+
+    def second_rename_fails(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("injected crash between the renames")
+        replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(sinks.os, "replace", second_rename_fails)
+        with pytest.raises(OSError, match="injected"):
+            merge([("c", "3", 2)])
+    assert not os.path.exists(path) and os.path.exists(path + ".old")
+    if table == "kv_state":
+        assert read() == {"a": "1", "b": "2"}
+    merge([("d", "4", 3)])
+    assert read() == {"a": "1", "b": "2", "d": "4"}
+    assert not os.path.exists(path + ".old")
 
 
 def test_json_sink_source_roundtrip(spark, tmp_path):

@@ -179,7 +179,7 @@ def _high_water(store) -> dict[int, int]:
 
 @pytest.mark.slow
 def test_apply_batch_job_budget(spark, tmp_path):
-    """A warm apply is at most 8 jobs, none of them a schema inference,
+    """A warm apply is at most 6 jobs, none of them a schema inference,
     and reading the store's tables fires no job before the action: both
     tables are read with their declared schema."""
     ops = random_ops(3, n=400)
@@ -187,7 +187,7 @@ def test_apply_batch_job_budget(spark, tmp_path):
     store.apply_batch(spark.createDataFrame(ops[:200], OPS_DDL))
     second = spark.createDataFrame(ops[200:], OPS_DDL)
     _, apply_jobs = _jobs(spark, lambda: store.apply_batch(second))
-    assert len(apply_jobs) <= 8, f"apply fired {len(apply_jobs)} jobs"
+    assert len(apply_jobs) <= 6, f"apply fired {len(apply_jobs)} jobs"
     inference = [s for s in _stage_call_sites(spark, apply_jobs) if "DataFrameReader" in s]
     assert not inference, inference
     # the detector sees a bare read's schema-inference stage
@@ -200,6 +200,49 @@ def test_apply_batch_job_budget(spark, tmp_path):
     want, want_hw = serial_replay_hw(ops)
     assert {r["key"]: r["value"] for r in state.collect()} == want
     assert {r["client_id"]: r["high_water"] for r in hw.collect()} == want_hw
+
+
+def test_apply_batch_retry_after_a_failed_write_applies_once(
+    spark, tmp_path, monkeypatch
+):
+    """A batch whose second staged table write fails leaves both tables
+    at the previous batch, and applying the same batch again lands the
+    serial fold: the store installs both tables of a batch or neither,
+    so a retried batch cannot append its writes twice."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    ops = random_ops(7)
+    store = KVTableStore(spark, str(tmp_path / "store"))
+    store.apply_batch(spark.createDataFrame(ops[:250], OPS_DDL))
+    batch = spark.createDataFrame(ops[250:], OPS_DDL)
+
+    write, calls = DataFrameWriter.parquet, []
+
+    def second_write_fails(self, path, *args, **kwargs):
+        calls.append(path)
+        if len(calls) == 2:
+            raise OSError("injected failure of the second staged write")
+        return write(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", second_write_fails)
+        with pytest.raises(OSError, match="injected"):
+            store.apply_batch(batch)
+    assert (_state(store), _high_water(store)) == serial_replay_hw(ops[:250])
+    store.apply_batch(batch)
+    assert (_state(store), _high_water(store)) == serial_replay_hw(ops)
+
+
+def test_foreach_batch_apply_one_micro_batch(spark, tmp_path):
+    """One micro-batch through foreach_batch_apply lands the serial fold
+    in both tables. The batch frame belongs to the stream's cloned
+    session, so the apply must build its statement there."""
+    ops = random_ops(13, n=200)
+    src = _write_ops_batches(spark, str(tmp_path), ops, n_batches=1)
+    stream = spark.readStream.schema(OPS_SCHEMA).parquet(src)
+    store = KVTableStore(spark, str(tmp_path / "store"))
+    foreach_batch_apply(stream, store, str(tmp_path / "ckpt")).awaitTermination(120)
+    assert (_state(store), _high_water(store)) == serial_replay_hw(ops)
 
 
 INT32_DDL = "seq int, client_id int, req_id int, op string, key string, value string"
