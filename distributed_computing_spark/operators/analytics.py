@@ -18,6 +18,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_computing_spark.functions.frames import frame_maker
 from distributed_computing_spark.sources.catalog import load_table, load_tables, table_rows
 
 
@@ -960,7 +961,8 @@ def pair_counts_from_baskets(
     (see ``basket_pair_counts`` for the plan rationale)."""
     from collections import Counter
 
-    import pandas as pd
+    schema = "a long, b long, n long"
+    build = frame_maker(schema)
 
     def count_pairs(batches):
         c: Counter = Counter()
@@ -971,21 +973,12 @@ def pair_counts_from_baskets(
                     ai = s[i]
                     for j in range(i + 1, len(s)):
                         c[(ai, s[j])] += 1
-        # dtype pins (CLAUDE.md r11): a partition of only over-cap or
-        # single-item baskets emits an all-empty frame, which bare
-        # lists would infer as float64 against the long schema.
-        yield pd.DataFrame(
-            {
-                "a": pd.Series([k[0] for k in c], dtype="int64"),
-                "b": pd.Series([k[1] for k in c], dtype="int64"),
-                "n": pd.Series(list(c.values()), dtype="int64"),
-            }
-        )
+        yield build([k[0] for k in c], [k[1] for k in c], list(c.values()))
 
     return (
         baskets.where(F.size(its_col) <= max_basket)
         .select(its_col)
-        .mapInPandas(count_pairs, "a long, b long, n long")
+        .mapInPandas(count_pairs, schema)
         .groupBy("a", "b")
         .agg(F.sum("n").alias("n_orders"))
         .where(F.col("n_orders") >= min_count)

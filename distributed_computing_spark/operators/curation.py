@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from distributed_computing_spark.functions.frames import map_rows
 from distributed_computing_spark.functions.text import TOKEN_SPLIT_RE
 from distributed_computing_spark.sources.catalog import load_table
 
@@ -135,49 +136,15 @@ def fused_chunk_docs(
         raise ValueError(f"need 0 < stride <= size, got {stride=} {size=}")
     import re
 
-    import pandas as pd
-
     pat = re.compile("[A-Za-z0-9]+")
     extra_cols = list(keep_cols)
 
-    def run(batches):
-        for pdf in batches:
-            od: list = []
-            oc: list = []
-            ot: list = []
-            on: list = []
-            extras: dict[str, list] = {c: [] for c in extra_cols}
-            for row in zip(pdf["doc_id"], pdf[text_col], *[pdf[c] for c in extra_cols]):
-                did, text, *ev = row
-                toks = pat.findall(text if isinstance(text, str) else "")
-                n = len(toks)
-                if n == 0:
-                    continue
-                for ci, start in enumerate(range(0, n, stride)):
-                    piece = toks[start : start + size]
-                    od.append(did)
-                    oc.append(ci)
-                    ot.append(" ".join(piece))
-                    on.append(len(piece))
-                    for c, v in zip(extra_cols, ev):
-                        extras[c].append(v)
-            # dtype pins (CLAUDE.md r11): an all-empty-doc batch emits
-            # zero rows — bare lists would infer float64 for the string
-            # chunk_text and the pass-through extra columns. object is
-            # the universal pin for pass-through values: Arrow converts
-            # per-value against the declared schema.
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(od, dtype="int64"),
-                    **{
-                        c: pd.Series(extras[c], dtype=object)
-                        for c in extra_cols
-                    },
-                    "chunk_id": pd.array(oc, dtype="int64"),
-                    "chunk_text": pd.Series(ot, dtype=object),
-                    "n_tokens": pd.array(on, dtype="int64"),
-                }
-            )
+    def chunk_row(did, *rest):
+        *ev, text = rest
+        toks = pat.findall(text if isinstance(text, str) else "")
+        for ci, start in enumerate(range(0, len(toks), stride)):
+            piece = toks[start : start + size]
+            yield (did, *ev, ci, " ".join(piece), len(piece))
 
     # NOT spread_for_arrow here (round-12, measured): the chunk pass is
     # cheap byte re-slicing, and pipeline callers hand it join outputs
@@ -186,10 +153,10 @@ def fused_chunk_docs(
     # stage spread (corpus_pipeline's probe_in) repartition explicitly.
     types = {f.name: f.dataType.simpleString() for f in docs.schema.fields}
     extra_schema = "".join(f"{c} {types[c]}, " for c in extra_cols)
-    return docs.select("doc_id", *extra_cols, text_col).mapInPandas(
-        run,
-        schema=f"doc_id long, {extra_schema}chunk_id long, "
-        "chunk_text string, n_tokens long",
+    return map_rows(
+        docs.select("doc_id", *extra_cols, text_col),
+        chunk_row,
+        f"doc_id long, {extra_schema}chunk_id long, chunk_text string, n_tokens long",
     )
 
 

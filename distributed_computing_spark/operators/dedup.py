@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from distributed_computing_spark.functions.frames import map_rows
 from distributed_computing_spark.functions.text import (
     fingerprint,
     normalize_text,
@@ -909,8 +910,6 @@ def fused_decontaminate(
     """
     import re
 
-    import pandas as pd
-
     pat = re.compile("[A-Za-z0-9]+")
     spark = corpus.sparkSession
     bench_distinct = shingle_rows(benchmark, n).select("shingle").distinct()
@@ -919,30 +918,15 @@ def fused_decontaminate(
     bench_set = frozenset(r["shingle"] for r in bench_distinct.collect())
     bench_bc = spark.sparkContext.broadcast(bench_set)
 
-    def probe(batches):
+    def probe(did, text):
+        toks = pat.findall(text if isinstance(text, str) else "")
+        if len(toks) < n:
+            return ()
+        # per-doc DISTINCT shingles — shingle_rows(distinct=True) is the
+        # hash plan's contract
+        shingles = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
         bench = bench_bc.value
-        for pdf in batches:
-            ids, tot, hit = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = pat.findall(text if isinstance(text, str) else "")
-                if len(toks) < n:
-                    continue
-                # per-doc DISTINCT shingles — shingle_rows(distinct=True)
-                # is the hash plan's contract
-                shingles = {
-                    " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-                }
-                ids.append(did)
-                tot.append(len(shingles))
-                hit.append(sum(1 for s in shingles if s in bench))
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.array(ids, dtype="int64"),
-                        "n_shingles": pd.array(tot, dtype="int64"),
-                        "n_matched": pd.array(hit, dtype="int64"),
-                    }
-                )
+        return [(did, len(shingles), sum(1 for s in shingles if s in bench))]
 
     # NOT spread_for_arrow here (round-12, measured): corpus_pipeline
     # hands this a complex derived frame that it ALREADY repartitions
@@ -950,8 +934,10 @@ def fused_decontaminate(
     # whole plan a second time (warm +0.5 s, cold +7 s at sf0.1) for a
     # guaranteed no-op. Raw-scan callers spread at the registry site
     # (decontaminate_q), same pattern as blocklist_phrase_matches.
-    per_doc = corpus.select("doc_id", "text").mapInPandas(
-        probe, schema="doc_id long, n_shingles long, n_matched long"
+    per_doc = map_rows(
+        corpus.select("doc_id", "text"),
+        probe,
+        "doc_id long, n_shingles long, n_matched long",
     )
     frac = F.col("n_matched") / F.col("n_shingles")
     return per_doc.select(
@@ -1486,9 +1472,7 @@ def blocklist_matches(
     list slicing) — an independent algorithm, same answer.
     """
     import re
-    from typing import Iterator
-
-    import pandas as pd
+    from collections import Counter
 
     pats = [tuple(p.split()) for p in phrases]
     if any(not p for p in pats):
@@ -1497,40 +1481,26 @@ def blocklist_matches(
     names = list(phrases)
     tok_re = re.compile("[A-Za-z0-9]+")
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import Counter
+    def scan(did, text):
+        c: Counter = Counter()
+        node = 0
+        for w in tok_re.findall(str(text)):
+            while node and w not in goto[node]:
+                node = fail[node]
+            node = goto[node].get(w, 0)
+            for pid in out[node]:
+                c[pid] += 1
+        return [(int(did), pid, n) for pid, n in c.items()]
 
-        for pdf in batches:
-            ids, pids, cnts = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                c: Counter = Counter()
-                node = 0
-                for w in tok_re.findall(str(text)):
-                    while node and w not in goto[node]:
-                        node = fail[node]
-                    node = goto[node].get(w, 0)
-                    for pid in out[node]:
-                        c[pid] += 1
-                for pid, n in c.items():
-                    ids.append(int(did))
-                    pids.append(pid)
-                    cnts.append(n)
-            yield pd.DataFrame(
-                {
-                    "_id": pd.array(ids, dtype="int64"),
-                    "_pid": pd.array(pids, dtype="int32"),
-                    "n_matches": pd.array(cnts, dtype="int64"),
-                }
-            )
-
-    hits = (
+    hits = map_rows(
         documents.select(
             F.col(id_col), F.col(text_col).cast("string").alias(text_col)
         )
         # NULL text matches nothing (the oracle's unnest of a NULL token
         # list yields no rows; str(None) would tokenize as 'None')
-        .where(F.col(text_col).isNotNull())
-        .mapInPandas(scan, schema="_id long, _pid int, n_matches long")
+        .where(F.col(text_col).isNotNull()),
+        scan,
+        "_id long, _pid int, n_matches long",
     )
     name_rows = [(i, n) for i, n in enumerate(names)]
     spark = documents.sparkSession

@@ -121,12 +121,6 @@ def _ordered_concat(order_col: str, value_col: str):
     )
 
 
-def fold_writes(writes: DataFrame) -> DataFrame:
-    """Per-key ordered fold of put/append ops → ``(key, value, _lp)``;
-    see ``fold_sql``."""
-    return writes.sparkSession.sql(fold_sql("{writes}"), writes=writes)
-
-
 def _salted_fold(writes: DataFrame, salt_buckets: int) -> DataFrame:
     """The hot-key form of ``fold_sql``'s fold → ``(key, value)``.
 

@@ -36,6 +36,8 @@ from distributed_computing_spark.caching import session_tmpdir
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_computing_spark.functions.frames import map_rows
+
 
 def quantize(v: str, vmin: int, vmax: int, bits: int = 16) -> Column:
     """Linear quantization of an integer column (named by ``v``) into
@@ -312,68 +314,31 @@ def parquet_footer_profile(spark: SparkSession, paths: list[str]) -> DataFrame:
     total_uncompressed_size) — equality is pytest-checked per file
     (test_layout); the registry entry is rows-only because oracle SQL
     is static text and cannot carry the runtime data path."""
-    import os
-    from typing import Iterator
+    import pyarrow.parquet as pq
 
-    import pandas as pd
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = {
-                "file_name": [],
-                "row_group": [],
-                "column_name": [],
-                "num_values": [],
-                "compressed_bytes": [],
-                "uncompressed_bytes": [],
-            }
-            for p in pdf["path"]:
-                md = pq.ParquetFile(str(p)).metadata
-                base = os.path.basename(str(p))
-                for g in range(md.num_row_groups):
-                    rg = md.row_group(g)
-                    for ci in range(rg.num_columns):
-                        c = rg.column(ci)
-                        rows["file_name"].append(base)
-                        rows["row_group"].append(g)
-                        rows["column_name"].append(c.path_in_schema)
-                        rows["num_values"].append(c.num_values)
-                        rows["compressed_bytes"].append(
-                            c.total_compressed_size
-                        )
-                        rows["uncompressed_bytes"].append(
-                            c.total_uncompressed_size
-                        )
-            # dtype pins (CLAUDE.md r11): a partition of zero paths (or
-            # zero row groups) emits an empty frame — bare lists would
-            # infer float64 against the string/long schema.
-            yield pd.DataFrame(
-                {
-                    "file_name": pd.Series(rows["file_name"], dtype=object),
-                    "row_group": pd.Series(rows["row_group"], dtype="int64"),
-                    "column_name": pd.Series(
-                        rows["column_name"], dtype=object
-                    ),
-                    "num_values": pd.Series(
-                        rows["num_values"], dtype="int64"
-                    ),
-                    "compressed_bytes": pd.Series(
-                        rows["compressed_bytes"], dtype="int64"
-                    ),
-                    "uncompressed_bytes": pd.Series(
-                        rows["uncompressed_bytes"], dtype="int64"
-                    ),
-                }
-            )
+    def footer_rows(p):
+        md = pq.ParquetFile(str(p)).metadata
+        base = os.path.basename(str(p))
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for ci in range(rg.num_columns):
+                c = rg.column(ci)
+                yield (
+                    base,
+                    g,
+                    c.path_in_schema,
+                    c.num_values,
+                    c.total_compressed_size,
+                    c.total_uncompressed_size,
+                )
 
     if not paths:  # ADVICE r7: schemaless createDataFrame([]) throws
         raise ValueError("parquet_footer_profile: empty paths list")
     files = spark.createDataFrame([(p,) for p in paths], ["path"])
-    return files.repartition(min(len(paths), 32)).mapInPandas(
-        scan,
-        schema="file_name string, row_group int, column_name string, "
+    return map_rows(
+        files.repartition(min(len(paths), 32)),
+        footer_rows,
+        "file_name string, row_group int, column_name string, "
         "num_values long, compressed_bytes long, uncompressed_bytes long",
     )
 

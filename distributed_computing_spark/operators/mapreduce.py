@@ -22,6 +22,7 @@ from collections.abc import Callable, Iterable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_computing_spark.functions.frames import frame_maker, map_rows
 from distributed_computing_spark.functions.text import TOKEN_SPLIT_RE, tokens
 from distributed_computing_spark.sources.catalog import load_table
 
@@ -69,14 +70,14 @@ def fused_token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     import pandas as pd
 
     pat = re.compile("[A-Za-z0-9]+")
+    schema = "word string, cnt long"
+    build = frame_maker(schema)
 
     def count_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from collections import Counter
 
         def flush(c: Counter) -> pd.DataFrame:
-            return pd.DataFrame(
-                {"word": list(c.keys()), "cnt": list(c.values())}
-            ).astype({"cnt": "int64"})
+            return build(list(c.keys()), list(c.values()))
 
         c: Counter = Counter()
         for pdf in batches:
@@ -93,7 +94,7 @@ def fused_token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from distributed_computing_spark.parallelism import spread_for_arrow
 
     partial = spread_for_arrow(docs.select(text_col)).mapInPandas(
-        count_batches, schema="word string, cnt long"
+        count_batches, schema=schema
     )
     return partial.groupBy("word").agg(F.sum("cnt").alias("cnt"))
 
@@ -168,46 +169,26 @@ def map_reduce(
     ``n_reduce`` maps to an explicit repartition for parity with the
     reference's nReduce; leave None to let AQE pick.
     """
-    import pandas as pd
-
-    def flat_map(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out_k, out_v = [], []
-            for k, v in zip(pdf["key"], pdf["value"]):
-                for ok, ov in map_f(k, v):
-                    out_k.append(ok)
-                    out_v.append(ov)
-            # dtype pins (CLAUDE.md r11): a zero-output map_f over a
-            # whole batch leaves both lists empty — bare lists would
-            # infer float64 against the string schema.
-            yield pd.DataFrame(
-                {
-                    "key": pd.Series(out_k, dtype=object),
-                    "value": pd.Series(out_v, dtype=object),
-                }
-            )
-
-    mapped = df.select(
-        F.col("key").cast("string").alias("key"),
-        F.col("value").cast("string").alias("value"),
-    ).mapInPandas(flat_map, schema="key string, value string")
+    schema = "key string, value string"
+    mapped = map_rows(
+        df.select(
+            F.col("key").cast("string").alias("key"),
+            F.col("value").cast("string").alias("value"),
+        ),
+        map_f,
+        schema,
+    )
 
     if n_reduce is not None:
         mapped = mapped.repartition(n_reduce, "key")
 
-    def reduce_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        key = pdf["key"].iloc[0]
-        return pd.DataFrame(
-            {
-                "key": pd.Series([key], dtype=object),
-                # a None-returning reduce_f must stay object, not float64
-                "value": pd.Series(
-                    [reduce_f(key, list(pdf["value"]))], dtype=object
-                ),
-            }
-        )
+    build = frame_maker(schema)
 
-    return mapped.groupBy("key").applyInPandas(reduce_group, schema="key string, value string")
+    def reduce_group(pdf):
+        key = pdf["key"].iloc[0]
+        return build([key], [reduce_f(key, list(pdf["value"]))])
+
+    return mapped.groupBy("key").applyInPandas(reduce_group, schema=schema)
 
 
 def map_reduce_rdd(

@@ -12,12 +12,10 @@ signatures — is identical for decodable and undecodable inputs. MP3's
 nonzero-spectrum transform decode raises its recorded dead end (ISO
 tables) rather than faking a known format.
 
-Every per-row Arrow stage goes through ``_map_rows``: one batch loop
-whose output frame takes each column's dtype from the declared DDL
-schema, so a batch that emits no rows still converts instead of
-inferring float64 for a long/binary/array column. Only
-``decode_images_png`` keeps a batch-level body (its unfilter runs over
-the whole batch) and shares the frame maker.
+Every per-row Arrow stage is a ``functions.frames.map_rows`` row
+function. Only ``decode_images_png`` keeps a batch-level body (its
+unfilter runs over the whole batch) and builds its frame with
+``frame_maker``.
 
 Scale notes: binary payloads ride ``BinaryType`` columns in parquet;
 ``mapInPandas`` streams Arrow batches so one task never materializes
@@ -30,13 +28,13 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, StructType
+from pyspark.sql.types import DataType
 
 from distributed_computing_spark.functions.codecs import (
     decode_avi,
@@ -53,6 +51,7 @@ from distributed_computing_spark.functions.codecs import (
     mean_pool,
     unfilter_scanlines_batch,
 )
+from distributed_computing_spark.functions.frames import frame_maker, map_rows
 from distributed_computing_spark.functions.jpeg import Q_FLAT16, decode_jpeg, encode_jpeg
 from distributed_computing_spark.functions.mp3 import decode_mp3, encode_mp3_silence, parse_mp3
 from distributed_computing_spark.parallelism import spread_for_arrow
@@ -68,50 +67,10 @@ _IMAGE_MEANS = (
     "blob_id long, width int, height int, mean_r double, mean_g double, mean_b double"
 )
 
-# pandas dtype per Spark simpleString; every other type is an object column
-_PANDAS_DTYPES = {"bigint": "int64", "int": "int32", "double": "float64", "float": "float32"}
-
-
-def _frame_maker(schema: StructType) -> Callable[[list[tuple]], pd.DataFrame]:
-    """A function that turns a batch's output tuples into a frame with
-    every column pinned to its ``schema`` dtype — an empty or all-None
-    batch never infers float64 for a long/binary/array column."""
-    fields = [
-        (f.name, _PANDAS_DTYPES.get(f.dataType.simpleString(), object))
-        for f in schema.fields
-    ]
-
-    def build(rows: list[tuple]) -> pd.DataFrame:
-        cols = list(zip(*rows)) if rows else [()] * len(fields)
-        return pd.DataFrame(
-            {name: pd.Series(list(c), dtype=dt) for (name, dt), c in zip(fields, cols)}
-        )
-
-    return build
-
-
-def _map_rows(df: DataFrame, row_fn: Callable[..., Iterable[tuple]], schema: str) -> DataFrame:
-    """Arrow row map: ``row_fn`` gets each row of ``df`` as positional
-    values (in column order) and yields zero or more output tuples in
-    ``schema`` order; each batch's tuples become one dtype-pinned
-    frame. Works on streaming frames too (a stateless map). The DDL is
-    parsed once, when the operator is called, not per batch."""
-    out_schema = DataType.fromDDL(schema)
-    build = _frame_maker(out_schema)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield build(
-                [out for row in pdf.itertuples(index=False, name=None) for out in row_fn(*row)]
-            )
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def _blob_table(docs: DataFrame, make_blob: Callable[[int], bytes]) -> DataFrame:
     """One ``(blob_id, data)`` row per document: ``make_blob(doc_id)``
     encodes the payload, on inputs spread over every core first."""
-    return _map_rows(
+    return map_rows(
         spread_for_arrow(docs.select("doc_id")),
         lambda did: [(int(did), make_blob(int(did)))],
         "blob_id long, data binary",
@@ -152,7 +111,7 @@ def _pooled_row(bid, img: np.ndarray, out_w: int, out_h: int, pool=mean_pool) ->
 def _decode_means(blobs: DataFrame, decode, out_w: int, out_h: int) -> DataFrame:
     """The shared image-decoder path: ``decode(bytes)`` → mean-pool →
     channel means, in the ``_IMAGE_MEANS`` contract."""
-    return _map_rows(
+    return map_rows(
         blobs.select("blob_id", "data"),
         lambda bid, data: [_pooled_row(bid, decode(bytes(data)), out_w, out_h)],
         _IMAGE_MEANS,
@@ -308,7 +267,7 @@ def decode_images(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame
     imgs = blobs.where(F.col("modality") == "image").select(
         "blob_id", "data", "meta.width", "meta.height"
     )
-    return _map_rows(imgs, row, _IMAGE_MEANS)
+    return map_rows(imgs, row, _IMAGE_MEANS)
 
 
 def _decode_wave_any(
@@ -360,7 +319,7 @@ def decode_audio(blobs: DataFrame, sample_rate: int = 8000) -> DataFrame:
     auds = blobs.where(F.col("modality") == "audio").select(
         "blob_id", "data", "meta.duration_ms"
     )
-    return _map_rows(auds, row, "blob_id long, n_samples long, rms double, peak double")
+    return map_rows(auds, row, "blob_id long, n_samples long, rms double, peak double")
 
 
 def sample_frames(blobs: DataFrame, k: int = 4) -> DataFrame:
@@ -398,7 +357,7 @@ def extract_features(blobs: DataFrame) -> DataFrame:
         vec = vec / (np.linalg.norm(vec) or 1.0)
         yield int(bid), [float(x) for x in vec]
 
-    return _map_rows(
+    return map_rows(
         blobs.select("blob_id", "data"), row, "blob_id long, embedding array<float>"
     )
 
@@ -427,7 +386,7 @@ def bmp_wav_blobs(docs: DataFrame) -> DataFrame:
             i = np.arange(256, dtype=np.int64)
             yield did, "audio", encode_wav(((did * 31 + i * 17) % 65536) - 32768)
 
-    return _map_rows(
+    return map_rows(
         spread_for_arrow(docs.select("doc_id")), row, "blob_id long, modality string, data binary"
     )
 
@@ -452,7 +411,7 @@ def decode_audio_wav(blobs: DataFrame) -> DataFrame:
         yield int(bid), len(s64), rate, int(np.abs(s64).max()), int(s64.sum())
 
     auds = blobs.where(F.col("modality") == "audio").select("blob_id", "data")
-    return _map_rows(
+    return map_rows(
         auds,
         row,
         "blob_id long, n_samples int, sample_rate int, peak long, sum_samples long",
@@ -481,7 +440,7 @@ def sample_frames_avi(blobs: DataFrame, stride: int = 2) -> DataFrame:
             m = frames[f].astype(np.float64).mean(axis=(0, 1))
             yield int(bid), f, float(m[0]), float(m[1]), float(m[2])
 
-    return _map_rows(
+    return map_rows(
         blobs.select("blob_id", "data"),
         row,
         "blob_id long, frame_idx int, mean_r double, mean_g double, mean_b double",
@@ -510,7 +469,7 @@ def decode_images_png(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> DataF
     (measured 28× on 16×16 RGB, bit-identical). Odd shapes fall back to
     the scalar decoder."""
     out_schema = DataType.fromDDL(_IMAGE_MEANS)
-    build = _frame_maker(out_schema)
+    build = frame_maker(out_schema)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -528,7 +487,7 @@ def decode_images_png(blobs: DataFrame, out_w: int = 8, out_h: int = 8) -> DataF
                     imgs = [decode_png(datas[idx]) for idx, _ in members]
                 for (idx, _), img in zip(members, imgs):
                     rows[idx] = _pooled_row(bids[idx], img, out_w, out_h)
-            yield build(rows)
+            yield build(*zip(*rows))
 
     return blobs.select("blob_id", "data").mapInPandas(run, schema=out_schema)
 
@@ -613,7 +572,7 @@ def decode_audio_mp3(blobs: DataFrame) -> DataFrame:
             frames[0]["side_info"]["granules"][0]["global_gain"],
         )
 
-    return _map_rows(
+    return map_rows(
         blobs.select("blob_id", "data"),
         row,
         "blob_id long, n_frames int, bitrate_kbps int, sample_rate int, "
@@ -711,7 +670,7 @@ def dhash_images(blobs: DataFrame) -> DataFrame:
     fake at 16x16) then the 56-bit integer dHash — the whole Arrow
     batch emits (blob_id, dhash BIGINT), so everything downstream of
     the Python stage is id+hash-sized."""
-    return _map_rows(
+    return map_rows(
         blobs.select("blob_id", "data"),
         lambda bid, data: [(int(bid), dhash_py(_decode_rgb_any(bytes(data), 16, 16)))],
         "blob_id long, dhash long",
@@ -830,7 +789,7 @@ def video_frame_hashes(blobs: DataFrame) -> DataFrame:
         for f, frame in enumerate(decode_avi(bytes(data))):
             yield int(bid), f, dhash_py(frame)
 
-    return _map_rows(
+    return map_rows(
         blobs.select("blob_id", "data"), row, "blob_id long, frame_idx int, dhash long"
     )
 

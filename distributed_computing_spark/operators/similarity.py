@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from distributed_computing_spark.functions.frames import frame_maker
 from distributed_computing_spark.functions.vectors import (
     cosine,
     lsh_bucket,
@@ -564,6 +565,7 @@ def embedding_neardup(
     """
     t = float(threshold)
     id_out = "a long, b long"
+    build = frame_maker(id_out)
 
     def block_pairs(key, pdf):
         bi, bj = int(key[0]), int(key[1])
@@ -578,19 +580,11 @@ def embedding_neardup(
             left = pdf["_blk"].to_numpy() == bi
             la, lb = mat[left], mat[~left]
             if not len(la) or not len(lb):
-                return pd.DataFrame({"a": [], "b": []}, dtype="int64")
+                return build()
             sims = la @ lb.T
             ii, jj = np.nonzero(sims >= t)
             a, b = ids[left][ii], ids[~left][jj]
-        # dtype pins (CLAUDE.md r11): a/b are int64 ndarrays today, but
-        # an above-threshold-free block emits zero rows — pin so the
-        # declared long schema never meets an inferred float64 frame.
-        return pd.DataFrame(
-            {
-                "a": pd.Series(np.minimum(a, b), dtype="int64"),
-                "b": pd.Series(np.maximum(a, b), dtype="int64"),
-            }
-        )
+        return build(np.minimum(a, b), np.maximum(a, b))
 
     blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
     rep = (
@@ -636,6 +630,8 @@ def cosine_topk_gemm(
     q_ids = np.array([r[id_col] for r in q_rows])
     q_mat = np.array([r[vec_col] for r in q_rows], dtype="float64")
     q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True) + 1e-12
+    schema = "q_id long, nn_id long, sim double"
+    build = frame_maker(schema)
 
     def score(batches):
         for pdf in batches:
@@ -663,23 +659,11 @@ def cosine_topk_gemm(
                 out_q.append(np.full(len(sel), q_ids[j]))
                 out_nn.append(nn[sel])
                 out_sim.append(sims[sel, j])
-            yield pd.DataFrame(
-                {
-                    "q_id": pd.Series(
-                        np.concatenate(out_q), dtype="int64"
-                    ),
-                    "nn_id": pd.Series(
-                        np.concatenate(out_nn), dtype="int64"
-                    ),
-                    "sim": pd.Series(
-                        np.concatenate(out_sim), dtype="float64"
-                    ),
-                }
+            yield build(
+                np.concatenate(out_q), np.concatenate(out_nn), np.concatenate(out_sim)
             )
 
-    sims = embeddings.select(id_col, vec_col).mapInPandas(
-        score, schema="q_id long, nn_id long, sim double"
-    )
+    sims = embeddings.select(id_col, vec_col).mapInPandas(score, schema=schema)
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("nn_id"))
     return (
         sims.where(F.col("q_id") != F.col("nn_id"))
@@ -824,9 +808,11 @@ def kmeans_quantized(
         # dist) only halves the final pass's JVM←Python transfer.
         if use_gemm:
             import numpy as np
-            import pandas as pd
 
             C, c2 = _gemm_consts()
+            schema_q = ", q array<long>" if with_q else ""
+            schema = f"{id_col} long{schema_q}, cluster int, dist long"
+            build = frame_maker(schema)
 
             def assign(batches):
                 for p in batches:
@@ -836,18 +822,10 @@ def kmeans_quantized(
                     x2 = (X * X).sum(1)
                     d2 = x2[:, None] + c2[None, :] - 2 * (X @ C.T)
                     j = d2.argmin(1)  # first min = lowest cluster id
-                    out = {id_col: p[id_col]}
-                    if with_q:
-                        out["q"] = p["q"]
-                    out["cluster"] = j.astype("int32")
-                    out["dist"] = d2[np.arange(len(j)), j]
-                    yield pd.DataFrame(out)
+                    ids_q = [p[id_col], p["q"]] if with_q else [p[id_col]]
+                    yield build(*ids_q, j, d2[np.arange(len(j)), j])
 
-            schema_q = ", q array<long>" if with_q else ""
-            return q.mapInPandas(
-                assign,
-                f"{id_col} long{schema_q}, cluster int, dist long",
-            )
+            return q.mapInPandas(assign, schema)
         dist_cols = [
             F.aggregate(
                 F.zip_with(
@@ -885,9 +863,10 @@ def kmeans_quantized(
         (empty keeps previous centroid, as before)."""
         if use_gemm:
             import numpy as np
-            import pandas as pd
 
             C, c2 = _gemm_consts()
+            schema = "cluster int, dim int, sx long, n long"
+            build = frame_maker(schema)
 
             def partial_sums(batches):
                 S = np.zeros((k, dim), dtype=np.int64)
@@ -902,27 +881,16 @@ def kmeans_quantized(
                     np.add.at(S, j, X)
                     cnt += np.bincount(j, minlength=k)
                 present = np.flatnonzero(cnt)
-                yield pd.DataFrame(
-                    {
-                        "cluster": pd.Series(
-                            np.repeat(present, dim), dtype="int32"
-                        ),
-                        "dim": pd.Series(
-                            np.tile(np.arange(dim), len(present)),
-                            dtype="int32",
-                        ),
-                        "sx": pd.Series(S[present].ravel(), dtype="int64"),
-                        "n": pd.Series(
-                            np.repeat(cnt[present], dim), dtype="int64"
-                        ),
-                    }
+                yield build(
+                    np.repeat(present, dim),
+                    np.tile(np.arange(dim), len(present)),
+                    S[present].ravel(),
+                    np.repeat(cnt[present], dim),
                 )
 
             return (
                 q.select("q")
-                .mapInPandas(
-                    partial_sums, "cluster int, dim int, sx long, n long"
-                )
+                .mapInPandas(partial_sums, schema)
                 .groupBy("cluster", "dim")
                 .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
                 .collect()

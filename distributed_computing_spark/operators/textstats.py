@@ -7,9 +7,14 @@ the driver's oracle gate covers them value-for-value.
 
 from __future__ import annotations
 
+import hashlib
+import re
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_computing_spark.functions.frames import frame_maker, map_rows
 from distributed_computing_spark.functions.text import (
     LANG_LEXICONS,
     TOKEN_MATCH_RE,
@@ -262,15 +267,12 @@ def bigram_pmi(
     the Arrow tokenize pass — while the single-node side doubles per
     tier (0.38 → 0.63 → 1.13 s), ratio 12.5× → 6.0× → 4.9×;
     extrapolated crossing ~R800 (BASELINE.md, RECORDED_R9_TIERS)."""
-    import re
-    from collections import Counter
-
-    import pandas as pd
-
     from distributed_computing_spark.caching import track_persist
 
     docs = load_table(spark, sf_dir, "documents")
     pat = re.compile(TOKEN_MATCH_RE)
+    gram_schema = "x string, y string, cnt long"
+    build = frame_maker(gram_schema)
 
     def count_grams(batches):
         uni: Counter = Counter()
@@ -280,28 +282,17 @@ def bigram_pmi(
                 toks = pat.findall(text)
                 uni.update(toks)
                 bi.update(zip(toks, toks[1:]))
-        # dtype pins (CLAUDE.md r11): a zero-token partition emits an
-        # all-empty frame, which bare lists would infer as float64.
-        yield pd.DataFrame(
-            {
-                "x": pd.Series(
-                    [w for w in uni] + [a for a, _ in bi], dtype=object
-                ),
-                "y": pd.Series(
-                    [None] * len(uni) + [b for _, b in bi], dtype=object
-                ),
-                "cnt": pd.Series(
-                    [c for c in uni.values()] + list(bi.values()),
-                    dtype="int64",
-                ),
-            }
+        yield build(
+            [w for w in uni] + [a for a, _ in bi],
+            [None] * len(uni) + [b for _, b in bi],
+            [c for c in uni.values()] + list(bi.values()),
         )
 
     from distributed_computing_spark.parallelism import spread_for_arrow
 
     grams = track_persist(
         spread_for_arrow(docs.select("text"))
-        .mapInPandas(count_grams, schema="x string, y string, cnt long")
+        .mapInPandas(count_grams, schema=gram_schema)
         .groupBy("x", "y")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -376,16 +367,14 @@ def doc_cooccurrence(
     ·10⁶ approaches 2^63 at replica scale); the FINAL schema ships
     BIGINT counts and the bounded BIGINT lift_ppm (decimal-purge
     rule)."""
-    import re
-    from collections import Counter
     from itertools import combinations
-
-    import pandas as pd
 
     from distributed_computing_spark.caching import track_persist
 
     docs = load_table(spark, sf_dir, "documents")
     pat = re.compile(TOKEN_MATCH_RE)
+    gram_schema = "x string, y string, cnt long"
+    build = frame_maker(gram_schema)
 
     def count_cooc(batches):
         pair_c: Counter = Counter()
@@ -402,19 +391,13 @@ def doc_cooccurrence(
         xs = [w for w in tok_c] + [a for a, _ in pair_c] + [None]
         ys = [None] * len(tok_c) + [b for _, b in pair_c] + [None]
         cs = list(tok_c.values()) + list(pair_c.values()) + [ndocs]
-        yield pd.DataFrame(
-            {
-                "x": pd.Series(xs, dtype=object),
-                "y": pd.Series(ys, dtype=object),
-                "cnt": pd.Series(cs, dtype="int64"),
-            }
-        )
+        yield build(xs, ys, cs)
 
     from distributed_computing_spark.parallelism import spread_for_arrow
 
     grams = track_persist(
         spread_for_arrow(docs.select("text"))
-        .mapInPandas(count_cooc, schema="x string, y string, cnt long")
+        .mapInPandas(count_cooc, schema=gram_schema)
         .groupBy("x", "y")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -551,40 +534,21 @@ def fused_repetition_scores(documents: DataFrame, n: int = 2) -> DataFrame:
     ``fused_token_counts``: C-regex + C-dict batch passes win where
     interpreted per-element HOFs lost (the round-2 dead end).
     """
-    import re
-    from collections import Counter
-
-    import pandas as pd
-
     pat = re.compile("[A-Za-z0-9]+")
 
-    def profile(batches):
-        for pdf in batches:
-            ids, tot, dis, top = [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = pat.findall(text if isinstance(text, str) else "")
-                if len(toks) < n:
-                    continue  # no shingles — drops out, same contract
-                c = Counter(zip(*[toks[i:] for i in range(n)]))
-                ids.append(did)
-                tot.append(len(toks) - n + 1)
-                dis.append(len(c))
-                top.append(max(c.values()))
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.array(ids, dtype="int64"),
-                        "total_ngrams": pd.array(tot, dtype="int64"),
-                        "distinct_ngrams": pd.array(dis, dtype="int64"),
-                        "top_count": pd.array(top, dtype="int64"),
-                    }
-                )
+    def profile(did, text):
+        toks = pat.findall(text if isinstance(text, str) else "")
+        if len(toks) < n:
+            return ()  # no shingles — drops out, same contract
+        c = Counter(zip(*[toks[i:] for i in range(n)]))
+        return [(did, len(toks) - n + 1, len(c), max(c.values()))]
 
     from distributed_computing_spark.parallelism import spread_for_arrow
 
-    per_doc = spread_for_arrow(documents.select("doc_id", "text")).mapInPandas(
+    per_doc = map_rows(
+        spread_for_arrow(documents.select("doc_id", "text")),
         profile,
-        schema="doc_id long, total_ngrams long, distinct_ngrams long, top_count long",
+        "doc_id long, total_ngrams long, distinct_ngrams long, top_count long",
     )
     total = F.col("total_ngrams").cast("double")
     return per_doc.select(
@@ -878,34 +842,18 @@ def vocab_growth(
         spark.createDataFrame(cuts, "bucket_i long, thr long")
     )
 
-    def tokenize_pass(it):
-        import re
+    tok = re.compile(r"[A-Za-z0-9]+", re.ASCII)
 
-        import pandas as pd
-
-        tok = re.compile(r"[A-Za-z0-9]+", re.ASCII)
-        for pdf in it:
-            ids, ns, arrs = [], [], []
-            for d, t in zip(pdf["doc_id"], pdf["text"]):
-                ts = tok.findall(t)
-                ids.append(d)
-                ns.append(len(ts))
-                arrs.append(list(set(ts)))
-            # explicit dtypes (the winnow_pass lesson): an empty batch
-            # must not let pandas infer float64 for long/array columns.
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_tokens": pd.Series(ns, dtype="int64"),
-                    "dtoks": pd.Series(arrs, dtype=object),
-                }
-            )
+    def tokenize_row(d, t):
+        ts = tok.findall(t)
+        return [(d, len(ts), list(set(ts)))]
 
     from distributed_computing_spark.parallelism import spread_for_arrow
 
     raw = track_persist(
-        spread_for_arrow(docs.select("doc_id", "text")).mapInPandas(
-            tokenize_pass,
+        map_rows(
+            spread_for_arrow(docs.select("doc_id", "text")),
+            tokenize_row,
             "doc_id long, n_tokens long, dtoks array<string>",
         )
     )
@@ -965,69 +913,40 @@ def winnow_docs(docs_df: DataFrame) -> DataFrame:
     so the streaming twin (stream_winnow_ingest) is a plain append-mode
     map over the same function (the stream_dhash_ingest motion)."""
     k, w, pos_max = WINNOW_K, WINNOW_W, _WINNOW_POS_MAX
+    tok = re.compile(r"[A-Za-z0-9]+", re.ASCII)
 
-    def winnow_pass(it):
-        import hashlib
-        import re
-
-        import pandas as pd
-
-        tok = re.compile(r"[A-Za-z0-9]+", re.ASCII)
-        for pdf in it:
-            ids, srcs, ngs, nfs, hs = [], [], [], [], []
-            for i, s, t in zip(
-                pdf["doc_id"], pdf["source"], pdf["text"]
-            ):
-                toks = tok.findall(t)
-                n = len(toks) - (k - 1)
-                if n < 1:
-                    continue
-                if n > pos_max:
-                    raise ValueError(
-                        f"winnow_docs: {n} grams exceeds the "
-                        f"2^{_WINNOW_POS_BITS}-1 position contract"
-                    )
-                keys = [
-                    int(
-                        hashlib.md5(
-                            " ".join(toks[p - 1 : p - 1 + k]).encode(
-                                "utf-8"
-                            )
-                        ).hexdigest()[:10],
-                        16,
-                    )
-                    * (pos_max + 1)
-                    + (pos_max - p)
-                    for p in range(1, n + 1)
-                ]
-                sel = {
-                    min(keys[p - 1 : p - 1 + w])
-                    for p in range(1, max(1, n - w + 1) + 1)
-                }
-                ids.append(i)
-                srcs.append(s)
-                ngs.append(n)
-                nfs.append(len(sel))
-                hs.append(sorted({key // (pos_max + 1) for key in sel}))
-            # explicit dtypes: a batch where every doc has zero grams
-            # yields empty lists, which pandas would otherwise infer as
-            # float64 — Arrow then cannot convert to string/list types.
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "source": pd.Series(srcs, dtype=object),
-                    "n_grams": pd.Series(ngs, dtype="int64"),
-                    "n_fp": pd.Series(nfs, dtype="int64"),
-                    "fp_hashes": pd.Series(hs, dtype=object),
-                }
+    def winnow_row(i, s, t):
+        toks = tok.findall(t)
+        n = len(toks) - (k - 1)
+        if n < 1:
+            return ()
+        if n > pos_max:
+            raise ValueError(
+                f"winnow_docs: {n} grams exceeds the "
+                f"2^{_WINNOW_POS_BITS}-1 position contract"
             )
+        keys = [
+            int(
+                hashlib.md5(
+                    " ".join(toks[p - 1 : p - 1 + k]).encode("utf-8")
+                ).hexdigest()[:10],
+                16,
+            )
+            * (pos_max + 1)
+            + (pos_max - p)
+            for p in range(1, n + 1)
+        ]
+        sel = {
+            min(keys[p - 1 : p - 1 + w])
+            for p in range(1, max(1, n - w + 1) + 1)
+        }
+        return [(i, s, n, len(sel), sorted({key // (pos_max + 1) for key in sel}))]
 
     from distributed_computing_spark.parallelism import spread_for_arrow
 
-    return spread_for_arrow(
-        docs_df.select("doc_id", "source", "text")
-    ).mapInPandas(
-        winnow_pass,
+    return map_rows(
+        spread_for_arrow(docs_df.select("doc_id", "source", "text")),
+        winnow_row,
         "doc_id long, source string, n_grams long, n_fp long, "
         "fp_hashes array<long>",
     )

@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_computing_spark.functions.frames import map_rows
 from distributed_computing_spark.operators import (
     analytics,
     curation,
@@ -1000,12 +1001,15 @@ def stream_kv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         KVTableStore,
         foreach_batch_apply,
     )
-    from distributed_computing_spark.streaming.runner import stream_in_seq_batches
+    from distributed_computing_spark.streaming.runner import (
+        finish_available_now,
+        stream_in_seq_batches,
+    )
 
     stream = stream_in_seq_batches(spark, _ops(spark, sf_dir), n=3)
     store = KVTableStore(spark, session_tmpdir(prefix="dcs_store_"))
-    q = foreach_batch_apply(stream, store, session_tmpdir(prefix="dcs_ckpt_"))
-    q.awaitTermination(300)
+    ckpt = session_tmpdir(prefix="dcs_ckpt_")
+    finish_available_now(foreach_batch_apply(stream, store, ckpt), ckpt)
     return store.state()
 
 
@@ -1097,20 +1101,18 @@ def stream_config_poll(spark: SparkSession, sf_dir: str) -> DataFrame:
         ConfigMaster,
         route_stream_by_latest_config,
     )
-    from distributed_computing_spark.streaming.runner import stream_in_seq_batches
+    from distributed_computing_spark.streaming.runner import (
+        finish_available_now,
+        stream_in_seq_batches,
+    )
 
     stream = stream_in_seq_batches(spark, _ops(spark, sf_dir), n=3)
     cfg_dir = session_tmpdir(prefix="dcs_cfg_")
     out_dir = session_tmpdir(prefix="dcs_routed_")
+    ckpt = session_tmpdir(prefix="dcs_ckpt_")
     master = ConfigMaster(spark, cfg_dir, max_version=3)
-    q = route_stream_by_latest_config(
-        stream,
-        cfg_dir,
-        out_dir,
-        session_tmpdir(prefix="dcs_ckpt_"),
-        master=master,
-    )
-    q.awaitTermination(300)
+    q = route_stream_by_latest_config(stream, cfg_dir, out_dir, ckpt, master=master)
+    finish_available_now(q, ckpt)
     routed = spark.read.parquet(out_dir).select("config_num", "gid", "key")
     return routed.groupBy("config_num", "gid").agg(
         F.count("*").alias("n_ops"),
@@ -1135,14 +1137,17 @@ def stream_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_computing_spark.caching import session_tmpdir
 
     from distributed_computing_spark.streaming.ingest import CorpusIngestStore
-    from distributed_computing_spark.streaming.runner import stream_in_seq_batches
+    from distributed_computing_spark.streaming.runner import (
+        finish_available_now,
+        stream_in_seq_batches,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     stream = stream_in_seq_batches(spark, docs, n=3, order_col="doc_id")
     store = CorpusIngestStore(spark, session_tmpdir(prefix="dcs_curated_"))
     ckpt = session_tmpdir(prefix="dcs_ckpt_")
     q = store.attach(stream, ckpt, curate=True, min_quality=0.5, near_dup=False)
-    q.awaitTermination(300)
+    finish_available_now(q, ckpt)
     return store.corpus().groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.min("doc_id").alias("min_doc_id"),
@@ -1181,20 +1186,25 @@ def stream_kv_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_stream,
         stateful_fold_stream,
     )
-    from distributed_computing_spark.streaming.runner import run_to_batch, stream_table
+    from distributed_computing_spark.streaming.runner import (
+        finish_available_now,
+        run_to_batch,
+        stream_table,
+    )
 
     ops = _ops(spark, sf_dir)
     eff_dir = session_tmpdir(prefix="dcs_eff_")
+    ckpt = session_tmpdir(prefix="dcs_ckpt_")
     q1 = (
         dedup_stream(stream_table(spark, ops))
         .writeStream.format("parquet")
         .option("path", eff_dir)
-        .option("checkpointLocation", session_tmpdir(prefix="dcs_ckpt_"))
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
-    q1.awaitTermination(300)
+    finish_available_now(q1, ckpt)
     eff = spark.readStream.schema(ops.schema).parquet(eff_dir)
     out = run_to_batch(stateful_fold_stream(eff), spark, output_mode="update")
     return out.where(F.col("value") != "")
@@ -6756,35 +6766,32 @@ def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     |kinds × cluster-sizes| rows."""
     from distributed_computing_spark.caching import track_persist
 
+    import hashlib
+    import re
+
     docs = load_table(spark, sf_dir, "documents")
+    ws = re.compile(r"\s+", re.ASCII)
+    tok = re.compile(r"[A-Za-z0-9]+", re.ASCII)
 
-    def hash_pass(it):
-        import hashlib
-        import re
-
-        ws = re.compile(r"\s+", re.ASCII)
-        tok = re.compile(r"[A-Za-z0-9]+", re.ASCII)
-        for pdf in it:
-            eh, ph = [], []
-            for t in pdf["text"]:
-                norm = ws.sub(" ", t.lower()).strip(" ")
-                eh.append(hashlib.md5(norm.encode("utf-8")).hexdigest())
-                toks = tok.findall(t)
-                ph.append(
-                    hashlib.md5(
-                        " ".join(toks[:16]).encode("utf-8")
-                    ).hexdigest()
-                    if toks
-                    else None
-                )
-            out = pdf[["doc_id", "n_chars"]].copy()
-            out["eh"] = eh
-            out["ph"] = ph
-            yield out
+    def hash_row(doc_id, n_chars, t):
+        norm = ws.sub(" ", t.lower()).strip(" ")
+        toks = tok.findall(t)
+        return [
+            (
+                doc_id,
+                n_chars,
+                hashlib.md5(norm.encode("utf-8")).hexdigest(),
+                hashlib.md5(" ".join(toks[:16]).encode("utf-8")).hexdigest()
+                if toks
+                else None,
+            )
+        ]
 
     hashed = track_persist(
-        docs.select("doc_id", "n_chars", "text").mapInPandas(
-            hash_pass, "doc_id long, n_chars long, eh string, ph string"
+        map_rows(
+            docs.select("doc_id", "n_chars", "text"),
+            hash_row,
+            "doc_id long, n_chars long, eh string, ph string",
         )
     )
 
@@ -6876,21 +6883,16 @@ def source_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         grouped_weighted_quantiles_multi,
     )
 
+    import re
+
     docs = load_table(spark, sf_dir, "documents")
-
-    def count_pass(it):
-        import re
-
-        tok = re.compile(r"[A-Za-z0-9]+", re.ASCII)
-        for pdf in it:
-            out = pdf[["source"]].copy()
-            out.columns = ["g"]
-            out["v"] = [len(tok.findall(t)) for t in pdf["text"]]
-            yield out
-
+    tok = re.compile(r"[A-Za-z0-9]+", re.ASCII)
     vw = track_persist(
-        docs.select("source", "text")
-        .mapInPandas(count_pass, "g string, v long")
+        map_rows(
+            docs.select("source", "text"),
+            lambda src, t: [(src, len(tok.findall(t)))],
+            "g string, v long",
+        )
         .groupBy("g", "v")
         .agg(F.count(F.lit(1)).alias("wt"))
     )

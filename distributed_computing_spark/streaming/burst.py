@@ -44,6 +44,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from distributed_computing_spark.functions.frames import frame_maker
+
+
 ALERT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -66,6 +69,7 @@ def burst_alert_stream(
     inclusive event count first reaches/exceeds ``threshold`` at that
     timestamp — identical to the batch RANGE-frame definition
     (ties counted in full; duplicates collapsed to one row)."""
+    build = frame_maker(ALERT_SCHEMA)
 
     def alert(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -93,15 +97,7 @@ def burst_alert_stream(
                 out_n.append(len(recent))
         state.update((json.dumps(recent),))
         if out_t:
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.Series(
-                        [int(key[0])] * len(out_t), dtype="int64"
-                    ),
-                    "t": pd.Series(out_t, dtype="int64"),
-                    "n_events": pd.Series(out_n, dtype="int64"),
-                }
-            )
+            yield build([int(key[0])] * len(out_t), out_t, out_n)
 
     return events.groupBy("user_id").applyInPandasWithState(
         alert,

@@ -34,6 +34,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from distributed_computing_spark.functions.frames import frame_maker
+
+
 GAP_SCHEMA = StructType(
     [
         StructField("event_type", StringType()),
@@ -53,6 +56,7 @@ def gap_stream(events: DataFrame) -> DataFrame:
     Input columns: user_id, event_type, us (epoch microseconds),
     event_id. State per key is ONE long — bounded by the key domain
     for an unbounded stream."""
+    build = frame_maker(GAP_SCHEMA)
 
     def fold(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -77,12 +81,7 @@ def gap_stream(events: DataFrame) -> DataFrame:
             last_us = u
         state.update((int(last_us),))
         if gaps:
-            yield pd.DataFrame(
-                {
-                    "event_type": [str(key[1])] * len(gaps),
-                    "gap_s": pd.Series(gaps, dtype="int64"),
-                }
-            )
+            yield build([str(key[1])] * len(gaps), gaps)
 
     return events.groupBy("user_id", "event_type").applyInPandasWithState(
         fold,

@@ -40,6 +40,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from distributed_computing_spark.functions.frames import frame_maker
+
+
 OPS_SCHEMA = StructType(
     [
         StructField("seq", LongType()),
@@ -269,6 +272,7 @@ def stateful_fold_stream(effective_ops: DataFrame) -> DataFrame:
     state_schema = StructType(
         [StructField("value", StringType()), StructField("max_seq", LongType())]
     )
+    build = frame_maker(out_schema)
 
     def fold(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -287,12 +291,7 @@ def stateful_fold_stream(effective_ops: DataFrame) -> DataFrame:
             elif r.op == "append":
                 value = value + r.value
         state.update((value, max_seq))
-        yield pd.DataFrame(
-            {
-                "key": pd.Series([key[0]], dtype=object),
-                "value": pd.Series([value], dtype=object),
-            }
-        )
+        yield build([key[0]], [value])
 
     return effective_ops.groupBy("key").applyInPandasWithState(
         fold,

@@ -17,11 +17,31 @@ means silently dropping the tail.
 from __future__ import annotations
 
 import itertools
-from distributed_computing_spark.caching import session_tmpdir
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
+
+from distributed_computing_spark.caching import session_tmpdir
 
 _name_counter = itertools.count()
+
+
+def finish_available_now(q: StreamingQuery, ckpt: str, timeout_s: int = 300) -> None:
+    """Wait for an AvailableNow query to drain its bounded source.
+
+    A query still running after ``timeout_s`` has delivered only part of
+    its input, so it is stopped and ``TimeoutError`` raised rather than
+    letting the caller read a partial sink. A finished query's
+    checkpoint dir ``ckpt`` is removed at once instead of at process
+    exit; sink and source dirs keep their exit-time cleanup, because the
+    frames returned to callers read them lazily."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not finish within {timeout_s} s"
+        )
+    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_to_batch(
@@ -42,7 +62,7 @@ def run_to_batch(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    finish_available_now(q, ckpt, timeout_s)
     return spark.table(name)
 
 

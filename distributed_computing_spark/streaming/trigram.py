@@ -33,6 +33,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from distributed_computing_spark.functions.frames import frame_maker
+
+
 TRI_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -53,6 +56,7 @@ def trigram_stream(events: DataFrame) -> DataFrame:
     user_id, event_type, us (epoch microseconds), event_id. State per
     key is two strings — bounded by the key domain for an unbounded
     stream."""
+    build = frame_maker(TRI_SCHEMA)
 
     def fold(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -70,17 +74,7 @@ def trigram_stream(events: DataFrame) -> DataFrame:
             p1, p2 = p2, t
         state.update((p1, p2))
         if o1:
-            # dtype pins (CLAUDE.md r11) — guarded non-empty anyway
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.Series(
-                        [int(key[0])] * len(o1), dtype="int64"
-                    ),
-                    "t1": pd.Series(o1, dtype=object),
-                    "t2": pd.Series(o2, dtype=object),
-                    "t3": pd.Series(o3, dtype=object),
-                }
-            )
+            yield build([int(key[0])] * len(o1), o1, o2, o3)
 
     return events.groupBy("user_id").applyInPandasWithState(
         fold,

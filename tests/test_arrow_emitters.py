@@ -9,9 +9,9 @@ sf0.01 gate never produces those shapes, so the class is invisible to
 it by construction (winnow passed the full gate, failed on a synthetic
 all-short-docs table).
 
-VERDICT r11 item 2: every emitter must pin its output dtypes
-(``pd.Series(xs, dtype=...)``) and this sweep drives each one with the
-adversarial shapes — inputs spread over more partitions than rows
+VERDICT r11 item 2: every emitter builds its output frame through
+``functions.frames`` (each column pinned to the declared schema) and
+this sweep drives each one with the adversarial shapes — inputs spread over more partitions than rows
 (empty partitions) AND content shaped so a NON-empty batch produces
 zero output rows — then materializes the result. Each case returns a
 DataFrame; the test is that ``collect()`` does not throw and the
@@ -177,6 +177,157 @@ def _case_winnow_all_short(spark, tmp_path):
     return winnow_docs(docs)
 
 
+def _case_token_counts_all_empty(spark, tmp_path):
+    from distributed_computing_spark.operators.mapreduce import (
+        fused_token_counts,
+    )
+
+    return fused_token_counts(_docs(spark, ["", "!!", "", "?"]))
+
+
+def _case_doc_cooccurrence_zero_tokens(spark, tmp_path):
+    # every doc is skipped -> each batch emits only the (NULL, NULL, 0)
+    # doc-count sentinel
+    from distributed_computing_spark.operators.textstats import (
+        doc_cooccurrence,
+    )
+
+    d = _write_docs_dir(spark, str(tmp_path / "sf"), ["", "!!", "", "??"])
+    return doc_cooccurrence(spark, d)
+
+
+def _case_vocab_growth_zero_tokens(spark, tmp_path):
+    # every row carries an EMPTY distinct-token array
+    from distributed_computing_spark.operators.textstats import vocab_growth
+
+    d = _write_docs_dir(spark, str(tmp_path / "sf"), ["", "!!", "", "??"])
+    return vocab_growth(spark, d, n_checkpoints=4)
+
+
+def _case_decontaminate_all_short(spark, tmp_path):
+    # no corpus doc reaches n tokens -> zero probe rows
+    from distributed_computing_spark.operators.dedup import (
+        fused_decontaminate,
+    )
+
+    corpus = _docs(spark, ["a", "", "b c"])
+    bench = _docs(spark, ["x y z w"], n_parts=2)
+    return fused_decontaminate(corpus, bench, n=3)
+
+
+def _case_blocklist_no_hits(spark, tmp_path):
+    from distributed_computing_spark.operators.dedup import blocklist_matches
+
+    docs = _docs(spark, ["alpha beta", "", "gamma"])
+    return blocklist_matches(docs, ["never seen"])
+
+
+def _case_footer_profile_zero_row_groups(spark, tmp_path):
+    # footer-only files: every path yields zero (row_group, column) rows
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from distributed_computing_spark.operators.layout import (
+        parquet_footer_profile,
+    )
+
+    paths = [str(tmp_path / f"empty{i}.parquet") for i in range(2)]
+    for p in paths:
+        pq.ParquetWriter(p, pa.schema([("a", pa.int64())])).close()
+    return parquet_footer_profile(spark, paths)
+
+
+def _case_kmeans_gemm_sparse_partitions(spark, tmp_path):
+    # both GEMM passes see empty batches; partial_sums emits a zero-row
+    # frame for every partition without vectors
+    from distributed_computing_spark.operators.similarity import (
+        kmeans_quantized,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [0.1 * i, 0.5, -0.2]) for i in range(4)],
+        "vec_id long, embedding array<float>",
+    ).repartition(8)
+    assigned, _ = kmeans_quantized(emb, k=2, n_iter=2, force_gemm=True)
+    return assigned
+
+
+def _case_dedup_savings_all_tokenless(spark, tmp_path):
+    # no doc has a token -> the prefix-hash column is all None
+    from distributed_computing_spark.registry import dedup_savings_report
+
+    d = _write_docs_dir(spark, str(tmp_path / "sf"), ["", "!!", "", "??"])
+    return dedup_savings_report(spark, d)
+
+
+def _case_length_quantiles_zero_tokens(spark, tmp_path):
+    from distributed_computing_spark.registry import source_length_quantiles
+
+    d = _write_docs_dir(spark, str(tmp_path / "sf"), ["", "!!", "", "??"])
+    return source_length_quantiles(spark, d)
+
+
+def _run_stream(spark, op, df, output_mode="append"):
+    from distributed_computing_spark.streaming.runner import (
+        run_to_batch,
+        stream_table,
+    )
+
+    return run_to_batch(
+        op(stream_table(spark, df.repartition(8))), spark, output_mode
+    )
+
+
+def _events(spark, rows):
+    return spark.createDataFrame(
+        rows, "user_id long, event_type string, us long, event_id long"
+    )
+
+
+def _case_gap_stream_single_events(spark, tmp_path):
+    # one event per (user, type) -> no gaps, zero output rows
+    from distributed_computing_spark.streaming.interarrival import gap_stream
+
+    ev = _events(spark, [(u, "click", 10 * u, u) for u in range(3)])
+    return _run_stream(spark, gap_stream, ev)
+
+
+def _case_burst_stream_under_threshold(spark, tmp_path):
+    from distributed_computing_spark.streaming.burst import (
+        burst_alert_stream,
+    )
+
+    ev = spark.createDataFrame(
+        [(u, 100 * u) for u in range(3)], "user_id long, t long"
+    )
+    return _run_stream(spark, burst_alert_stream, ev)
+
+
+def _case_trigram_stream_short_paths(spark, tmp_path):
+    # two events per user never complete a (t1, t2, t3) path
+    from distributed_computing_spark.streaming.trigram import trigram_stream
+
+    ev = _events(
+        spark, [(u, t, i, 2 * u + i) for u in range(2) for i, t in
+                enumerate(["view", "click"])]
+    )
+    return _run_stream(spark, trigram_stream, ev)
+
+
+def _case_kv_fold_sparse_partitions(spark, tmp_path):
+    # two keys over eight state partitions
+    from distributed_computing_spark.streaming.kv_stream import (
+        OPS_SCHEMA,
+        stateful_fold_stream,
+    )
+
+    ops = spark.createDataFrame(
+        [(1, 1, 1, "put", "a", "x"), (2, 1, 2, "append", "b", "y")],
+        OPS_SCHEMA,
+    )
+    return _run_stream(spark, stateful_fold_stream, ops, "update")
+
+
 # multimodal generator -> decoder pairs: two docs over eight partitions,
 # so most Arrow batches of both stages are empty
 _MULTIMODAL_PAIRS = {
@@ -224,6 +375,19 @@ _CASES = {
     "chunk_docs_all_empty": _case_chunk_docs_all_empty,
     "fused_repetition_all_empty": _case_fused_repetition_all_empty,
     "winnow_all_short": _case_winnow_all_short,
+    "token_counts_all_empty": _case_token_counts_all_empty,
+    "doc_cooccurrence_zero_tokens": _case_doc_cooccurrence_zero_tokens,
+    "vocab_growth_zero_tokens": _case_vocab_growth_zero_tokens,
+    "decontaminate_all_short": _case_decontaminate_all_short,
+    "blocklist_no_hits": _case_blocklist_no_hits,
+    "footer_profile_zero_row_groups": _case_footer_profile_zero_row_groups,
+    "kmeans_gemm_sparse_partitions": _case_kmeans_gemm_sparse_partitions,
+    "dedup_savings_all_tokenless": _case_dedup_savings_all_tokenless,
+    "length_quantiles_zero_tokens": _case_length_quantiles_zero_tokens,
+    "gap_stream_single_events": _case_gap_stream_single_events,
+    "burst_stream_under_threshold": _case_burst_stream_under_threshold,
+    "trigram_stream_short_paths": _case_trigram_stream_short_paths,
+    "kv_fold_sparse_partitions": _case_kv_fold_sparse_partitions,
 }
 
 
@@ -242,6 +406,9 @@ def test_arrow_emitter_survives_empty_and_zero_output_shapes(
             "map_reduce_none_reducef",
             "cosine_gemm_sparse_partitions",
             "extract_features_sparse_partitions",
+            "kmeans_gemm_sparse_partitions",
+            "dedup_savings_all_tokenless",
+            "kv_fold_sparse_partitions",
         ):
             assert rows  # these shapes still produce output rows
     finally:
@@ -249,53 +416,64 @@ def test_arrow_emitter_survives_empty_and_zero_output_shapes(
 
 
 def test_multimodal_frame_maker_pins_every_column_on_an_empty_batch(spark):
-    """An empty batch through ``_map_rows``' frame maker keeps the
-    declared dtypes (bare lists would all infer object or float64)."""
+    """An empty batch through the frame maker keeps the declared dtypes
+    (bare lists would all infer object or float64)."""
     from pyspark.sql.types import DataType
 
-    from distributed_computing_spark.operators.multimodal import _frame_maker
+    from distributed_computing_spark.functions.frames import frame_maker
 
     schema = DataType.fromDDL("a long, b int, c double, d float, e binary, f array<float>")
-    empty = _frame_maker(schema)([])
+    empty = frame_maker(schema)()
     assert list(empty.columns) == list("abcdef")
     assert [str(t) for t in empty.dtypes] == [
         "int64", "int32", "float64", "float32", "object", "object"
     ]
 
 
-def test_no_unpinned_bare_list_frames_in_named_sites():
-    """The nine VERDICT-r11-named emitter sites must build every
-    Python-list column as an explicitly-typed pd.Series/pd.array —
-    regression-grep the fixed files for the named functions' yield
-    blocks having at least one dtype pin. In the multimodal module the
-    only ``mapInPandas`` sites are ``_map_rows`` and the PNG batch
-    body, both building frames with the schema-pinned frame maker."""
+@pytest.mark.parametrize(
+    "ddl, values",
+    [("n long", [1, None]), ("n int", [2**31]), ("n long", [2**63])],
+)
+def test_frame_maker_names_the_column_a_value_does_not_fit(spark, ddl, values):
+    from distributed_computing_spark.functions.frames import frame_maker
+
+    with pytest.raises(ValueError, match="column 'n'"):
+        frame_maker(f"s string, {ddl}")(["a"] * len(values), values)
+
+
+def test_frame_maker_passes_numpy_columns_through(spark):
+    import numpy as np
+
+    from distributed_computing_spark.functions.frames import frame_maker
+
+    ids = np.arange(3, dtype="int64")
+    frame = frame_maker("a long, b double")(ids, np.ones(3))
+    assert np.shares_memory(frame["a"].to_numpy(), ids)
+    assert [str(t) for t in frame.dtypes] == ["int64", "float64"]
+
+
+def test_only_the_frames_module_builds_output_frames():
+    """Every Arrow emitter in the package builds its output frame
+    through ``functions/frames.py``. The multimodal operators map rows
+    through ``frames.map_rows``; only the PNG batch body calls
+    ``mapInPandas`` itself."""
     import re
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "distributed_computing_spark"
-    for rel, fn in [
-        ("operators/textstats.py", "count_grams"),
-        ("operators/analytics.py", "count_pairs"),
-        ("operators/mapreduce.py", "flat_map"),
-        ("operators/mapreduce.py", "reduce_group"),
-        ("streaming/kv_stream.py", "def fold"),
-        ("streaming/burst.py", "def alert"),
-    ]:
-        src = (pkg / rel).read_text()
-        i = src.find(fn)
-        assert i != -1, (rel, fn)
-        block = src[i : i + 4000]
-        assert re.search(r"pd\.(Series|array)\([^)]*dtype=", block), (
-            rel,
-            fn,
-        )
-    # the multimodal emitters build frames only through _map_rows'
-    # schema-pinned frame maker; decode_images_png's batch body reuses it
-    src = (pkg / "operators/multimodal.py").read_text()
-    owners = sorted(
-        re.findall(r"\ndef (\w+)", src[: m.start()])[-1]
-        for m in re.finditer(r"\.mapInPandas\(", src)
+    builders = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "pd.DataFrame(" in p.read_text()
     )
-    assert owners == ["_map_rows", "decode_images_png"], owners
-    assert "build(rows)" in src[src.index("def decode_images_png") :]
+    assert builders == ["functions/frames.py"], builders
+
+    def owners(rel):
+        src = (pkg / rel).read_text()
+        return sorted(
+            re.findall(r"\ndef (\w+)", src[: m.start()])[-1]
+            for m in re.finditer(r"\.mapInPandas\(", src)
+        )
+
+    assert owners("functions/frames.py") == ["map_rows"]
+    assert owners("operators/multimodal.py") == ["decode_images_png"]

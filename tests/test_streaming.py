@@ -971,3 +971,45 @@ def test_interarrival_gaps_span_batches(spark, tmp_path):
         [("click", 10), ("click", 990), ("click", 990),
          ("click", 0), ("click", 100)]
     )
+
+
+@pytest.mark.slow
+def test_finish_available_now_stops_and_raises_on_timeout(spark, tmp_path):
+    """A query still running at the deadline is stopped and raises,
+    instead of leaving the caller to read a partial sink."""
+    from distributed_computing_spark.streaming.runner import (
+        finish_available_now,
+    )
+
+    ckpt = str(tmp_path / "ckpt")
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(processingTime="1 second")
+        .start()
+    )
+    try:
+        with pytest.raises(TimeoutError, match="did not finish within 1 s"):
+            finish_available_now(q, ckpt, timeout_s=1)
+        assert not q.isActive
+        assert os.path.isdir(ckpt)  # kept for diagnosis
+    finally:
+        q.stop()
+
+
+@pytest.mark.slow
+def test_streaming_registry_query_leaves_no_checkpoint_dirs(spark, sf_dir):
+    """Each AvailableNow run removes its checkpoint dirs when its query
+    ends, so a long-lived process does not collect two per pass."""
+    import glob
+    import tempfile
+
+    from distributed_computing_spark.registry import QUERIES
+
+    pattern = os.path.join(tempfile.gettempdir(), "dcs_ckpt_*")
+    before = set(glob.glob(pattern))
+    for _ in range(2):
+        rows = QUERIES["stream_kv_stateful"](spark, sf_dir).collect()
+        assert rows
+    assert set(glob.glob(pattern)) - before == set()
